@@ -1,13 +1,13 @@
 package graft.load
 
-import java.util.concurrent.Executors
-
+import scala.concurrent.Await
 import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
+import graft.core.Bounded
 
 /** Multi-format bulk table loads (SURVEY §2.2 K1; reference
   * `hive_bq_load_utils.py:176-247,308-417`).
@@ -128,12 +128,6 @@ object TableLoader {
   def loadAll(
       spark: SparkSession,
       specs: Seq[LoadSpec],
-      parallelism: Int = 10): Seq[LoadOutcome] = {
-    if (specs.isEmpty) return Nil
-    val pool = Executors.newFixedThreadPool(math.max(1, math.min(parallelism, specs.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(specs.map(s => Future(load(spark, s)))), Duration.Inf)
-    finally pool.shutdown()
-  }
+      parallelism: Int = 10): Seq[LoadOutcome] =
+    Await.result(Bounded.map(specs, parallelism)(load(spark, _)), Duration.Inf)
 }

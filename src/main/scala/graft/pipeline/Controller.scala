@@ -2,14 +2,17 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Audit, AuditSink}
+import graft.core.{Audit, AuditSink, Bounded}
 import graft.load.TableLoader
 import graft.schema.DdlRunner
 import graft.translate.{NameMapping, StatementSplitter, TranslationEngine}
-import graft.validate.ColumnValidator
+import graft.validate.{ColumnValidator, SchemaValidator}
 
 /** The run controller: config → route → stage graph → audit + report
   * (SURVEY §3; reference `controller_dag.py:87-241` + the per-phase
@@ -237,7 +240,10 @@ object Controller {
       }
 
   /** DVT stage: run each validation, audit per-row results, aggregate
-    * pass/fail counts (A1 semantics).
+    * pass/fail counts (A1 semantics). Validations run at most
+    * `batchDistribution` at a time, like loads and DDL rounds (the
+    * reference maps DVT tasks over its pods); results and audit rows
+    * keep config order, and the audit write follows on this thread.
     *
     * Each validation is fault-isolated: a broken spec (missing source
     * table, malformed SQL, unresolvable column) becomes a Failed
@@ -247,72 +253,57 @@ object Controller {
     * (`reporting_operator.py:104-127`). */
   def runValidations(spark: SparkSession, cfg: GraftConfig, audit: AuditSink): Seq[RunResult] = {
     if (cfg.validations.isEmpty) return Nil
-    val outcomes = cfg.validations.map { v =>
+    val results = Await.result(Bounded.map(cfg.validations, cfg.batchDistribution) { v =>
+      val phase = s"dvt_${v.kind}:${v.targetTable}"
+      val passCounts = (result: DataFrame) => {
+        val c = result.agg(count(lit(1)), count(when(col("validation_status") === "pass" ||
+          col("validation_status") === "match", 1))).head()
+        (c.getLong(0), c.getLong(1))
+      }
       scala.util.Try {
         lazy val src = spark.table(v.sourceTable)
         lazy val tgt = spark.table(v.targetTable)
-        val result = v.kind match {
-          case "custom" =>
-            graft.validate.CustomQueryValidator.validate(
-              spark, v.sourceSql, v.targetSql, v.pctThreshold)
+        v.kind match {
+          case "custom" => passCounts(graft.validate.CustomQueryValidator.validate(
+            spark, v.sourceSql, v.targetSql, v.pctThreshold))
           case "column" =>
             require(v.aggSpecs.nonEmpty,
               s"no aggregations for ${v.sourceTable} — check sheet columns " +
                 "11-15 (count/sum/min/max/avg)")
-            ColumnValidator.validate(src, tgt, v.aggSpecs, v.groupBy, v.pctThreshold)
+            passCounts(ColumnValidator.validate(src, tgt, v.aggSpecs, v.groupBy, v.pctThreshold))
           case "row" =>
             // hash='*' sheets leave compareCols empty: all non-key columns
             val cmp = if (v.compareCols.nonEmpty) v.compareCols
               else src.columns.toSeq.filterNot(v.primaryKeys.contains)
-            graft.validate.RowValidator.validate(src, tgt, v.primaryKeys, cmp)
-              .withColumn("validation_status",
-                when(col("validation_status") === "match", "pass").otherwise("fail"))
-          case "schema" =>
-            graft.validate.SchemaValidator.validate(spark, src, tgt)
-              .withColumn("validation_status",
-                when(col("validation_status") === "pass", "pass").otherwise("fail"))
+            passCounts(graft.validate.RowValidator.validate(src, tgt, v.primaryKeys, cmp))
+          case "schema" => // schemas are driver-side metadata: no Spark job
+            val checks = SchemaValidator.compare(src.schema, tgt.schema)
+            (checks.size.toLong, checks.count(_.validation_status == "pass").toLong)
           case other => throw new IllegalArgumentException(s"unknown validation: $other")
         }
-        val counts = result.groupBy()
-          .agg(count(lit(1)).as("total"),
-            count(when(col("validation_status") === "pass" ||
-              col("validation_status") === "match", 1)).as("passed"))
-          .head()
-        (counts.getAs[Long]("total"), counts.getAs[Long]("passed"))
       } match {
-        case scala.util.Success((total, passed)) => (v, total, passed, None)
+        case scala.util.Success((total, passed)) =>
+          RunResult(cfg.uniqueId, phase, Audit.classify(total, passed),
+            Map("total" -> total.toString, "passed" -> passed.toString,
+              "failed" -> (total - passed).toString),
+            errors = if (passed == total) Nil else Seq(Audit.TaskError(phase,
+              s"${total - passed} of $total comparisons failed",
+              "dmt_logs.dmt_dvt_aggregated_results")))
         case scala.util.Failure(e) =>
-          (v, 0L, 0L, Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
+          // a validation whose spec THREW (vs. ran and compared) counts as
+          // one attempted, one failed — consumers summing the failed column
+          // see the broken validation instead of a zero-count Failed row
+          val err = Option(e.getMessage).getOrElse(e.getClass.getName)
+          RunResult(cfg.uniqueId, phase, "Failed",
+            Map("total" -> "1", "passed" -> "0", "failed" -> "1", "error" -> err),
+            errors = Seq(Audit.TaskError(phase, err, "dmt_logs.dmt_dvt_aggregated_results")))
       }
-    }
-    // a validation whose spec THREW (vs. ran and compared) counts as one
-    // attempted, one failed — consumers summing the failed column see the
-    // broken validation instead of a zero-count Failed row
-    audit.appendRows("dmt_dvt_aggregated_results", outcomes.map { case (v, total, passed, err) =>
-      if (err.isDefined)
-        Audit.ReportRow(cfg.uniqueId, s"dvt_${v.kind}:${v.targetTable}",
-          1L, 0L, 1L, "Failed", now())
-      else
-        Audit.ReportRow(cfg.uniqueId, s"dvt_${v.kind}:${v.targetTable}",
-          total, passed, total - passed, Audit.classify(total, passed), now())
+    }, Duration.Inf)
+    audit.appendRows("dmt_dvt_aggregated_results", results.map { r =>
+      def n(k: String) = r.details(k).toLong
+      Audit.ReportRow(cfg.uniqueId, r.phase, n("total"), n("passed"), n("failed"), r.status, now())
     })
-    outcomes.map {
-      case (v, _, _, Some(err)) =>
-        RunResult(cfg.uniqueId, s"dvt_${v.kind}:${v.targetTable}", "Failed",
-          Map("total" -> "1", "passed" -> "0", "failed" -> "1", "error" -> err),
-          errors = Seq(Audit.TaskError(
-            s"dvt_${v.kind}:${v.targetTable}", err,
-            "dmt_logs.dmt_dvt_aggregated_results")))
-      case (v, total, passed, None) =>
-        RunResult(cfg.uniqueId, s"dvt_${v.kind}:${v.targetTable}",
-          Audit.classify(total, passed),
-          Map("total" -> total.toString, "passed" -> passed.toString,
-            "failed" -> (total - passed).toString),
-          errors = if (passed == total) Nil else Seq(Audit.TaskError(
-            s"dvt_${v.kind}:${v.targetTable}",
-            s"${total - passed} of $total comparisons failed",
-            "dmt_logs.dmt_dvt_aggregated_results")))
-    }
+    results
   }
 
   /** Final run report rows (ReportingOperator semantics): flat per-phase

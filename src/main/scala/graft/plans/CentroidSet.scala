@@ -33,7 +33,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   *     ties break to the LOWEST centroid id;
   *   - a null input vector/norm is handled at the call site
   *     (coalesce to the lowest centroid id — what max(struct(null,
-  *     -cent_id)) produced).
+  *     -cent_id)) produced);
+  *   - a zero divisor (n * cn_j == 0, e.g. a zero-norm row, or a norm
+  *     product that underflows) under a non-null dot product raises
+  *     Spark's ANSI `DIVIDE_BY_ZERO`, as the ANSI `Divide` of the old
+  *     shape did. A row whose cosines would all be NaN is a broken
+  *     embedding, never silently assigned. The error is raised whatever
+  *     `spark.sql.ansi.enabled` says.
   * One documented divergence: the old groupBy(id, v, n) collapsed
   * EXACTLY-duplicate (id, v, n) rows into one assignment row; the
   * map-side form preserves input multiplicity. Every caller feeds
@@ -54,8 +60,8 @@ final class CentroidSet private (
   def dim: Option[Int] = cvs.collectFirst { case cv if cv != null => cv.length }
 
   /** Nearest centroid id of (v, n) — see the class doc for the exact
-    * ordering contract. Assumes non-empty; `v`/`n` non-null (the null
-    * face is the call-site coalesce). */
+    * ordering and zero-divisor contract. Assumes non-empty; `v`/`n`
+    * non-null (the null face is the call-site coalesce). */
   def assign(v: ArrayData, n: Double): Long = {
     var bestIdx = 0
     var bestNull = true
@@ -76,7 +82,11 @@ final class CentroidSet private (
             if (v.isNullAt(i)) cosNull = true
             else { s += v.getDouble(i) * cv(i); i += 1 }
           }
-          if (!cosNull) cos = s / (n * cns(j))
+          if (!cosNull) {
+            val d = n * cns(j)
+            if (d == 0.0) throw ExprBridge.divideByZero()
+            cos = s / d
+          }
         }
       }
       if (j == 0) { bestNull = cosNull; bestCos = cos }

@@ -1,11 +1,11 @@
 package graft.schema
 
-import java.util.concurrent.Executors
-
+import scala.concurrent.Await
 import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.spark.sql.SparkSession
+
+import graft.core.Bounded
 
 /** Parallel DDL execution with the reference's retry state machine
   * (SURVEY §3.1 step 5; `bigquery_client_utils/ddl.py:59-153`,
@@ -51,35 +51,25 @@ object DdlRunner {
       scripts: Seq[(String, String)],
       parallelism: Int = 10,
       maxRounds: Int = 3): Seq[ScriptResult] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, math.min(parallelism, scripts.size max 1)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      var pending = scripts.map { case (n, s) => ScriptResult(n, s, Retry, 0, None) }
-      var done = Vector.empty[ScriptResult]
-      var round = 0
-      while (pending.nonEmpty && round < maxRounds) {
-        round += 1
-        val results = Await.result(
-          Future.sequence(pending.map { sr =>
-            Future {
-              try { spark.sql(sr.statement); sr.copy(state = Done, attempts = sr.attempts + 1, error = None) }
-              catch {
-                case e: Throwable =>
-                  val (st, msg) = classify(e)
-                  sr.copy(state = st, attempts = sr.attempts + 1, error = msg)
-              }
-            }
-          }), Duration.Inf)
-        val (retry, settled) = results.partition(_.state == Retry)
-        done ++= settled
-        // no progress this round -> stop retrying (fixpoint)
-        pending = if (settled.isEmpty && retry.size == pending.size && round > 1) {
-          done ++= retry.map(_.copy(state = Failed)); Nil
-        } else retry
-      }
-      done ++= pending.map(_.copy(state = Failed)) // rounds exhausted
-      done
-    } finally pool.shutdown()
+    var pending = scripts.map { case (n, s) => ScriptResult(n, s, Retry, 0, None) }
+    var done = Vector.empty[ScriptResult]
+    var round = 0
+    while (pending.nonEmpty && round < maxRounds) {
+      round += 1
+      val results = Await.result(Bounded.map(pending, parallelism) { sr =>
+        val (st, msg) =
+          try { spark.sql(sr.statement); (Done, None) } catch { case e: Throwable => classify(e) }
+        sr.copy(state = st, attempts = sr.attempts + 1, error = msg)
+      }, Duration.Inf)
+      val (retry, settled) = results.partition(_.state == Retry)
+      done ++= settled
+      // no progress this round -> stop retrying (fixpoint)
+      pending = if (settled.isEmpty && retry.size == pending.size && round > 1) {
+        done ++= retry.map(_.copy(state = Failed)); Nil
+      } else retry
+    }
+    done ++= pending.map(_.copy(state = Failed)) // rounds exhausted
+    done
   }
 
   /** Create target databases up front (reference `schema_dag.py:82-99`

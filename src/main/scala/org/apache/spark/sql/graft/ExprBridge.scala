@@ -12,6 +12,11 @@ object ExprBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's ANSI `DIVIDE_BY_ZERO` error, for native expressions that
+    * divide the way `Divide` does. */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Apply an extensions object's function injections to an existing
     * registry (normally done by the session builder; exposed so tests
     * and late-bound sessions can install them too). */

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * be VALUE-IDENTICAL to the join/aggregate shape it replaced:
   * `crossJoin(broadcast(cents)).groupBy(id, v, n)
   *   .agg(max(struct(cos, -cent_id)))`.
-  * These tests drive both shapes over adversarial inputs — ties, NaN
-  * cosines (zero-norm rows), null elements, length mismatches — and
-  * require identical assignments row for row.
+  * These tests drive both shapes over adversarial inputs — ties,
+  * null elements, length mismatches — and require identical
+  * assignments row for row. Zero-norm rows (all-NaN cosines) must make
+  * BOTH shapes raise the ANSI `DIVIDE_BY_ZERO` error.
   */
 class NearestCentroidSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "nearest-centroid-test")
@@ -30,42 +31,47 @@ class NearestCentroidSpec extends AnyFunSuite {
     df.select(col("id"), col("v").cast("array<double>").as("v"))
       .withColumn("n", sqrt(Similarity.dot(col("v"), col("v"))))
 
-  private def assignments(corpus: DataFrame, centIds: Seq[Long]): (Map[Long, Long], Map[Long, Long]) = {
-    val c = prep(corpus)
-    val cents = c.filter(col("id").isin(centIds: _*))
+  private def centroids(c: DataFrame, centIds: Seq[Long]): DataFrame =
+    c.filter(col("id").isin(centIds: _*))
       .select(col("id").as("cent_id"), col("v").as("cent_v"), col("n").as("cent_n"))
-    val old = assignOld(c, cents).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the public path routes through the collected map-side expression
-    val mod = 1000000L // isolate: use ivfAssign only where mod-rule fits; here compare directly
-    val (set, idType) = {
-      // mirror Similarity.collectCentroids through the public ivfAssign
-      // is not possible for arbitrary cent ids; build the set directly
-      val rows = cents.select(col("cent_id").cast("long"),
-        col("cent_v"), col("cent_n")).collect()
-      val triples = rows.toSeq.map { r =>
-        val cv = if (r.isNullAt(1)) None else {
-          val s = r.getSeq[Any](1)
-          if (s.contains(null)) None else Some(s.map(_.asInstanceOf[Double]).toArray)
-        }
-        (r.getLong(0), cv, if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+
+  private def collected(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def oldShape(corpus: DataFrame, centIds: Seq[Long]): Map[Long, Long] = {
+    val c = prep(corpus)
+    collected(assignOld(c, centroids(c, centIds)))
+  }
+
+  /** The map-side form over a set built directly from the centroid rows
+    * (the public ivfAssign cannot take arbitrary centroid ids). */
+  private def newShape(corpus: DataFrame, centIds: Seq[Long]): Map[Long, Long] = {
+    val c = prep(corpus)
+    val rows = centroids(c, centIds).select(col("cent_id").cast("long"),
+      col("cent_v"), col("cent_n")).collect()
+    val set = graft.plans.CentroidSet(rows.toSeq.map { r =>
+      val cv = if (r.isNullAt(1)) None else {
+        val s = r.getSeq[Any](1)
+        if (s.contains(null)) None else Some(s.map(_.asInstanceOf[Double]).toArray)
       }
-      (graft.plans.CentroidSet(triples), org.apache.spark.sql.types.LongType)
-    }
-    val neu = c.withColumn("list_id",
-        coalesce(graft.plans.NearestCentroid(col("v"), col("n"), set),
-          lit(set.minId)).cast(idType))
-      .select(col("id"), col("list_id")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (old, neu)
+      (r.getLong(0), cv, if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+    })
+    collected(c.select(col("id"),
+      coalesce(graft.plans.NearestCentroid(col("v"), col("n"), set), lit(set.minId))))
   }
 
   private def check(corpus: DataFrame, centIds: Seq[Long]): Unit = {
-    val (old, neu) = assignments(corpus, centIds)
+    val (old, neu) = (oldShape(corpus, centIds), newShape(corpus, centIds))
     assert(old.keySet == neu.keySet, s"row sets differ: $old vs $neu")
     old.keySet.foreach { id =>
       assert(old(id) == neu(id), s"id $id: old=${old(id)} new=${neu(id)}")
     }
+  }
+
+  private def raisesDivideByZero(body: => Any): Boolean = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO"))
   }
 
   test("plain corpus: identical assignments, including exact cosine ties") {
@@ -81,16 +87,21 @@ class NearestCentroidSpec extends AnyFunSuite {
     check(corpus, Seq(0L, 1L))
   }
 
-  test("zero-norm rows (all-NaN cosines) and zero-norm-adjacent values agree") {
+  test("zero-norm rows (all-NaN cosines) raise DIVIDE_BY_ZERO in both shapes") {
     import spark.implicits._
-    val corpus = Seq(
-      (0L, Array(1.0, 0.0)),
-      (7L, Array(0.0, 1.0)),
+    val cents = Seq((0L, Array(1.0, 0.0)), (7L, Array(0.0, 1.0)))
+    Seq(
       (2L, Array(0.0, 0.0)),        // zero norm → NaN cosine everywhere
-      (3L, Array(1e-300, 0.0)),     // denormal-ish norm
+      (3L, Array(1e-300, 0.0)),     // denormal-ish: its norm underflows to 0
       (4L, Array(-0.0, 0.0))        // negative zero vector
-    ).toDF("id", "v")
-    check(corpus, Seq(0L, 7L))
+    ).foreach { row =>
+      val corpus = (cents :+ row).toDF("id", "v")
+      assert(raisesDivideByZero(oldShape(corpus, Seq(0L, 7L))), s"old shape, id ${row._1}")
+      assert(raisesDivideByZero(newShape(corpus, Seq(0L, 7L))), s"new shape, id ${row._1}")
+    }
+    // zero-norm-adjacent values with a nonzero divisor still agree
+    check((cents :+ ((5L, Array(1e-150, 0.0))) :+ ((6L, Array(1e-160, 1e-160))))
+      .toDF("id", "v"), Seq(0L, 7L))
   }
 
   test("null elements and length mismatches (null cosines) agree") {

@@ -266,6 +266,104 @@ class PipelineSpec extends AnyFunSuite {
       agg.mkString("\n"))
   }
 
+  /** Tables for the concurrent-validation cases: nation with one seeded
+    * name mismatch, nation with an extra column, region twice. */
+  private lazy val whpTables: Unit = {
+    spark.sql("CREATE DATABASE IF NOT EXISTS whp")
+    val nation = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
+    val region = spark.read.parquet("/root/testdata/sf0.001/region.parquet")
+    nation.write.mode(SaveMode.Overwrite).saveAsTable("whp.nation_src")
+    nation.withColumn("n_name", when(col("n_nationkey") === 3, lit("perturbed"))
+        .otherwise(col("n_name")))
+      .write.mode(SaveMode.Overwrite).saveAsTable("whp.nation_tgt")
+    nation.withColumn("n_extra", lit(1))
+      .write.mode(SaveMode.Overwrite).saveAsTable("whp.nation_wide")
+    region.write.mode(SaveMode.Overwrite).saveAsTable("whp.region_src")
+    region.write.mode(SaveMode.Overwrite).saveAsTable("whp.region_tgt")
+  }
+
+  /** (phase, total, succeeded, failed, status) of a run's aggregated DVT
+    * rows, in the order they were written: one append writes its rows
+    * in partition order into files named by partition index. */
+  private def dvtRows(uniqueId: String): Seq[(String, Long, Long, Long, String)] =
+    audit.read("dmt_dvt_aggregated_results")
+      .filter(col("unique_id") === uniqueId)
+      .orderBy(input_file_name(), monotonically_increasing_id())
+      .collect().toSeq.map(r => (r.getAs[String]("phase"), r.getAs[Long]("total"),
+        r.getAs[Long]("succeeded"), r.getAs[Long]("failed"), r.getAs[String]("status")))
+
+  test("Controller: concurrent validations match a serial run, in config order") {
+    whpTables
+    val specs = Seq(
+      Controller.ValidationSpec(kind = "column", sourceTable = "whp.nation_src",
+        targetTable = "whp.nation_tgt",
+        aggSpecs = Seq(AggSpec("count", "n_nationkey"), AggSpec("sum", "n_regionkey"))),
+      Controller.ValidationSpec(kind = "row", sourceTable = "whp.nation_src",
+        targetTable = "whp.nation_tgt", primaryKeys = Seq("n_nationkey"),
+        compareCols = Seq("n_name", "n_regionkey")),
+      Controller.ValidationSpec(kind = "schema", sourceTable = "whp.region_src",
+        targetTable = "whp.region_tgt"),
+      Controller.ValidationSpec(kind = "column", sourceTable = "whp.no_such_table",
+        targetTable = "whp.region_tgt", aggSpecs = Seq(AggSpec("count", "r_regionkey"))),
+      Controller.ValidationSpec(kind = "schema", sourceTable = "whp.nation_src",
+        targetTable = "whp.nation_wide"),
+      Controller.ValidationSpec(kind = "row", sourceTable = "whp.region_src",
+        targetTable = "whp.region_tgt", primaryKeys = Seq("r_regionkey")),
+      Controller.ValidationSpec(kind = "column", sourceTable = "whp.nation_src",
+        targetTable = "whp.nation_wide", groupBy = Seq("n_regionkey"),
+        aggSpecs = Seq(AggSpec("count", "n_nationkey"))))
+    def run(n: Int) = Controller.runValidations(spark, Controller.GraftConfig(
+      kind = "data", source = "hive", uniqueId = s"run-vconc-$n",
+      validations = specs, batchDistribution = n), audit).map(_.copy(uniqueId = ""))
+    val serial = run(1)
+    val concurrent = run(4)
+    assert(concurrent == serial)
+    val phases = specs.map(v => s"dvt_${v.kind}:${v.targetTable}")
+    assert(serial.map(_.phase) == phases)
+    assert(serial.map(_.status) == Seq("Success", "Partial", "Success", "Failed",
+      "Partial", "Success", "Success"), serial.mkString("\n"))
+    assert(serial(1).details("total") == "25" && serial(1).details("passed") == "24")
+    assert(serial(4).details("total") == "4" && serial(4).details("passed") == "3")
+    val rows = dvtRows("run-vconc-4")
+    assert(rows == dvtRows("run-vconc-1"))
+    assert(rows.map(_._1) == phases)
+    // the broken spec is exactly one attempted, one failed
+    assert(rows.filter(_._5 == "Failed") == Seq(
+      ("dvt_column:whp.region_tgt", 1L, 0L, 1L, "Failed")), rows.mkString("\n"))
+  }
+
+  test("Controller: a schema validation starts no Spark job") {
+    whpTables
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "sentinel"))
+          sentinel.countDown()
+        else sites.add(e.stageInfos.headOption.map(_.details).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val results = try {
+      val r = Controller.runValidations(spark, Controller.GraftConfig(
+        kind = "data", source = "hive", uniqueId = "run-vschema",
+        validations = Seq(Controller.ValidationSpec(kind = "schema",
+          sourceTable = "whp.nation_src", targetTable = "whp.nation_wide"))), audit)
+      // one listener queue delivers in order: once the sentinel job is
+      // seen, every job the validation started has been seen too
+      sc.setJobDescription("sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(results.map(r => (r.status, r.details("total"), r.details("passed"))) ==
+      Seq(("Partial", "4", "3")))
+    import scala.jdk.CollectionConverters._
+    // the audit append is the only Spark work
+    assert(sites.asScala.nonEmpty && sites.asScala.forall(_.contains("graft.core.AuditSink")),
+      sites.asScala.mkString("\n---\n"))
+  }
+
   test("Controller report rows carry real per-phase pass/fail counts") {
     val cfg = Controller.GraftConfig(
       kind = "ddl", source = "teradata", uniqueId = "run-counts",
