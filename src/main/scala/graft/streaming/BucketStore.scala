@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import java.nio.charset.StandardCharsets
@@ -26,7 +27,12 @@ import java.nio.charset.StandardCharsets
   *     EVERY live bucket: touched buckets point at this batch,
   *     untouched buckets inherit the previous manifest's pointer
   *     verbatim (the [[graft.operators.ShardManifest]] pointer-WAL
-  *     discipline applied to snapshots);
+  *     discipline applied to snapshots). A `#schema <json>` header
+  *     line carries the exact read schema of THIS batch's `data`
+  *     (resp. `keys`) slice, partition column included, so a read
+  *     hands each pointed batch directory its schema and starts no
+  *     schema-inference job; only batches written before the header
+  *     existed (no header line) fall back to inferring it;
   *   - `_SUCCESS` — the commit marker, written LAST.
   *
   * Bytes written per batch are therefore ∝ |delta| (touched-bucket
@@ -95,8 +101,10 @@ import java.nio.charset.StandardCharsets
   * enabled, [[BucketStore]] accumulates driver-observed nanos per
   * category — `manifest` (pointer-file reads/writes, marker I/O,
   * committed-id listings), `validate` (the per-side CDC refusal probe),
-  * `buckets` (the delta's touched-bucket collect), `write` (parquet
-  * data jobs, which also materialize the fold compute they carry).
+  * `buckets` (the delta guard job — row count, op/side refusal and
+  * touched-bucket set observed in one scan — and the other touched-bucket
+  * collects), `write` (parquet data jobs, which also materialize the
+  * fold compute they carry, in-plan guards included).
   * Off by default and free when off; measurement-only, never consulted
   * by the store logic. */
 object StoreTimers {
@@ -163,31 +171,47 @@ object BucketStore {
 
   // ---- manifests ---------------------------------------------------
 
-  private def writeManifest(fs: FileSystem, path: HPath,
-      entries: Map[Int, Long]): Unit = StoreTimers.timed("manifest") {
-    // deterministic bytes (sorted) so a redelivered batch overwrites
-    // identical content
-    val body = entries.toSeq.sorted
-      .map { case (b, id) => s"$b $id" }.mkString("", "\n", "\n")
-    val out = fs.create(path, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+  private val SchemaHeader = "#schema "
 
-  private def readManifestFile(fs: FileSystem, path: HPath): Map[Int, Long] = StoreTimers.timed("manifest") {
-    if (!fs.exists(path)) return Map.empty
-    val in = fs.open(path)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](8192)
-      Iterator.continually(in.read(tmp)).takeWhile(_ > 0)
-        .foreach(n => buf.write(tmp, 0, n))
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
+  private def writeManifest(fs: FileSystem, path: HPath,
+      entries: Map[Int, Long], schema: Option[StructType]): Unit =
+    StoreTimers.timed("manifest") {
+      // deterministic bytes (sorted) so a redelivered batch overwrites
+      // identical content
+      val body = (schema.map(SchemaHeader + _.json).toSeq ++
+        entries.toSeq.sorted.map { case (b, id) => s"$b $id" })
+        .mkString("", "\n", "\n")
+      val out = fs.create(path, true)
+      try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    }
+
+  private def manifestLines(fs: FileSystem, path: HPath): Seq[String] =
+    StoreTimers.timed("manifest") {
+      if (!fs.exists(path)) return Nil
+      val in = fs.open(path)
+      val body = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
+      body.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    }
+
+  private def readManifestFile(fs: FileSystem, path: HPath): Map[Int, Long] =
+    manifestLines(fs, path).filterNot(_.startsWith("#")).map { line =>
       val Array(b, id) = line.split(" ")
       b.toInt -> id.toLong
     }.toMap
-  }
+
+  /** The read schema a manifest's header records for its own batch's
+    * slice — None for a manifest written before the header existed. */
+  private def sliceSchema(fs: FileSystem, path: HPath): Option[StructType] =
+    manifestLines(fs, path).find(_.startsWith(SchemaHeader)).map(h =>
+      DataType.fromJson(h.stripPrefix(SchemaHeader)).asInstanceOf[StructType])
+
+  /** The schema a partitioned read of `rows` written by `bucketCol`
+    * infers: the file columns (nullable, as every file read is), then
+    * the int partition column. */
+  private def readSchemaOf(rows: DataFrame, bucketCol: String): StructType =
+    StructType(rows.schema.filterNot(_.name == bucketCol)
+      .map(_.copy(nullable = true)) :+ StructField(bucketCol, IntegerType))
 
   /** The bucket → batch-id pointer map of `family` as of batch `id`
     * (empty for `id = None` — the empty store). `kind` is "manifest"
@@ -211,6 +235,8 @@ object BucketStore {
       case None => manifest
     }
     if (wanted.isEmpty) return emptyLike(template, bucketCol)
+    val fs = fsOf(spark, dir)
+    val kind = if (sub == "data") "manifest" else "keys_manifest"
     // one pruned scan per distinct pointed batch directory — bounded by
     // storeBuckets, in practice a handful (hot buckets live in recent
     // batches, cold ones share old ones). The wanted buckets are read
@@ -218,11 +244,14 @@ object BucketStore {
     // which directories exist, so the driver never lists the batch
     // directory's full bucket fan-out (at thousands of buckets that
     // listing dominated a pruned read's cost — measured in the r15w
-    // IvmScale section's first cut)
+    // IvmScale section's first cut). Each scan takes its schema from
+    // the pointed batch's manifest header: no schema-inference job
     wanted.groupBy(_._2).toSeq.sortBy(_._1).map { case (pid, entries) =>
       val base = new HPath(batchDir(dir, family, pid), sub).toString
       val paths = entries.keys.toSeq.sorted.map(b => s"$base/$bucketCol=$b")
-      spark.read.option("basePath", base).parquet(paths: _*)
+      val reader = sliceSchema(fs, new HPath(batchDir(dir, family, pid), kind))
+        .fold(spark.read)(spark.read.schema)
+      reader.option("basePath", base).parquet(paths: _*)
     }.reduce(_ unionByName _)
   }
 
@@ -278,6 +307,36 @@ object BucketStore {
         .collect().map(_.getInt(0)).toSeq
     }
 
+  /** The streaming folds' delta guard — ONE Spark job over a change
+    * batch in place of an emptiness probe, an op/side probe and a
+    * bucket collect: a shuffle-free scan of the batch that observes
+    * its row count, its refused rows and its buckets as it goes.
+    * Returns None for an empty batch; otherwise raises `refusal` (an
+    * IllegalArgumentException, as `require` does) when any row's
+    * `checks` column is NULL or outside its allowed values, and returns
+    * the batch's distinct store buckets under `bucketKeys` (≤
+    * `storeBuckets` ints, ascending; empty when no keys are given). */
+  def guardBatch(batch: DataFrame, checks: Seq[(String, Seq[String])],
+      bucketKeys: Seq[String] = Nil, storeBuckets: Int = 0)(
+      refusal: => String): Option[Seq[Int]] = StoreTimers.timed("buckets") {
+    val outside = checks.map { case (c, allowed) =>
+      col(c).isNull || !col(c).isin(allowed: _*)
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    val buckets = Option.when(bucketKeys.nonEmpty)(
+      collect_set(bucketize(bucketKeys, storeBuckets)).as("buckets"))
+    val seen = new Observation()
+    batch.observe(seen, count(lit(1)).as("rows"),
+        count(when(outside, 1)).as("outside") +: buckets.toSeq: _*)
+      .write.format("noop").mode("overwrite").save()
+    val m = seen.get
+    // a batch with no partitions runs no task through the observing
+    // node, which then reports no value at all: an empty batch
+    Option.when(m.getOrElse("rows", 0L).asInstanceOf[Long] > 0L) {
+      require(m("outside").asInstanceOf[Long] == 0L, refusal)
+      m.get("buckets").fold(Seq.empty[Int])(_.asInstanceOf[Seq[Int]].sorted)
+    }
+  }
+
   // NOT underscore-prefixed: Spark's file index treats _-prefixed
   // paths as hidden metadata and would ignore the stub's files
   private def schemaStub(dir: String, family: String, sub: String) =
@@ -286,7 +345,7 @@ object BucketStore {
   private def writeSlice(spark: SparkSession, dir: String, family: String,
       batchId: Long, prevId: Option[Long], rows: DataFrame,
       touched: Seq[Int], sub: String, bucketCol: String,
-      manifestKind: String, maxLinks: Int): Unit = {
+      manifestKind: String, maxLinks: Int): Long = {
     val fs = fsOf(spark, dir)
     val bd = batchDir(dir, family, batchId)
     // REDELIVERY GUARD (r16): if this batch id was already committed
@@ -309,11 +368,18 @@ object BucketStore {
     val carried = prev -- touched
     val linksAfter =
       carried.values.toSet.size + (if (touched.nonEmpty) 1 else 0)
-    val (allRows, allTouched) =
-      if (linksAfter > maxLinks && carried.nonEmpty)
-        (rows.unionByName(readVia(spark, dir, family, carried, None, sub,
-          bucketCol, rows)), touched ++ carried.keys)
-      else (rows, touched)
+    val absorb = linksAfter > maxLinks && carried.nonEmpty
+    val allTouched = if (absorb) touched ++ carried.keys else touched
+    // the touched slice's row count rides on the write itself: an
+    // observation on `rows` only (not the stub, not absorbed buckets),
+    // attached only when the write runs — nothing waits on a metric
+    // that no job will ever deliver
+    val observed = if (allTouched.isEmpty) None else Some(new Observation())
+    val counted = observed.fold(rows)(o => rows.observe(o, count(lit(1)).as("n")))
+    val allRows =
+      if (absorb) counted.unionByName(readVia(spark, dir, family, carried,
+        None, sub, bucketCol, rows))
+      else counted
     val dataPath = new HPath(bd, sub)
     if (allTouched.nonEmpty) StoreTimers.timed("write") {
       allRows.repartition(col(bucketCol))
@@ -330,17 +396,24 @@ object BucketStore {
         .map(_.getPath.getName.stripPrefix(s"$bucketCol=").toInt).toSet
     }
     val entries = (prev -- allTouched) ++ present.iterator.map(_ -> batchId)
-    writeManifest(fs, new HPath(bd, manifestKind), entries)
+    writeManifest(fs, new HPath(bd, manifestKind), entries,
+      Option.when(allTouched.nonEmpty)(readSchemaOf(allRows, bucketCol)))
+    // a slice AQE proves empty runs no task through the observing node,
+    // which then reports no value at all: zero rows
+    observed.fold(0L)(_.get.getOrElse("n", 0L).asInstanceOf[Long])
   }
 
   /** Upsert the post-delta state of the TOUCHED data buckets (`rows`
     * must hold exactly those buckets' surviving rows, `__g_bucket`
     * included) and link every untouched bucket from `prevId`'s
-    * manifest. Does NOT commit — call [[commit]] after every family of
-    * the batch has written. */
+    * manifest. Returns the number of `rows` written — the touched
+    * slice's post-state size, observed on the write itself, so it
+    * costs no job of its own (0 when nothing is touched). Does NOT
+    * commit — call [[commit]] after every family of the batch has
+    * written. */
   def upsert(spark: SparkSession, dir: String, family: String,
       batchId: Long, prevId: Option[Long], rows: DataFrame,
-      touched: Seq[Int], maxLinks: Int = DefaultMaxLinks): Unit =
+      touched: Seq[Int], maxLinks: Int = DefaultMaxLinks): Long =
     writeSlice(spark, dir, family, batchId, prevId, rows, touched,
       "data", "__g_bucket", "manifest", maxLinks)
 
@@ -406,7 +479,8 @@ object BucketStore {
         // every bucket now lives here; dead buckets were already off
         // the manifest
         writeManifest(fs, new HPath(bd, kind),
-          manifest.keys.map(_ -> batchId).toMap)
+          manifest.keys.map(_ -> batchId).toMap,
+          all.map(readSchemaOf(_, bucketCol)))
       }
       rewrite("data", "__g_bucket", "manifest")
       rewrite("keys", "__k_bucket", "keys_manifest")

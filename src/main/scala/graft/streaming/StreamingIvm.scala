@@ -43,21 +43,32 @@ object StreamingIvm {
     * `fullCount = true` for the whole store's group count — a
     * manifest-resolved scan over every live bucket, store-proportional
     * per batch, so keep it out of hot per-batch callbacks (r16, the
-    * ADVICE read-cost item). */
+    * ADVICE read-cost item).
+    *
+    * Per batch the fold runs one guard job over the delta
+    * ([[BucketStore.guardBatch]]: emptiness, the op refusal and the
+    * touched buckets) and then the upsert's write. The over-delete
+    * refusal is IN the written plan — a `raise_error` on `n` — so it
+    * fails the write before [[BucketStore.commit]] and a malformed
+    * delta commits nothing; the returned count is observed on that
+    * same write, with no job of its own. */
   def applyBatch(
       batch: DataFrame, batchId: Long, groupCols: Seq[String],
       opCol: String, valueCol: String, aggDir: String,
       storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L // no state change; snapshot ids may skip
     // fail loudly on an op outside {I, D} — including NULL, which
-    // filters silently out of BOTH legs of any when() split
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D")).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
-        s"in '$opCol' — refusing to fold a malformed delta into the view")
+    // filters silently out of BOTH legs of any when() split. Only the
+    // delta's groups' buckets are read and merged — untouched groups
+    // stay linked through the manifest, unread and unwritten
+    val touched = BucketStore.guardBatch(batch, Seq(opCol -> Seq("I", "D")),
+        groupCols, storeBuckets)(
+        s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
+          s"in '$opCol' — refusing to fold a malformed delta into the view") match {
+      case Some(bs) => bs
+      case None => return -1L // no state change; snapshot ids may skip
+    }
     val g = groupCols.map(col)
     val delta = batch.select(
         (g :+ when(col(opCol) === "I", 1L).otherwise(-1L).as("__w")) :+
@@ -66,9 +77,6 @@ object StreamingIvm {
       .groupBy(g: _*)
       .agg(sum(col("__w")).as("__dn"), sum(col("__p")).as("__ds"))
     val prevId = committed(spark, aggDir).filter(_ < batchId).lastOption
-    // only the delta's groups' buckets read and merge — untouched
-    // groups stay linked through the manifest, unread and unwritten
-    val touched = BucketStore.bucketsOf(batch, groupCols, storeBuckets)
     val aggTemplate = batch.filter(lit(false))
       .select(g :+ lit(0L).as("n") :+ lit(0).cast("decimal(28,4)").as("s"): _*)
     val merged = prevId match {
@@ -89,32 +97,30 @@ object StreamingIvm {
             (coalesce(col("n"), lit(0L)) + coalesce(col("__dn"), lit(0L))).as("n")) :+
             (coalesce(col("s"), lit(0)) + coalesce(col("__ds"), lit(0))).as("s"): _*)
     }
-    val next = merged.localCheckpoint(false)
     // a delete for rows that were never inserted drives a group's count
     // negative (or zeroes the count while leaving a remainder sum) —
     // fail the batch loudly before it commits; silently dropping the
     // group would corrupt the view forever (nothing downstream ever
-    // recomputes it), the same discipline as the op check above
-    val corrupt = next.filter(col("n") < 0 ||
-      (col("n") === 0 && col("s") =!= 0)).limit(1).count()
-    require(corrupt == 0L,
-      s"change batch $batchId deletes rows the view never absorbed " +
-        "(negative count or zero count with a remainder sum) — " +
-        "refusing to fold an inconsistent delta into the view")
-    val survivors = next.filter(col("n") > 0)
-    BucketStore.upsert(spark, aggDir, "snap", batchId, prevId,
+    // recomputes it), the same discipline as the op check above. The
+    // raise sits in a CASE branch of `n` itself, so no filter above it
+    // can be simplified past the check (the IvmTopK.fold shape)
+    val survivors = merged
+      .withColumn("n", when(col("n") < 0 || (col("n") === 0 && col("s") =!= 0),
+        raise_error(lit(s"change batch $batchId deletes rows the view never " +
+          "absorbed (negative count or zero count with a remainder sum) — " +
+          "refusing to fold an inconsistent delta into the view")))
+        .otherwise(col("n")))
+      .filter(col("n") > 0)
+    val nTouched = BucketStore.upsert(spark, aggDir, "snap", batchId, prevId,
       survivors.withColumn("__g_bucket",
         BucketStore.bucketize(groupCols, storeBuckets)),
       touched)
     BucketStore.commit(spark, aggDir, "snap", batchId)
     BucketStore.gc(spark, aggDir, "snap", prevId.toSeq :+ batchId)
-    val nGroups =
-      if (fullCount)
-        BucketStore.readAll(spark, aggDir, "snap", Some(batchId), aggTemplate)
-          .count()
-      else survivors.count() // the touched slice — `next` is checkpointed
-    graft.operators.ScalableRank.release(next)
-    nGroups
+    if (fullCount)
+      BucketStore.readAll(spark, aggDir, "snap", Some(batchId), aggTemplate)
+        .count()
+    else nTouched
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`

@@ -90,18 +90,14 @@ object StreamingIvmCompose {
       storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L
     Seq("__g_bucket", "__k_bucket", "__op", "__w", "__net").foreach(c =>
       require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D") ||
-      col(sideCol).isNull ||
-      (col(sideCol) =!= "L" && col(sideCol) =!= "O" && col(sideCol) =!= "C"))
-      .limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} or side " +
-        s"outside {L, O, C} — refusing to fold a malformed delta into the view")
+    if (BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D"), sideCol -> Seq("L", "O", "C")))(
+        s"change batch $batchId has rows with op outside {I, D} or side " +
+          s"outside {L, O, C} — refusing to fold a malformed delta into the view")
+        .isEmpty) return -1L
 
     // the intermediate join's rows: L's pk (so deletes pair exactly)
     // plus everything stage 2 consumes
@@ -186,7 +182,7 @@ object StreamingIvmCompose {
       // markers, then GC of unreferenced batch directories
       Seq(pL, pO, pLO, pC).foreach(p =>
         BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-      BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
         agg1.withColumn("__g_bucket",
           BucketStore.bucketize(groupCols, storeBuckets)),
         touchedAgg)
@@ -196,9 +192,7 @@ object StreamingIvmCompose {
       if (fullCount)
         BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
           .count()
-      else // just-written touched buckets only — delta-proportional
-        BucketStore.readBuckets(spark, dir, "agg", Some(batchId), touchedAgg,
-          aggTemplate).count()
+      else nTouched // observed on the write — delta-proportional
     } finally dlo.unpersist()
   }
 

@@ -134,20 +134,16 @@ object StreamingIvmComposeN {
     val finalAvail = bases.flatMap(_.cols).distinct
     finalCols.foreach(c => require(finalAvail.contains(c),
       s"view column '$c' is not produced by any base"))
-    if (batch.isEmpty) return None
     Seq("__g_bucket", "__k_bucket", "__op", "__w", "__mult", "__dm")
       .foreach(c => require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
     val names = bases.map(_.name)
-    val sideOk = names.foldLeft(lit(false))((acc, n) =>
-      acc || col(sideCol) === n)
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D") ||
-      col(sideCol).isNull || !sideOk).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} or side " +
-        s"outside ${names.mkString("{", ", ", "}")} — refusing to fold a " +
-        "malformed delta into the view")
+    if (BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D"), sideCol -> names))(
+        s"change batch $batchId has rows with op outside {I, D} or side " +
+          s"outside ${names.mkString("{", ", ", "}")} — refusing to fold a " +
+          "malformed delta into the view")
+        .isEmpty) return None
 
     val prevId =
       committed(spark, dir, bases, viewFamilies).filter(_ < batchId).lastOption
@@ -261,7 +257,7 @@ object StreamingIvmComposeN {
       chain.interUpserts.foreach { case (family, rows, touched) =>
         BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touched)
       }
-      BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
         agg1.withColumn("__g_bucket",
           BucketStore.bucketize(groupCols, storeBuckets)),
         touchedAgg)
@@ -271,9 +267,7 @@ object StreamingIvmComposeN {
       if (fullCount)
         BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
           .count()
-      else // just-written touched buckets only — delta-proportional
-        BucketStore.readBuckets(spark, dir, "agg", Some(batchId), touchedAgg,
-          aggTemplate).count()
+      else nTouched // observed on the write — delta-proportional
     } finally pinned.foreach(_.unpersist())
   }
 
@@ -340,7 +334,7 @@ object StreamingIvmComposeN {
       val bucketize = BucketStore.bucketize(groupCols, storeBuckets)
       BucketStore.upsert(spark, dir, "counts", batchId, prevId,
         countsAff.withColumn("__g_bucket", bucketize), touched)
-      BucketStore.upsert(spark, dir, "topk", batchId, prevId,
+      val nTouched = BucketStore.upsert(spark, dir, "topk", batchId, prevId,
         topkAff.withColumn("__g_bucket", bucketize), touched)
       val fams = families(bases, TopKFamilies)
       fams.foreach(f => BucketStore.commit(spark, dir, f, batchId))
@@ -349,9 +343,7 @@ object StreamingIvmComposeN {
       if (fullCount)
         BucketStore.readAll(spark, dir, "topk", Some(batchId), topkTemplate)
           .count()
-      else // just-written touched buckets only — delta-proportional
-        BucketStore.readBuckets(spark, dir, "topk", Some(batchId), touched,
-          topkTemplate).count()
+      else nTouched // observed on the write — delta-proportional
     } finally pinned.foreach(_.unpersist())
   }
 
@@ -429,7 +421,7 @@ object StreamingIvmComposeN {
       }
       BucketStore.upsert(spark, dir, "final", batchId, prevId, finalRows,
         touchedFinal)
-      BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
         agg1.withColumn("__g_bucket",
           BucketStore.bucketize(groupCols, storeBuckets)),
         touchedFinal)
@@ -440,9 +432,7 @@ object StreamingIvmComposeN {
       if (fullCount)
         BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
           .count()
-      else // just-written touched buckets only — delta-proportional
-        BucketStore.readBuckets(spark, dir, "agg", Some(batchId),
-          touchedFinal, aggTemplate).count()
+      else nTouched // observed on the write — delta-proportional
     } finally pinned.foreach(_.unpersist())
   }
 
@@ -532,7 +522,7 @@ object StreamingIvmComposeN {
       chain.interUpserts.foreach { case (family, rows, touchedI) =>
         BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touchedI)
       }
-      BucketStore.upsert(spark, dir, "counts", batchId, prevId,
+      val nTouched = BucketStore.upsert(spark, dir, "counts", batchId, prevId,
         counts1.withColumn("__g_bucket",
           BucketStore.bucketize(groupCols, storeBuckets)),
         touchedCounts)
@@ -545,9 +535,7 @@ object StreamingIvmComposeN {
       if (fullCount)
         BucketStore.readAll(spark, dir, "counts", Some(batchId),
           countsTemplate).count()
-      else // just-written touched buckets only — delta-proportional
-        BucketStore.readBuckets(spark, dir, "counts", Some(batchId),
-          touchedCounts, countsTemplate).count()
+      else nTouched // observed on the write — delta-proportional
     } finally pinned.foreach(_.unpersist())
   }
 
@@ -661,7 +649,7 @@ object StreamingIvmComposeN {
         dict1.withColumn("__g_bucket",
           BucketStore.bucketize(pairCols, storeBuckets)),
         touchedDict)
-      BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
         counts1.withColumn("__g_bucket",
           BucketStore.bucketize(groupCols, storeBuckets)),
         touchedAgg)
@@ -672,9 +660,7 @@ object StreamingIvmComposeN {
       if (fullCount)
         BucketStore.readAll(spark, dir, "agg", Some(batchId), countsTemplate)
           .count()
-      else // just-written touched buckets only — delta-proportional
-        BucketStore.readBuckets(spark, dir, "agg", Some(batchId), touchedAgg,
-          countsTemplate).count()
+      else nTouched // observed on the write — delta-proportional
     } finally pinned.foreach(_.unpersist())
   }
 

@@ -57,15 +57,18 @@ object StreamingIvmDistinct {
       storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L
     Seq("__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D")).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
-        s"in '$opCol' — refusing to fold a malformed delta into the view")
+    // the counts view upserts by group bucket: fold only the slice the
+    // delta's groups live in; untouched groups stay linked
+    val touchedAgg = BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D")), groupCols, storeBuckets)(
+        s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
+          s"in '$opCol' — refusing to fold a malformed delta into the view") match {
+      case Some(bs) => bs
+      case None => return -1L
+    }
 
     val prevId = committed(spark, dir).filter(_ < batchId).lastOption
     val dataCols = batch.columns.filterNot(_ == opCol).toSeq
@@ -99,9 +102,6 @@ object StreamingIvmDistinct {
         deltaBuckets, dictTemplate)
       .select(pairCols.map(col): _*)
 
-    // the counts view upserts by group bucket: fold only the slice the
-    // delta's groups live in; untouched groups stay linked
-    val touchedAgg = BucketStore.bucketsOf(delta, groupCols, storeBuckets)
     val aggTemplate = batch.filter(lit(false))
       .select(groupCols.map(col) :+ lit(0L).as("n_distinct"): _*)
     val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
@@ -120,7 +120,7 @@ object StreamingIvmDistinct {
       dictAffected.withColumn("__g_bucket",
         BucketStore.bucketize(pairCols, storeBuckets)),
       deltaBuckets)
-    BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+    val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
       counts.withColumn("__g_bucket",
         BucketStore.bucketize(groupCols, storeBuckets)),
       touchedAgg)
@@ -130,9 +130,7 @@ object StreamingIvmDistinct {
     if (fullCount)
       BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
         .count()
-    else // just-written touched buckets only — delta-proportional
-      BucketStore.readBuckets(spark, dir, "agg", Some(batchId), touchedAgg,
-        aggTemplate).count()
+    else nTouched // observed on the write — delta-proportional
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`

@@ -64,17 +64,14 @@ object StreamingIvmJoin {
       storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L
     Seq("__g_bucket", "__k_bucket", "__op", "__w").foreach(c =>
       require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D") ||
-      col(sideCol).isNull ||
-      (col(sideCol) =!= "R" && col(sideCol) =!= "S")).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} or side " +
-        s"outside {R, S} — refusing to fold a malformed delta into the view")
+    if (BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D"), sideCol -> Seq("R", "S")))(
+        s"change batch $batchId has rows with op outside {I, D} or side " +
+          s"outside {R, S} — refusing to fold a malformed delta into the view")
+        .isEmpty) return -1L
 
     val prevId = committed(spark, dir).filter(_ < batchId).lastOption
     def template(cols: Seq[String]): DataFrame =
@@ -116,7 +113,7 @@ object StreamingIvmJoin {
 
     Seq(pR, pS).foreach(p =>
       BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-    BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+    val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
       agg1.withColumn("__g_bucket",
         BucketStore.bucketize(groupCols, storeBuckets)),
       touchedAgg)
@@ -126,9 +123,7 @@ object StreamingIvmJoin {
     if (fullCount)
       BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
         .count()
-    else // just-written touched buckets only — delta-proportional
-      BucketStore.readBuckets(spark, dir, "agg", Some(batchId), touchedAgg,
-        aggTemplate).count()
+    else nTouched // observed on the write — delta-proportional
   }
 
   /** Wire the per-batch fold onto a STREAMING tagged change frame;

@@ -69,15 +69,19 @@ object StreamingIvmMinMax {
       dir: String, storeBuckets: Int = StoreBuckets,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L
     Seq("__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D")).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
-        s"in '$opCol' — refusing to fold a malformed delta into the view")
+    // the aggregate upserts by the same group buckets the delta
+    // touched: foldMinMax only needs the stored rows of the delta's
+    // groups (untouched groups stay linked, unread and unwritten)
+    val touchedAgg = BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D")), groupCols, storeBuckets)(
+        s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
+          s"in '$opCol' — refusing to fold a malformed delta into the view") match {
+      case Some(bs) => bs
+      case None => return -1L
+    }
 
     val prevId = committed(spark, dir).filter(_ < batchId).lastOption
     val dataCols = batch.columns.filterNot(_ == opCol).toSeq
@@ -102,10 +106,6 @@ object StreamingIvmMinMax {
         Some(batchId), delBuckets, rowsTemplate)
       .select(dataCols.map(col): _*)
 
-    // the aggregate upserts by the same group buckets the delta
-    // touched: foldMinMax only needs the stored rows of the delta's
-    // groups (untouched groups stay linked, unread and unwritten)
-    val touchedAgg = BucketStore.bucketsOf(delta, groupCols, storeBuckets)
     val v = col(valueCol)
     val aggTemplate = batch.filter(lit(false))
       .select(groupCols.map(col) :+ lit(0L).as("n") :+
@@ -118,7 +118,7 @@ object StreamingIvmMinMax {
       batch.select((groupCols.map(col) :+ col(opCol)) :+ v: _*),
       rowsForFold.select(groupCols.map(col) :+ v: _*),
       groupCols, opCol, valueCol)
-    BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+    val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
       agg1.withColumn("__g_bucket",
         BucketStore.bucketize(groupCols, storeBuckets)),
       touchedAgg)
@@ -128,9 +128,7 @@ object StreamingIvmMinMax {
     if (fullCount)
       BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
         .count()
-    else // just-written touched buckets only — delta-proportional
-      BucketStore.readBuckets(spark, dir, "agg", Some(batchId), touchedAgg,
-        aggTemplate).count()
+    else nTouched // observed on the write — delta-proportional
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`

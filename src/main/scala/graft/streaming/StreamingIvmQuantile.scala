@@ -57,15 +57,18 @@ object StreamingIvmQuantile {
       storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L
     Seq("__qb", "__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D")).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
-        s"in '$opCol' — refusing to fold a malformed delta into the view")
+    // the counts view upserts by group bucket: the invertible fold
+    // needs only the delta's groups' slice; untouched groups link
+    val touchedCounts = BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D")), groupCols, storeBuckets)(
+        s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
+          s"in '$opCol' — refusing to fold a malformed delta into the view") match {
+      case Some(bs) => bs
+      case None => return -1L
+    }
 
     val prevId = committed(spark, dir).filter(_ < batchId).lastOption
     val dataCols = batch.columns.filterNot(_ == opCol).toSeq
@@ -82,9 +85,6 @@ object StreamingIvmQuantile {
       Seq(keyCol), qb, dir, "rows", batchId, prevId, storeBuckets, "rows")
     BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
 
-    // the counts view upserts by group bucket: the invertible fold
-    // needs only the delta's groups' slice; untouched groups link
-    val touchedCounts = BucketStore.bucketsOf(delta, groupCols, storeBuckets)
     val countsTemplate = batch.filter(lit(false))
       .select(groupCols.map(col) :+ lit(0L).as("__qb") :+
         lit(0L).as("cnt"): _*)
@@ -94,7 +94,7 @@ object StreamingIvmQuantile {
     val counts = IvmQuantile.foldCounts(Some(prevCountsSlice),
       batch.select((groupCols.map(col) :+ col(opCol)) :+ col(valueCol): _*),
       groupCols, opCol, valueCol, lo, hi, buckets)
-    BucketStore.upsert(spark, dir, "counts", batchId, prevId,
+    val nTouched = BucketStore.upsert(spark, dir, "counts", batchId, prevId,
       counts.withColumn("__g_bucket",
         BucketStore.bucketize(groupCols, storeBuckets)),
       touchedCounts)
@@ -104,9 +104,7 @@ object StreamingIvmQuantile {
     if (fullCount)
       BucketStore.readAll(spark, dir, "counts", Some(batchId), countsTemplate)
         .count()
-    else // just-written touched buckets only — delta-proportional
-      BucketStore.readBuckets(spark, dir, "counts", Some(batchId),
-        touchedCounts, countsTemplate).count()
+    else nTouched // observed on the write — delta-proportional
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`

@@ -47,7 +47,14 @@ object StreamingIvmTopK {
     * empty batch). `weightCol` switches the maintained measure to the
     * per-key positive-long weight SUM — [[IvmTopK]]'s weighted face
     * (top customers by revenue); delete rows must carry the weight
-    * they remove. */
+    * they remove.
+    *
+    * Per batch the fold runs one guard job over the delta
+    * ([[BucketStore.guardBatch]]: emptiness, the op refusal and the
+    * delta's group buckets) and then the two upsert writes. The
+    * over-delete refusal lives in [[IvmTopK.fold]]'s plan, so it fails
+    * the first write before anything commits, and the returned count
+    * is observed on the view's own write rather than read back. */
   def applyBatch(
       batch: DataFrame, batchId: Long,
       groupCols: Seq[String], opCol: String, keyCol: String, k: Int,
@@ -56,21 +63,21 @@ object StreamingIvmTopK {
       weightCol: Option[String] = None,
       fullCount: Boolean = false): Long = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return -1L
     Seq("__g_bucket", "__k_bucket").foreach(c =>
       require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
-    val bad = batch.filter(col(opCol).isNull ||
-      (col(opCol) =!= "I" && col(opCol) =!= "D")).limit(1).count()
-    require(bad == 0L,
-      s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
-        s"in '$opCol' — refusing to fold a malformed delta into the view")
-
-    val prevId = committed(spark, dir).filter(_ < batchId).lastOption
     // batch-bounded driver list (≤ storeBuckets ints) naming the only
     // store partitions this fold may touch — the fold's reads AND the
     // upsert's writes share it
-    val deltaBuckets = BucketStore.bucketsOf(batch, groupCols, storeBuckets)
+    val deltaBuckets = BucketStore.guardBatch(batch,
+        Seq(opCol -> Seq("I", "D")), groupCols, storeBuckets)(
+        s"change batch $batchId has rows with op outside {I, D} (or NULL) " +
+          s"in '$opCol' — refusing to fold a malformed delta into the view") match {
+      case Some(bs) => bs
+      case None => return -1L
+    }
+
+    val prevId = committed(spark, dir).filter(_ < batchId).lastOption
     val countsTemplate = batch.filter(lit(false))
       .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt"): _*)
     val topkTemplate = batch.filter(lit(false))
@@ -93,7 +100,8 @@ object StreamingIvmTopK {
     val bucketize = BucketStore.bucketize(groupCols, storeBuckets)
     BucketStore.upsert(spark, dir, "counts", batchId, prevId,
       countsAff.withColumn("__g_bucket", bucketize), deltaBuckets)
-    BucketStore.upsert(spark, dir, "topk", batchId, prevId,
+    // the view rows of the touched buckets — delta-proportional
+    val nTouched = BucketStore.upsert(spark, dir, "topk", batchId, prevId,
       topkAff.withColumn("__g_bucket", bucketize), deltaBuckets)
     Families.foreach(f => BucketStore.commit(spark, dir, f, batchId))
     val keep = prevId.toSeq :+ batchId
@@ -101,9 +109,7 @@ object StreamingIvmTopK {
     if (fullCount)
       BucketStore.readAll(spark, dir, "topk", Some(batchId), topkTemplate)
         .count()
-    else // just-written touched buckets only — delta-proportional
-      BucketStore.readBuckets(spark, dir, "topk", Some(batchId),
-        deltaBuckets, topkTemplate).count()
+    else nTouched
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`

@@ -107,6 +107,43 @@ class StreamingIvmSpec extends AnyFunSuite {
     assert(!StreamingIvm.hasCommitted(spark, aggDir), "failed batch must not commit")
   }
 
+  /** Every message down an exception's cause chain, joined. */
+  private def messageChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" <- ")
+
+  private def refusedOverDelete(rows: Seq[(String, String, Double)], id: Long,
+      aggDir: String): Unit = {
+    val e = intercept[Exception](StreamingIvm.applyBatch(
+      rows.toDF("g", "op", "v"), id, Seq("g"), "op", "v", aggDir))
+    assert(messageChain(e).contains("never absorbed"), messageChain(e))
+  }
+
+  test("a delete of a group never inserted fails the batch and commits nothing") {
+    val aggDir = java.nio.file.Files.createTempDirectory("ivm-overdel").toString + "/agg"
+    // as the very first batch: nothing may commit at all
+    refusedOverDelete(Seq(("z", "D", 5.0)), 0L, aggDir)
+    assert(!StreamingIvm.hasCommitted(spark, aggDir), "failed batch must not commit")
+    StreamingIvm.applyBatch(batches(0).toDF("g", "op", "v"), 0L, Seq("g"), "op", "v", aggDir)
+    // after a commit: the refused batch leaves the previous view unchanged
+    refusedOverDelete(Seq(("a", "I", 1.0), ("z", "D", 5.0)), 1L, aggDir)
+    assert(collect(StreamingIvm.readAgg(spark, aggDir)) == recompute(0))
+    // ...and a following valid batch still folds to the recompute
+    StreamingIvm.applyBatch(batches(1).toDF("g", "op", "v"), 2L, Seq("g"), "op", "v", aggDir)
+    assert(collect(StreamingIvm.readAgg(spark, aggDir)) == recompute(1))
+  }
+
+  test("a delete that zeroes a group's count but leaves a remainder sum fails the batch") {
+    val aggDir = java.nio.file.Files.createTempDirectory("ivm-remainder").toString + "/agg"
+    StreamingIvm.applyBatch(batches(0).toDF("g", "op", "v"), 0L, Seq("g"), "op", "v", aggDir)
+    // b holds two rows (5.0, 7.0): deleting two images of 5.0 zeroes
+    // n while s keeps 2.0 — a delete image the view never absorbed
+    refusedOverDelete(Seq(("b", "D", 5.0), ("b", "D", 5.0)), 1L, aggDir)
+    assert(collect(StreamingIvm.readAgg(spark, aggDir)) == recompute(0))
+    StreamingIvm.applyBatch(batches(1).toDF("g", "op", "v"), 1L, Seq("g"), "op", "v", aggDir)
+    assert(collect(StreamingIvm.readAgg(spark, aggDir)) == recompute(1))
+  }
+
   test("readAgg before any commit fails loudly; empty batch skips without a snapshot") {
     import spark.implicits._
     val aggDir = java.nio.file.Files.createTempDirectory("ivm-empty").toString + "/agg"
