@@ -420,7 +420,7 @@ object IvmScale {
     }
 
     // ---- round 14: the COMPOSED fold — (L⋈O)⋈C → aggregate, the
-    // ivm7/StreamingIvmCompose pipeline (deltaJoin → net-compress →
+    // ivm7 pipeline (deltaJoin → net-compress →
     // deltaJoin → foldAggSigned), all four rows stores keyed and
     // pruned by the probing delta's buckets. The timed window is the
     // full per-batch maintenance compute for a FIXED mixed delta while
@@ -531,7 +531,7 @@ object IvmScale {
            |
            |The full per-batch maintenance compute of the COMPOSED view
            |`(L⋈O)⋈C → per-group (n, s)` — deltaJoin → net-compress →
-           |deltaJoin → foldAggSigned, the ivm7/StreamingIvmCompose
+           |deltaJoin → foldAggSigned, the ivm7
            |pipeline — for a FIXED mixed delta (25 lines repriced, 2
            |orders deleted outright, 5 customers moved: both stage cross
            |terms live) while every store grows 10× (L $baseN → ${baseN * 10}
@@ -639,96 +639,103 @@ object IvmScale {
            |""".stripMargin
     }
 
+    // ---- the 3-base composed chain L(lk, ok, price) ⋈ O(ok, ck) ⋈
+    // C(ck, g) → γ(g; n, Σ price) on its deployment path
+    // (StreamingIvmComposeN.applyBatch end to end), shared by the
+    // write-law sections r15w, r16w and r16a: a store seeded with n L
+    // rows, a fixed mixed delta, and the bytes one batch writes
+    import graft.streaming.StreamingIvmComposeN
+    val chain3 = Seq(
+      StreamingIvmComposeN.BaseSpec("L", Seq("lk", "ok", "price"), "lk"),
+      StreamingIvmComposeN.BaseSpec("O", Seq("ok", "ck"), "ok"),
+      StreamingIvmComposeN.BaseSpec("C", Seq("ck", "g"), "ck"))
+    def fold3(d: DataFrame, id: Long, dir: String, buckets: Int): Long =
+      StreamingIvmComposeN.applyBatch(d, id, "side", "op", chain3,
+        Seq(Seq("ok"), Seq("ck")), Seq("g"), "price", dir,
+        storeBuckets = buckets)
+    val nOrdersOf = (n: Long) => n / cOrdersPer
+    def seedDir(tag: String, n: Long, buckets: Int): String = {
+      val dir = s"$out/${tag}_${n}_$buckets"
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      val nOrders = nOrdersOf(n)
+      val lSeed = spark.range(0L, n).select(lit("L").as("side"),
+        lit("I").as("op"), col("id").as("lk"),
+        (col("id") % nOrders).as("ok"), lit(null).cast("long").as("ck"),
+        col("id").cast("double").as("price"),
+        lit(null).cast("string").as("g"))
+      val oSeed = spark.range(0L, nOrders).select(lit("O").as("side"),
+        lit("I").as("op"), lit(null).cast("long").as("lk"),
+        col("id").as("ok"), (col("id") % cDims).as("ck"),
+        lit(null).cast("double").as("price"),
+        lit(null).cast("string").as("g"))
+      val cSeed = spark.range(0L, cDims).select(lit("C").as("side"),
+        lit("I").as("op"), lit(null).cast("long").as("lk"),
+        lit(null).cast("long").as("ok"), col("id").as("ck"),
+        lit(null).cast("double").as("price"),
+        (col("id") % 100).cast("string").as("g"))
+      fold3(lSeed.unionByName(oSeed).unionByName(cSeed), 0L, dir, buckets)
+      dir
+    }
+    def mixedDelta(n: Long): DataFrame = {
+      val nOrders = nOrdersOf(n)
+      // 25 lines repriced (D+I), 2 orders deleted outright, 5
+      // customers moved — the composedFold delta, tagged
+      val lt = spark.range(n / 2, n / 2 + 25)
+        .select(col("id").as("lk"), (col("id") % nOrders).as("ok"),
+          col("id").cast("double").as("price"))
+      val dL = lt.select(lit("L").as("side"), lit("D").as("op"),
+          col("lk"), col("ok"), lit(null).cast("long").as("ck"),
+          col("price"), lit(null).cast("string").as("g"))
+        .unionByName(lt.select(lit("L").as("side"), lit("I").as("op"),
+          col("lk"), col("ok"), lit(null).cast("long").as("ck"),
+          (col("price") + 0.5).as("price"),
+          lit(null).cast("string").as("g")))
+      val dO = spark.range(0L, 2L).select(lit("O").as("side"),
+        lit("D").as("op"), lit(null).cast("long").as("lk"),
+        col("id").as("ok"), (col("id") % cDims).as("ck"),
+        lit(null).cast("double").as("price"),
+        lit(null).cast("string").as("g"))
+      val ct = spark.range(10L, 15L).select(col("id").as("ck"),
+        (col("id") % 100).cast("string").as("g"))
+      val dC = ct.select(lit("C").as("side"), lit("D").as("op"),
+          lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
+          col("ck"), lit(null).cast("double").as("price"), col("g"))
+        .unionByName(ct.select(lit("C").as("side"), lit("I").as("op"),
+          lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
+          col("ck"), lit(null).cast("double").as("price"),
+          lit("moved").as("g")))
+      dL.unionByName(dO).unionByName(dC)
+    }
+    def bytesOfBatch(dir: String, id: Long): Long = {
+      def du(f: java.io.File): Long =
+        if (!f.exists) 0L
+        else if (f.isFile) f.length
+        else f.listFiles().map(du).sum
+      Seq("rows_L", "rows_O", "inter_1", "rows_C", "agg")
+        .map(fam => du(new java.io.File(s"$dir/$fam/batch=$id"))).sum
+    }
+    def foldW(n: Long, dir: String, buckets: Int): (Double, Long) = {
+      val d = mixedDelta(n)
+      // redelivery of the same id per iteration: reads the same
+      // committed base state, overwrites identical bytes — stable
+      // timing AND a stable byte count
+      val samples = (1 to iters).map { _ =>
+        val t0 = System.nanoTime()
+        fold3(d, 1L, dir, buckets)
+        (System.nanoTime() - t0) / 1e9
+      }
+      (median(samples), bytesOfBatch(dir, 1L))
+    }
+
     // ---- round 15: WRITE-side proportionality — the manifest-linked
-    // partitioned upsert (BucketStore) replacing the full five-family
-    // snapshot rewrite per batch in StreamingIvmCompose. Measured on
-    // the REAL deployment path (applyBatch end to end): bytes written
-    // by a fixed mixed delta batch must stay flat while every store
-    // grows 10×.
+    // partitioned upsert (BucketStore) replacing the full snapshot
+    // rewrite per batch of the 3-way composed view. Measured on the
+    // REAL deployment path (applyBatch end to end): bytes written by a
+    // fixed mixed delta batch must stay flat while every store grows
+    // 10×.
     if (on("r15w")) {
-      import graft.streaming.StreamingIvmCompose
-      val nOrdersOf = (n: Long) => n / cOrdersPer
-      def seedDir(n: Long, buckets: Int): String = {
-        val dir = s"$out/w15_${n}_$buckets"
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        val nOrders = nOrdersOf(n)
-        val lSeed = spark.range(0L, n).select(lit("L").as("side"),
-          lit("I").as("op"), col("id").as("lk"),
-          (col("id") % nOrders).as("ok"), lit(null).cast("long").as("ck"),
-          col("id").cast("double").as("price"),
-          lit(null).cast("string").as("g"))
-        val oSeed = spark.range(0L, nOrders).select(lit("O").as("side"),
-          lit("I").as("op"), lit(null).cast("long").as("lk"),
-          col("id").as("ok"), (col("id") % cDims).as("ck"),
-          lit(null).cast("double").as("price"),
-          lit(null).cast("string").as("g"))
-        val cSeed = spark.range(0L, cDims).select(lit("C").as("side"),
-          lit("I").as("op"), lit(null).cast("long").as("lk"),
-          lit(null).cast("long").as("ok"), col("id").as("ck"),
-          lit(null).cast("double").as("price"),
-          (col("id") % 100).cast("string").as("g"))
-        StreamingIvmCompose.applyBatch(
-          lSeed.unionByName(oSeed).unionByName(cSeed), 0L, "side", "op",
-          Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-          "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir,
-          storeBuckets = buckets)
-        dir
-      }
-      def mixedDelta(n: Long): DataFrame = {
-        val nOrders = nOrdersOf(n)
-        // 25 lines repriced (D+I), 2 orders deleted outright, 5
-        // customers moved — the composedFold delta, tagged
-        val lt = spark.range(n / 2, n / 2 + 25)
-          .select(col("id").as("lk"), (col("id") % nOrders).as("ok"),
-            col("id").cast("double").as("price"))
-        val dL = lt.select(lit("L").as("side"), lit("D").as("op"),
-            col("lk"), col("ok"), lit(null).cast("long").as("ck"),
-            col("price"), lit(null).cast("string").as("g"))
-          .unionByName(lt.select(lit("L").as("side"), lit("I").as("op"),
-            col("lk"), col("ok"), lit(null).cast("long").as("ck"),
-            (col("price") + 0.5).as("price"),
-            lit(null).cast("string").as("g")))
-        val dO = spark.range(0L, 2L).select(lit("O").as("side"),
-          lit("D").as("op"), lit(null).cast("long").as("lk"),
-          col("id").as("ok"), (col("id") % cDims).as("ck"),
-          lit(null).cast("double").as("price"),
-          lit(null).cast("string").as("g"))
-        val ct = spark.range(10L, 15L).select(col("id").as("ck"),
-          (col("id") % 100).cast("string").as("g"))
-        val dC = ct.select(lit("C").as("side"), lit("D").as("op"),
-            lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
-            col("ck"), lit(null).cast("double").as("price"), col("g"))
-          .unionByName(ct.select(lit("C").as("side"), lit("I").as("op"),
-            lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
-            col("ck"), lit(null).cast("double").as("price"),
-            lit("moved").as("g")))
-        dL.unionByName(dO).unionByName(dC)
-      }
-      def bytesOfBatch(dir: String, id: Long): Long = {
-        def du(f: java.io.File): Long =
-          if (!f.exists) 0L
-          else if (f.isFile) f.length
-          else f.listFiles().map(du).sum
-        Seq("rows_l", "rows_o", "rows_lo", "rows_c", "agg")
-          .map(fam => du(new java.io.File(s"$dir/$fam/batch=$id"))).sum
-      }
-      def foldW(n: Long, dir: String, buckets: Int): (Double, Long) = {
-        val d = mixedDelta(n)
-        // redelivery of the same id per iteration: reads the same
-        // committed base state, overwrites identical bytes — stable
-        // timing AND a stable byte count
-        val samples = (1 to iters).map { _ =>
-          val t0 = System.nanoTime()
-          StreamingIvmCompose.applyBatch(d, 1L, "side", "op",
-            Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-            "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir,
-            storeBuckets = buckets)
-          (System.nanoTime() - t0) / 1e9
-        }
-        (median(samples), bytesOfBatch(dir, 1L))
-      }
       // two bucket configurations, because the upsert's write grain IS
       // the bucket: with the bucket COUNT fixed across the growth the
       // touched buckets themselves grow store-proportionally (an honest
@@ -737,9 +744,9 @@ object IvmScale {
       // bucket SIZE fixed — makes the delta batch's write flat
       val fixedB = 256
       val scaledB = 2560 // 10× buckets for the 10× store: same rows/bucket
-      val dirF1 = seedDir(baseN, fixedB)
-      val dirF10 = seedDir(baseN * 10, fixedB)
-      val dirS10 = seedDir(baseN * 10, scaledB)
+      val dirF1 = seedDir("w15", baseN, fixedB)
+      val dirF10 = seedDir("w15", baseN * 10, fixedB)
+      val dirS10 = seedDir("w15", baseN * 10, scaledB)
       val seed1 = bytesOfBatch(dirF1, 0L)
       val seed10 = bytesOfBatch(dirF10, 0L)
       foldW(baseN, dirF1, fixedB) // warm, untimed (redelivered below)
@@ -753,7 +760,7 @@ object IvmScale {
            |
            |Round 14's one structural 100-TB liability: per-batch COMPUTE
            |was delta-proportional and reads bucket-pruned, but every
-           |StreamingIvmCompose commit rewrote all five snapshot families
+           |3-way composed-view commit rewrote all five snapshot families
            |in full — store-sized bytes per batch, unconditionally. The
            |BucketStore layout writes ONLY the buckets a batch touched
            |and links every untouched bucket from the previous manifest
@@ -764,7 +771,8 @@ object IvmScale {
            |(touched buckets × bucket size) — delta-proportional exactly
            |when the deployment holds the bucket SIZE bounded by sizing
            |`storeBuckets` to the store (the layout's documented sizing
-           |rule). Measured END TO END on StreamingIvmCompose.applyBatch
+           |rule). Measured END TO END on the 3-base
+           |StreamingIvmComposeN.applyBatch chain
            |(CDC validation, both deltaJoin stages, fold, write, commit,
            |GC) with the composedFold mixed delta while every store
            |grows 10× ($baseN → ${baseN * 10} L rows; seed snapshots
@@ -793,7 +801,11 @@ object IvmScale {
            |wall for it (76 s), which is what this path now avoids.
            |
            |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r15w sbt "runMain
-           |graft.IvmScale /tmp/graft_ivm_scale"`.
+           |graft.IvmScale /tmp/graft_ivm_scale"` — it measures the
+           |3-base StreamingIvmComposeN chain; the round-15/16
+           |captures measured the fixed 3-way composed object that chain
+           |replaced (five families either way; the intermediate is
+           |now a (ck, price) multiset, not a pk-keyed rows store).
            |""".stripMargin
     }
 
@@ -953,84 +965,7 @@ object IvmScale {
     // ---- round 16: the write law's ×100 decade, the per-batch wall
     // attribution, and the serving-read fan-out/compaction latency ----
     if (on("r16w") || on("r16a")) {
-      import graft.streaming.{StreamingIvmCompose, StoreTimers}
-      val nOrdersOf = (n: Long) => n / cOrdersPer
-      def seedDir16(n: Long, buckets: Int): String = {
-        val dir = s"$out/w16_${n}_$buckets"
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        val nOrders = nOrdersOf(n)
-        val lSeed = spark.range(0L, n).select(lit("L").as("side"),
-          lit("I").as("op"), col("id").as("lk"),
-          (col("id") % nOrders).as("ok"), lit(null).cast("long").as("ck"),
-          col("id").cast("double").as("price"),
-          lit(null).cast("string").as("g"))
-        val oSeed = spark.range(0L, nOrders).select(lit("O").as("side"),
-          lit("I").as("op"), lit(null).cast("long").as("lk"),
-          col("id").as("ok"), (col("id") % cDims).as("ck"),
-          lit(null).cast("double").as("price"),
-          lit(null).cast("string").as("g"))
-        val cSeed = spark.range(0L, cDims).select(lit("C").as("side"),
-          lit("I").as("op"), lit(null).cast("long").as("lk"),
-          lit(null).cast("long").as("ok"), col("id").as("ck"),
-          lit(null).cast("double").as("price"),
-          (col("id") % 100).cast("string").as("g"))
-        StreamingIvmCompose.applyBatch(
-          lSeed.unionByName(oSeed).unionByName(cSeed), 0L, "side", "op",
-          Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-          "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir,
-          storeBuckets = buckets)
-        dir
-      }
-      def mixedDelta16(n: Long): DataFrame = {
-        val nOrders = nOrdersOf(n)
-        val lt = spark.range(n / 2, n / 2 + 25)
-          .select(col("id").as("lk"), (col("id") % nOrders).as("ok"),
-            col("id").cast("double").as("price"))
-        val dL = lt.select(lit("L").as("side"), lit("D").as("op"),
-            col("lk"), col("ok"), lit(null).cast("long").as("ck"),
-            col("price"), lit(null).cast("string").as("g"))
-          .unionByName(lt.select(lit("L").as("side"), lit("I").as("op"),
-            col("lk"), col("ok"), lit(null).cast("long").as("ck"),
-            (col("price") + 0.5).as("price"),
-            lit(null).cast("string").as("g")))
-        val dO = spark.range(0L, 2L).select(lit("O").as("side"),
-          lit("D").as("op"), lit(null).cast("long").as("lk"),
-          col("id").as("ok"), (col("id") % cDims).as("ck"),
-          lit(null).cast("double").as("price"),
-          lit(null).cast("string").as("g"))
-        val ct = spark.range(10L, 15L).select(col("id").as("ck"),
-          (col("id") % 100).cast("string").as("g"))
-        val dC = ct.select(lit("C").as("side"), lit("D").as("op"),
-            lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
-            col("ck"), lit(null).cast("double").as("price"), col("g"))
-          .unionByName(ct.select(lit("C").as("side"), lit("I").as("op"),
-            lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
-            col("ck"), lit(null).cast("double").as("price"),
-            lit("moved").as("g")))
-        dL.unionByName(dO).unionByName(dC)
-      }
-      def bytesOfBatch16(dir: String, id: Long): Long = {
-        def du(f: java.io.File): Long =
-          if (!f.exists) 0L
-          else if (f.isFile) f.length
-          else f.listFiles().map(du).sum
-        Seq("rows_l", "rows_o", "rows_lo", "rows_c", "agg")
-          .map(fam => du(new java.io.File(s"$dir/$fam/batch=$id"))).sum
-      }
-      def foldW16(n: Long, dir: String, buckets: Int): (Double, Long) = {
-        val d = mixedDelta16(n)
-        val samples = (1 to iters).map { _ =>
-          val t0 = System.nanoTime()
-          StreamingIvmCompose.applyBatch(d, 1L, "side", "op",
-            Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-            "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir,
-            storeBuckets = buckets)
-          (System.nanoTime() - t0) / 1e9
-        }
-        (median(samples), bytesOfBatch16(dir, 1L))
-      }
+      import graft.streaming.StoreTimers
 
       if (on("r16w")) {
         // the ×100 decade (verdict #3): same generator, same mixed
@@ -1038,13 +973,13 @@ object IvmScale {
         // the sizing rule (256 → 25600 — bucket size held fixed)
         val bigN = baseN * 100
         val bigB = 25600
-        val dir1 = seedDir16(baseN, 256)
-        val dirBig = seedDir16(bigN, bigB)
-        val seed1 = bytesOfBatch16(dir1, 0L)
-        val seedBig = bytesOfBatch16(dirBig, 0L)
-        foldW16(baseN, dir1, 256) // warm, untimed (redelivered below)
-        val (t1, b1) = foldW16(baseN, dir1, 256)
-        val (tBig, bBig) = foldW16(bigN, dirBig, bigB)
+        val dir1 = seedDir("w16", baseN, 256)
+        val dirBig = seedDir("w16", bigN, bigB)
+        val seed1 = bytesOfBatch(dir1, 0L)
+        val seedBig = bytesOfBatch(dirBig, 0L)
+        foldW(baseN, dir1, 256) // warm, untimed (redelivered below)
+        val (t1, b1) = foldW(baseN, dir1, 256)
+        val (tBig, bBig) = foldW(bigN, dirBig, bigB)
         def mb(b: Long) = b / 1e6
         sections +=
           f"""
@@ -1054,7 +989,7 @@ object IvmScale {
              |across 10× store growth with the bucket size held fixed;
              |the ivm7/e2e precedent says exponents drift on the SECOND
              |decade, so here is the same end-to-end measurement
-             |(StreamingIvmCompose.applyBatch: CDC validation, both
+             |(3-base StreamingIvmComposeN.applyBatch: CDC validation, both
              |deltaJoin stages, fold, write, commit, GC; identical mixed
              |delta) with every store grown 100× and `storeBuckets`
              |scaled with the store per the sizing rule (256 → $bigB —
@@ -1080,7 +1015,11 @@ object IvmScale {
              |per-fold job count, not data.
              |
              |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r16w sbt "runMain
-             |graft.IvmScale /tmp/graft_ivm_scale"`.
+             |graft.IvmScale /tmp/graft_ivm_scale"` — it measures the
+             |3-base StreamingIvmComposeN chain; the round-15/16
+             |captures measured the fixed 3-way composed object that chain
+             |replaced (five families either way; the intermediate is
+           |now a (ck, price) multiset, not a pk-keyed rows store).
              |""".stripMargin
       }
 
@@ -1093,10 +1032,10 @@ object IvmScale {
         // materialize); measured on the r15w configurations, same
         // binary, iters-averaged.
         def attributed(n: Long, buckets: Int): (Double, Map[String, Double]) = {
-          val dir = seedDir16(n, buckets)
-          foldW16(n, dir, buckets) // warm
+          val dir = seedDir("w16", n, buckets)
+          foldW(n, dir, buckets) // warm
           StoreTimers.reset(); StoreTimers.enabled = true
-          val (t, _) = try foldW16(n, dir, buckets)
+          val (t, _) = try foldW(n, dir, buckets)
             finally StoreTimers.enabled = false
           (t, StoreTimers.seconds.view.mapValues(_ / iters).toMap
             .withDefaultValue(0.0))
@@ -1112,7 +1051,7 @@ object IvmScale {
         // checks as three separate Spark actions (the r15 shape: two
         // limit(1).count() probes + one dup-groupBy probe) vs one
         // unioned action (the r16 shape), on the 10× store's L side
-        val dirM = seedDir16(baseN * 10, 2560)
+        val dirM = seedDir("w16", baseN * 10, 2560)
         val nOrders = nOrdersOf(baseN * 10)
         val lt = spark.range(baseN * 10 / 2, baseN * 10 / 2 + 25)
           .select(col("id").as("lk"), (col("id") % nOrders).as("ok"),
@@ -1123,7 +1062,7 @@ object IvmScale {
         val touched = graft.streaming.BucketStore.bucketsOf(
           dels.unionByName(ins), Seq("ok"), 2560)
         val prevSlice = graft.streaming.BucketStore.readBuckets(spark, dirM,
-            "rows_l", Some(0L), touched, dels)
+            "rows_L", Some(0L), touched, dels)
           .select(col("lk"), col("ok"), col("price"))
         def three(): Double = {
           val t0 = System.nanoTime()
@@ -1186,7 +1125,11 @@ object IvmScale {
              |4× per batch: once per side plus the tag/op domain scan).
              |
              |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r16a sbt "runMain
-             |graft.IvmScale /tmp/graft_ivm_scale"`.
+             |graft.IvmScale /tmp/graft_ivm_scale"` — it measures the
+             |3-base StreamingIvmComposeN chain; the round-15/16
+             |captures measured the fixed 3-way composed object that chain
+             |replaced (five families either way; the intermediate is
+           |now a (ck, price) multiset, not a pk-keyed rows store).
              |""".stripMargin
       }
     }
@@ -1207,13 +1150,12 @@ object IvmScale {
         val fs = new org.apache.hadoop.fs.Path(dir)
           .getFileSystem(spark.sessionState.newHadoopConf())
         fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+        val store = BucketStore.View(dir, Seq("f"))
         val seed = spark.range(0L, nRows).toDF("k")
           .withColumn("v", col("k") * 2)
           .withColumn("__g_bucket", BucketStore.bucketize(Seq("k"), sb))
-        BucketStore.upsert(spark, dir, "f", 0L, None, seed,
-          (0 until sb).toSeq, maxLinks = maxLinks)
-        BucketStore.commit(spark, dir, "f", 0L)
-        var prev = 0L
+        store.fold(spark, 0L)(BucketStore.upsert(spark, dir, "f", 0L, _,
+          seed, (0 until sb).toSeq, maxLinks = maxLinks))
         (1 to folds).foreach { i =>
           // ONE delta row per fold → one touched bucket per fold: the
           // worst-case fan-out growth (hot-bucket folds would collapse
@@ -1222,11 +1164,8 @@ object IvmScale {
             .withColumn("v", col("k") * 3)
             .withColumn("__g_bucket", BucketStore.bucketize(Seq("k"), sb))
           val touched = BucketStore.bucketsOf(rows, Seq("k"), sb)
-          BucketStore.upsert(spark, dir, "f", i.toLong, Some(prev), rows,
-            touched, maxLinks = maxLinks)
-          BucketStore.commit(spark, dir, "f", i.toLong)
-          BucketStore.gc(spark, dir, "f", Seq(prev, i.toLong))
-          prev = i.toLong
+          store.fold(spark, i.toLong)(BucketStore.upsert(spark, dir, "f",
+            i.toLong, _, rows, touched, maxLinks = maxLinks))
         }
       }
       def readLatency(dir: String, id: Long): Double = {

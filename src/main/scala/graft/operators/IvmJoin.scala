@@ -75,8 +75,9 @@ object IvmJoin {
     * therefore carry cancelling rows for one tuple (e.g. a reprice
     * whose order is deleted in the same batch emits 5 rows netting one
     * D); downstream aggregates fold signs linearly so cancellation is
-    * free, and rows-store maintainers compress by net sign first
-    * ([[graft.streaming.StreamingIvmCompose]]).
+    * free, and store maintainers compress to net multiplicities first
+    * ([[deltaJoinWeighted]] and [[graft.streaming.StreamingIvmComposeN]]
+    * keep them as weights).
     *
     * Scale shape: identical to [[foldSumView]]'s legs — each term
     * broadcasts its delta side, the stored sides stream through one

@@ -688,8 +688,9 @@ object GovernanceQueries {
         Seq("ck", "price"))
       // stage 2: upstream delta AS this join's ΔR; its R is the
       // maintained intermediate join (recomputed here as the stand-in
-      // for the stored intermediate — StreamingIvmCompose keeps it as
-      // a rows store in the deployment shape)
+      // for the stored intermediate — the 3-base StreamingIvmComposeN
+      // chain keeps it as a (ck, price) multiset store in the
+      // deployment shape)
       val lo = l.join(o, Seq("ok")).select(col("ck"), col("price"))
       val d2 = IvmJoin.deltaJoin(d1, dC, lo, c, Seq("ck"), "op",
         Seq("nation", "price"))

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
@@ -265,16 +266,9 @@ object BucketStore {
       Some(buckets), "data", "__g_bucket", template)
 
   /** The family's full surviving rows as of snapshot `id` (every live
-    * bucket, resolved through the manifest). */
-  def readAll(spark: SparkSession, dir: String, family: String,
-      id: Option[Long], template: DataFrame): DataFrame =
-    readVia(spark, dir, family, readManifest(spark, dir, family, id),
-      None, "data", "__g_bucket", template)
-
-  /** [[readAll]] for callers with no schema template at hand (the
-    * read-side public APIs). A family whose every row has been
-    * legitimately deleted returns an EMPTY frame with the layout's
-    * schema (spoken by the `_schema_data` stub the first write
+    * bucket, resolved through the manifest). A family whose every row
+    * has been legitimately deleted returns an EMPTY frame with the
+    * layout's schema (spoken by the `_schema_data` stub the first write
     * persisted) — only a family that truly never wrote raises. */
   def readAllNonEmpty(spark: SparkSession, dir: String, family: String,
       id: Long): DataFrame = {
@@ -409,7 +403,7 @@ object BucketStore {
     * manifest. Returns the number of `rows` written — the touched
     * slice's post-state size, observed on the write itself, so it
     * costs no job of its own (0 when nothing is touched). Does NOT
-    * commit — call [[commit]] after every family of the batch has
+    * commit — [[View.fold]] marks every family once all have
     * written. */
   def upsert(spark: SparkSession, dir: String, family: String,
       batchId: Long, prevId: Option[Long], rows: DataFrame,
@@ -424,7 +418,7 @@ object BucketStore {
       "keys", "__k_bucket", "keys_manifest", maxLinks)
 
   /** Write the family's commit marker — the LAST step of its batch. */
-  def commit(spark: SparkSession, dir: String, family: String,
+  private def commit(spark: SparkSession, dir: String, family: String,
       batchId: Long): Unit = StoreTimers.timed("manifest") {
     val fs = fsOf(spark, dir)
     fs.create(new HPath(batchDir(dir, family, batchId), "_SUCCESS"), true)
@@ -496,7 +490,7 @@ object BucketStore {
     * batch any kept manifest (data AND keys) still points into. Call
     * with the last two committed ids — redelivery of the newest
     * replays against the previous. */
-  def gc(spark: SparkSession, dir: String, family: String,
+  private def gc(spark: SparkSession, dir: String, family: String,
       keepIds: Seq[Long]): Unit = {
     if (keepIds.isEmpty) return
     val fs = fsOf(spark, dir)
@@ -514,6 +508,71 @@ object BucketStore {
       .filter(p => !referenced.contains(
         p.getName.stripPrefix("batch=").toLong))
       .foreach(p => fs.delete(p, true))
+  }
+
+  // ---- the view commit protocol -------------------------------------
+
+  /** The exactly-once protocol of one maintained view: the `families`
+    * it keeps under `dir`, committed together. Every streaming IVM
+    * view keeps its stores through one of these, so the family list a
+    * fold commits is the list its reads, `hasCommitted` and `compact`
+    * resolve. */
+  final case class View(dir: String, families: Seq[String]) {
+
+    /** Batch ids committed across every family (ascending). */
+    def committed(spark: SparkSession): Seq[Long] =
+      committedAll(spark, dir, families)
+
+    def hasCommitted(spark: SparkSession): Boolean = committed(spark).nonEmpty
+
+    /** Fold micro-batch `batchId`: `write` gets the latest committed id
+      * below it and writes every family (data and manifests, no
+      * marker); then every family is marked and GC'd down to the
+      * directories (previous, this) reference, and `write`'s result is
+      * returned. A `write` that throws commits nothing. */
+    def fold[T](spark: SparkSession, batchId: Long)(write: Option[Long] => T): T = {
+      val prevId = committed(spark).filter(_ < batchId).lastOption
+      val result = write(prevId)
+      families.foreach(commit(spark, dir, _, batchId))
+      families.foreach(gc(spark, dir, _, prevId.toSeq :+ batchId))
+      result
+    }
+
+    /** Collapse every family's link fan-out into one batch directory —
+      * see [[compactAll]]; run between folds at a fresh id. */
+    def compact(spark: SparkSession, batchId: Long): Unit =
+      compactAll(spark, dir, families, batchId)
+
+    /** The latest committed batch id; `what` names the view in the
+      * refusal when nothing is committed. */
+    def latest(spark: SparkSession, what: String): Long = {
+      val snaps = committed(spark)
+      require(snaps.nonEmpty, s"no committed $what under $dir")
+      snaps.last
+    }
+
+    /** `family`'s rows as of the latest committed batch, the bucket key
+      * dropped. */
+    def read(spark: SparkSession, family: String, what: String): DataFrame =
+      readAllNonEmpty(spark, dir, family, latest(spark, what))
+        .drop("__g_bucket")
+  }
+
+  object View {
+
+    /** Wire a per-batch `fold` (batch, batchId) => count onto a
+      * STREAMING change frame; `onBatch` observes (batchId, count).
+      * `face` completes the caller's `applyStream…`/`applyBatch…` names
+      * in the refusal. Call `.start()`. */
+    def stream(changes: DataFrame, onBatch: (Long, Long) => Unit,
+        face: String = "")(
+        fold: (DataFrame, Long) => Long): DataStreamWriter[Row] = {
+      require(changes.isStreaming, s"applyStream$face expects a streaming " +
+        s"DataFrame (use applyBatch$face for static deltas)")
+      changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
+        onBatch(id, fold(b.toDF(), id))
+      }
+    }
   }
 
   // ---- the CDC-validated per-side upsert ----------------------------
@@ -608,7 +667,7 @@ object BucketStore {
   }
 
   /** Write a [[Prepared]] side's data + keys slices and manifests (no
-    * commit marker — [[commit]] is the caller's last step). */
+    * commit marker — [[View.fold]] writes those last). */
   def writePrepared(spark: SparkSession, dir: String, batchId: Long,
       prevId: Option[Long], p: Prepared,
       maxLinks: Int = DefaultMaxLinks): Unit = {

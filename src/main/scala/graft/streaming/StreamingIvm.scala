@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -34,29 +34,23 @@ import graft.core.Exact.dec
   */
 object StreamingIvm {
 
-  private def committed(spark: SparkSession, aggDir: String): Seq[Long] =
-    BucketStore.committedIn(spark, aggDir, "snap").toSeq.sorted
+  private def view(aggDir: String) = BucketStore.View(aggDir, Seq("snap"))
 
   /** Fold ONE static change batch into the maintained aggregate as
     * micro-batch `batchId`; returns the surviving group count of the
-    * TOUCHED slice after the fold (delta-sized to compute). Pass
-    * `fullCount = true` for the whole store's group count — a
-    * manifest-resolved scan over every live bucket, store-proportional
-    * per batch, so keep it out of hot per-batch callbacks (r16, the
-    * ADVICE read-cost item).
+    * TOUCHED slice after the fold (delta-sized to compute).
     *
     * Per batch the fold runs one guard job over the delta
     * ([[BucketStore.guardBatch]]: emptiness, the op refusal and the
     * touched buckets) and then the upsert's write. The over-delete
     * refusal is IN the written plan — a `raise_error` on `n` — so it
-    * fails the write before [[BucketStore.commit]] and a malformed
-    * delta commits nothing; the returned count is observed on that
-    * same write, with no job of its own. */
+    * fails the write before the commit and a malformed delta commits
+    * nothing; the returned count is observed on that same write, with
+    * no job of its own. */
   def applyBatch(
       batch: DataFrame, batchId: Long, groupCols: Seq[String],
       opCol: String, valueCol: String, aggDir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
     val spark = batch.sparkSession
     // fail loudly on an op outside {I, D} — including NULL, which
     // filters silently out of BOTH legs of any when() split. Only the
@@ -76,51 +70,46 @@ object StreamingIvm {
             .otherwise(-dec(col(valueCol)))).as("__p"): _*)
       .groupBy(g: _*)
       .agg(sum(col("__w")).as("__dn"), sum(col("__p")).as("__ds"))
-    val prevId = committed(spark, aggDir).filter(_ < batchId).lastOption
-    val aggTemplate = batch.filter(lit(false))
-      .select(g :+ lit(0L).as("n") :+ lit(0).cast("decimal(28,4)").as("s"): _*)
-    val merged = prevId match {
-      case None =>
-        // coalesce here too: a first-batch group whose valueCol rows are
-        // all NULL sums to s = NULL, which slips past the corruption
-        // check below (n === 0 && s =!= 0 evaluates to NULL) and makes
-        // the maintained state depend on batch boundaries — later
-        // merges would coalesce it to 0, the first snapshot would not
-        delta.select((g :+ coalesce(col("__dn"), lit(0L)).as("n")) :+
-          coalesce(col("__ds"), lit(0)).as("s"): _*)
-      case Some(_) =>
-        val stored = BucketStore.readBuckets(spark, aggDir, "snap", prevId,
-            touched, aggTemplate)
-          .select((groupCols :+ "n" :+ "s").map(col): _*)
-        stored.join(delta, groupCols, "full_outer")
-          .select((g :+
-            (coalesce(col("n"), lit(0L)) + coalesce(col("__dn"), lit(0L))).as("n")) :+
-            (coalesce(col("s"), lit(0)) + coalesce(col("__ds"), lit(0))).as("s"): _*)
+    view(aggDir).fold(spark, batchId) { prevId =>
+      val merged = prevId match {
+        case None =>
+          // coalesce here too: a first-batch group whose valueCol rows are
+          // all NULL sums to s = NULL, which slips past the corruption
+          // check below (n === 0 && s =!= 0 evaluates to NULL) and makes
+          // the maintained state depend on batch boundaries — later
+          // merges would coalesce it to 0, the first snapshot would not
+          delta.select((g :+ coalesce(col("__dn"), lit(0L)).as("n")) :+
+            coalesce(col("__ds"), lit(0)).as("s"): _*)
+        case Some(_) =>
+          val aggTemplate = batch.filter(lit(false))
+            .select(g :+ lit(0L).as("n") :+ lit(0).cast("decimal(28,4)").as("s"): _*)
+          val stored = BucketStore.readBuckets(spark, aggDir, "snap", prevId,
+              touched, aggTemplate)
+            .select((groupCols :+ "n" :+ "s").map(col): _*)
+          stored.join(delta, groupCols, "full_outer")
+            .select((g :+
+              (coalesce(col("n"), lit(0L)) + coalesce(col("__dn"), lit(0L))).as("n")) :+
+              (coalesce(col("s"), lit(0)) + coalesce(col("__ds"), lit(0))).as("s"): _*)
+      }
+      // a delete for rows that were never inserted drives a group's count
+      // negative (or zeroes the count while leaving a remainder sum) —
+      // fail the batch loudly before it commits; silently dropping the
+      // group would corrupt the view forever (nothing downstream ever
+      // recomputes it), the same discipline as the op check above. The
+      // raise sits in a CASE branch of `n` itself, so no filter above it
+      // can be simplified past the check (the IvmTopK.fold shape)
+      val survivors = merged
+        .withColumn("n", when(col("n") < 0 || (col("n") === 0 && col("s") =!= 0),
+          raise_error(lit(s"change batch $batchId deletes rows the view never " +
+            "absorbed (negative count or zero count with a remainder sum) — " +
+            "refusing to fold an inconsistent delta into the view")))
+          .otherwise(col("n")))
+        .filter(col("n") > 0)
+      BucketStore.upsert(spark, aggDir, "snap", batchId, prevId,
+        survivors.withColumn("__g_bucket",
+          BucketStore.bucketize(groupCols, storeBuckets)),
+        touched)
     }
-    // a delete for rows that were never inserted drives a group's count
-    // negative (or zeroes the count while leaving a remainder sum) —
-    // fail the batch loudly before it commits; silently dropping the
-    // group would corrupt the view forever (nothing downstream ever
-    // recomputes it), the same discipline as the op check above. The
-    // raise sits in a CASE branch of `n` itself, so no filter above it
-    // can be simplified past the check (the IvmTopK.fold shape)
-    val survivors = merged
-      .withColumn("n", when(col("n") < 0 || (col("n") === 0 && col("s") =!= 0),
-        raise_error(lit(s"change batch $batchId deletes rows the view never " +
-          "absorbed (negative count or zero count with a remainder sum) — " +
-          "refusing to fold an inconsistent delta into the view")))
-        .otherwise(col("n")))
-      .filter(col("n") > 0)
-    val nTouched = BucketStore.upsert(spark, aggDir, "snap", batchId, prevId,
-      survivors.withColumn("__g_bucket",
-        BucketStore.bucketize(groupCols, storeBuckets)),
-      touched)
-    BucketStore.commit(spark, aggDir, "snap", batchId)
-    BucketStore.gc(spark, aggDir, "snap", prevId.toSeq :+ batchId)
-    if (fullCount)
-      BucketStore.readAll(spark, aggDir, "snap", Some(batchId), aggTemplate)
-        .count()
-    else nTouched
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`
@@ -128,29 +117,21 @@ object StreamingIvm {
   def applyStream(
       changes: DataFrame, groupCols: Seq[String], opCol: String,
       valueCol: String, aggDir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStream expects a streaming DataFrame " +
-      "(use applyBatch for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatch(b.toDF(), id, groupCols, opCol, valueCol, aggDir))
-    }
-  }
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch)(
+      applyBatch(_, _, groupCols, opCol, valueCol, aggDir))
 
   def hasCommitted(spark: SparkSession, aggDir: String): Boolean =
-    committed(spark, aggDir).nonEmpty
+    view(aggDir).hasCommitted(spark)
 
   /** Collapse the manifest's link fan-out by rewriting every live
     * bucket into one batch directory — see
     * [[BucketStore.compactAll]]; run between folds at a fresh id. */
   def compact(spark: SparkSession, aggDir: String, batchId: Long): Unit =
-    BucketStore.compactAll(spark, aggDir, Seq("snap"), batchId)
+    view(aggDir).compact(spark, batchId)
 
   /** The maintained aggregate as of the latest committed batch:
     * (groupCols…, n, s) with s the exact decimal sum. */
-  def readAgg(spark: SparkSession, aggDir: String): DataFrame = {
-    val snaps = committed(spark, aggDir)
-    require(snaps.nonEmpty, s"no committed aggregate under $aggDir")
-    BucketStore.readAllNonEmpty(spark, aggDir, "snap", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readAgg(spark: SparkSession, aggDir: String): DataFrame =
+    view(aggDir).read(spark, "snap", "aggregate")
 }

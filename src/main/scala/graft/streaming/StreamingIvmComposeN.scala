@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -13,10 +13,12 @@ import graft.operators.{IvmJoin, IvmTopK}
   *   I₁ = B₀ ⋈ B₁, I₂ = I₁ ⋈ B₂, …, view = γ(groupCols; n, Σ value)
   *
   * under a CDC stream that changes ANY base, for ANY number of bases
-  * (≥ 2) and WITHOUT the many-to-one restriction
-  * [[StreamingIvmCompose]] imposes on its stage-1 join.
+  * (≥ 2) and with any join multiplicity: a 2-base instance is the
+  * `R ⋈ S` join view (`ivm4`'s shape, no intermediate), a 3-base one
+  * the `(L ⋈ O) ⋈ C` warehouse view (`ivm7`'s), and many-to-many
+  * stages fold exactly.
   *
-  * The two generalizations over the fixed 3-way face:
+  * Two design points carry the generality:
   *
   *  - **Multiset intermediates.** A many-to-many stage gives the
   *    intermediate no primary key, so pk-keyed rows stores cannot hold
@@ -32,17 +34,15 @@ import graft.operators.{IvmJoin, IvmTopK}
   *    per-stage join keys; stores and their bucket keys derive from
   *    it: base b is bucketed by the keys of the stage that PROBES it,
   *    intermediate Iₛ by the keys of the stage that consumes it, the
-  *    view by its group columns. `ivm7` stays the 3-way
-  *    [[StreamingIvmCompose]] instance (whose many-to-one contract is
-  *    tighter and spec-pinned separately); a 4-way chain is just a
-  *    4-element spec.
+  *    view by its group columns. A 4-way chain is just a 4-element
+  *    spec.
   *
   * Storage and scale shape are [[BucketStore]]'s throughout: every
   * family manifest-linked partitioned-upsert (bytes written per batch
   * ∝ delta), every store leg of every stage read pruned to the probing
   * delta's buckets, every deltaJoin leg broadcasting a compressed
-  * delta; commit = all family markers, recompute-from-latest-committed
-  * on redelivery.
+  * delta. Each face's families (bases, intermediates, then its own)
+  * commit together through one [[BucketStore.View]].
   *
   * Contract (StreamingIvmComposeNSpec): after batch N commits,
   * [[readView]] equals the full chain recompute over surviving
@@ -61,15 +61,30 @@ object StreamingIvmComposeN {
   private def baseFamily(b: BaseSpec) = s"rows_${b.name}"
   private def interFamily(s: Int) = s"inter_$s"
 
-  private def families(bases: Seq[BaseSpec],
-      viewFamilies: Seq[String] = Seq("agg")): Seq[String] =
-    bases.map(baseFamily) ++
-      (1 to bases.size - 2).map(interFamily) ++ viewFamilies
+  // each face's own families, kept above the chain's bases and
+  // intermediates
+  private val SumFace = Seq("agg")
+  private val TopKFace = Seq("counts", "topk")
+  private val MinMaxFace = Seq("final", "agg")
+  private val QuantileFace = Seq("counts", "final")
+  private val DistinctFace = Seq("wdict", "agg")
 
-  private def committed(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec],
-      viewFamilies: Seq[String] = Seq("agg")): Seq[Long] =
-    BucketStore.committedAll(spark, dir, families(bases, viewFamilies))
+  /** One face's commit protocol over the chain: every base, every
+    * intermediate, then the face's own families. */
+  private def view(dir: String, bases: Seq[BaseSpec],
+      face: Seq[String]): BucketStore.View =
+    BucketStore.View(dir, bases.map(baseFamily) ++
+      (1 to bases.size - 2).map(interFamily) ++ face)
+
+  /** The view of whichever face the chain under `dir` maintains (one
+    * directory holds one face), for the face-agnostic entry points:
+    * the first face with a committed batch — the two-family faces
+    * before the plain aggregate whose `agg` two of them share. */
+  private def committedView(spark: SparkSession, dir: String,
+      bases: Seq[BaseSpec]): BucketStore.View =
+    Seq(TopKFace, MinMaxFace, QuantileFace, DistinctFace, SumFace)
+      .map(view(dir, bases, _)).find(_.hasCommitted(spark))
+      .getOrElse(view(dir, bases, SumFace))
 
   /** The payload columns intermediate I_{s+1} (stage `s`'s output)
     * must carry: everything later stages join on plus what the view
@@ -82,35 +97,26 @@ object StreamingIvmComposeN {
     needed.filter(avail.contains)
   }
 
-  /** What the shared chain front-end hands each view face: the
-    * previous committed id, the validated per-base CDC writes, the
-    * intermediate-store writes, and the chain's final NET-WEIGHTED
-    * delta — (`finalCols`…, __w), compressed (no zero weights) —
-    * exactly the [[graft.operators.IvmJoin.deltaJoinWeighted]]
-    * contract every weighted fold consumes. */
+  /** One family's touched-slice upsert: the post-state rows of the
+    * touched buckets (`__g_bucket` included) and the bucket list. */
+  private case class Write(family: String, rows: DataFrame, touched: Seq[Int])
+
+  /** What the chain front-end hands each face: the validated per-base
+    * CDC writes, the intermediate-store writes, and the chain's final
+    * NET-WEIGHTED delta — (`finalCols`…, __w), compressed (no zero
+    * weights) — exactly the [[IvmJoin.deltaJoinWeighted]] contract
+    * every weighted fold consumes. */
   private case class ChainDelta(
-      prevId: Option[Long],
       prepared: Seq[BucketStore.Prepared],
-      interUpserts: Seq[(String, DataFrame, Seq[Int])],
+      interWrites: Seq[Write],
       delta: DataFrame)
 
-  /** The shared chain FRONT-END of every composed view face (round 16
-    * — the weighted-fold generalization): validates the chain spec and
-    * the tagged batch, prepares (but does not write) the per-base CDC
-    * upserts, runs the weighted stage loop against the maintained
-    * bases/intermediates, and returns the final net-weighted delta
-    * over `finalCols`. Returns None for an empty batch. `pin` caches
-    * intermediates; the CALLER unpersists everything pinned — after
-    * its own writes, since the prepared frames close over pinned
-    * deltas. */
-  private def chainDelta(
-      batch: DataFrame, batchId: Long,
-      sideCol: String, opCol: String,
+  /** Validate the chain spec and the tagged batch — the refusals that
+    * need no store read. False for an empty batch. */
+  private def guardChain(
+      batch: DataFrame, batchId: Long, sideCol: String, opCol: String,
       bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
-      finalCols: Seq[String], viewFamilies: Seq[String],
-      dir: String, storeBuckets: Int,
-      pin: DataFrame => DataFrame): Option[ChainDelta] = {
-    val spark = batch.sparkSession
+      finalCols: Seq[String]): Boolean = {
     val m = bases.size
     require(m >= 2, s"composed chain needs at least 2 bases, got $m")
     require(stageKeys.size == m - 1,
@@ -138,15 +144,30 @@ object StreamingIvmComposeN {
       .foreach(c => require(!batch.columns.contains(c),
         s"change batch already contains reserved column '$c'"))
     val names = bases.map(_.name)
-    if (BucketStore.guardBatch(batch,
+    BucketStore.guardBatch(batch,
         Seq(opCol -> Seq("I", "D"), sideCol -> names))(
         s"change batch $batchId has rows with op outside {I, D} or side " +
           s"outside ${names.mkString("{", ", ", "}")} — refusing to fold a " +
           "malformed delta into the view")
-        .isEmpty) return None
+      .nonEmpty
+  }
 
-    val prevId =
-      committed(spark, dir, bases, viewFamilies).filter(_ < batchId).lastOption
+  /** The shared chain FRONT-END of every composed face, against the
+    * state committed at `prevId`: prepares (but does not write) the
+    * per-base CDC upserts — every base validates before anything
+    * writes — and runs the weighted stage loop against the maintained
+    * bases/intermediates. `pin` caches intermediates until the fold
+    * ends, after its writes, since the prepared frames close over
+    * pinned deltas. */
+  private def chainDelta(
+      batch: DataFrame, batchId: Long,
+      sideCol: String, opCol: String,
+      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
+      finalCols: Seq[String], prevId: Option[Long],
+      dir: String, storeBuckets: Int,
+      pin: DataFrame => DataFrame): ChainDelta = {
+    val spark = batch.sparkSession
+    val m = bases.size
     def bucketsOf(d: DataFrame, keys: Seq[String]): Seq[Int] =
       BucketStore.bucketsOf(d, keys, storeBuckets)
     def template(cols: Seq[String]): DataFrame =
@@ -171,8 +192,7 @@ object StreamingIvmComposeN {
         .groupBy(cols.map(col): _*)
         .agg(sum(col("__w")).as("__w")).filter(col("__w") =!= 0)
 
-    val interUpserts =
-      scala.collection.mutable.ArrayBuffer[(String, DataFrame, Seq[Int])]()
+    val interWrites = scala.collection.mutable.ArrayBuffer[Write]()
     // the running upstream delta (net-weighted) and its columns
     var deltaCur = pin(weighted(deltas.head, bases.head.cols))
     var curCols = bases.head.cols
@@ -210,68 +230,83 @@ object StreamingIvmComposeN {
         val (rows, touched) = BucketStore.prepareMultisetUpsert(net,
           outCols, "__w", stageKeys(s + 1), dir, interFamily(s + 1),
           prevId, storeBuckets)
-        interUpserts += ((interFamily(s + 1), rows, touched))
+        interWrites += Write(interFamily(s + 1), rows, touched)
       }
       deltaCur = net
       curCols = outCols
     }
-    Some(ChainDelta(prevId, prepared, interUpserts.toSeq, deltaCur))
+    ChainDelta(prepared, interWrites.toSeq, deltaCur)
   }
+
+  /** One fold of a composed face as micro-batch `batchId` (-1 for an
+    * empty batch): the chain front-end against the latest committed
+    * state, then `faceWrites` turns the chain's net-weighted delta into
+    * the face's own writes, in write order. The bases and
+    * intermediates write first; returns the rows the LAST face write
+    * observed — the view's touched slice, delta-proportional. The
+    * `pin` handed to the face caches a frame until the fold ends. */
+  private def foldChain(
+      batch: DataFrame, batchId: Long, sideCol: String, opCol: String,
+      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
+      finalCols: Seq[String], face: Seq[String],
+      dir: String, storeBuckets: Int)(
+      faceWrites: (Option[Long], DataFrame, DataFrame => DataFrame) => Seq[Write]
+  ): Long = {
+    val spark = batch.sparkSession
+    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def pin(d: DataFrame): DataFrame = { val c = d.cache(); pinned += c; c }
+    try {
+      if (!guardChain(batch, batchId, sideCol, opCol, bases, stageKeys,
+          finalCols)) return -1L
+      view(dir, bases, face).fold(spark, batchId) { prevId =>
+        val chain = chainDelta(batch, batchId, sideCol, opCol, bases,
+          stageKeys, finalCols, prevId, dir, storeBuckets, pin)
+        val writes = chain.interWrites ++ faceWrites(prevId, chain.delta, pin)
+        chain.prepared.foreach(p =>
+          BucketStore.writePrepared(spark, dir, batchId, prevId, p))
+        writes.map(w => BucketStore.upsert(spark, dir, w.family, batchId,
+          prevId, w.rows, w.touched)).last
+      }
+    } finally pinned.foreach(_.unpersist())
+  }
+
+  /** The distinct store buckets of `delta`'s groups (≤ `storeBuckets`
+    * ints — the audited-collect discipline). */
+  private def groupBuckets(delta: DataFrame, groupCols: Seq[String],
+      storeBuckets: Int): Seq[Int] =
+    BucketStore.bucketsOf(delta.select(groupCols.map(col): _*), groupCols,
+      storeBuckets)
+
+  private def bucketed(rows: DataFrame, keys: Seq[String],
+      storeBuckets: Int): DataFrame =
+    rows.withColumn("__g_bucket", BucketStore.bucketize(keys, storeBuckets))
 
   /** Fold ONE static tagged change batch (`sideCol` ∈ base names,
     * `opCol` ∈ {I, D}) into the maintained stores as micro-batch
-    * `batchId`; returns the view's group count after the fold (-1 for
-    * an empty batch). */
+    * `batchId`; returns the view's group count over the touched slice
+    * (-1 for an empty batch). */
   def applyBatch(
       batch: DataFrame, batchId: Long,
       sideCol: String, opCol: String,
       bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
       groupCols: Seq[String], valueCol: String,
       dir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
-    val spark = batch.sparkSession
-    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def pin(d: DataFrame): DataFrame = { val c = d.cache(); pinned += c; c }
-    try {
-      val chain = chainDelta(batch, batchId, sideCol, opCol, bases,
-        stageKeys, (groupCols :+ valueCol).distinct, Seq("agg"), dir,
-        storeBuckets, pin).getOrElse(return -1L)
-      val prevId = chain.prevId
-      val deltaCur = chain.delta
-
-      // the view upserts by group bucket
-      val aggTemplate = batch.filter(lit(false))
-        .select(groupCols.map(col) :+ lit(0L).as("n") :+
-          lit(0).cast("decimal(28,4)").as("s"): _*)
-      val touchedAgg = BucketStore.bucketsOf(
-        deltaCur.select(groupCols.map(col): _*), groupCols, storeBuckets)
-      val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
-          touchedAgg, aggTemplate)
-        .select((groupCols :+ "n" :+ "s").map(col): _*)
-      val agg1 = IvmJoin.foldAggWeighted(Some(prevAggSlice), deltaCur,
-        groupCols, valueCol, "__w")
-
-      chain.prepared.foreach(p =>
-        BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-      chain.interUpserts.foreach { case (family, rows, touched) =>
-        BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touched)
-      }
-      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
-        agg1.withColumn("__g_bucket",
-          BucketStore.bucketize(groupCols, storeBuckets)),
-        touchedAgg)
-      families(bases).foreach(f => BucketStore.commit(spark, dir, f, batchId))
-      val keep = prevId.toSeq :+ batchId
-      families(bases).foreach(f => BucketStore.gc(spark, dir, f, keep))
-      if (fullCount)
-        BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
-          .count()
-      else nTouched // observed on the write — delta-proportional
-    } finally pinned.foreach(_.unpersist())
-  }
-
-  private val TopKFamilies = Seq("counts", "topk")
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long =
+    foldChain(batch, batchId, sideCol, opCol, bases, stageKeys,
+        (groupCols :+ valueCol).distinct, SumFace, dir, storeBuckets) {
+      (prevId, delta, _) =>
+        // the view upserts by group bucket
+        val aggTemplate = batch.filter(lit(false))
+          .select(groupCols.map(col) :+ lit(0L).as("n") :+
+            lit(0).cast("decimal(28,4)").as("s"): _*)
+        val touched = groupBuckets(delta, groupCols, storeBuckets)
+        val prevAggSlice = BucketStore.readBuckets(batch.sparkSession, dir,
+            "agg", prevId, touched, aggTemplate)
+          .select((groupCols :+ "n" :+ "s").map(col): _*)
+        val agg1 = IvmJoin.foldAggWeighted(Some(prevAggSlice), delta,
+          groupCols, valueCol, "__w")
+        Seq(Write("agg", bucketed(agg1, groupCols, storeBuckets), touched))
+    }
 
   /** Fold ONE static tagged change batch into a maintained TOP-K view
     * over the composed chain (round 16 — a NON-INVERTIBLE aggregate at
@@ -281,7 +316,7 @@ object StreamingIvmComposeN {
     * `valueCol` (positive LONG — the fixed-point money discipline)
     * Σ multiplicity · value: "top nations per priority by maintained
     * revenue over a 3-way many-to-many chain". The chain front-end is
-    * [[applyBatch]]'s verbatim; the view tail is
+    * the one every face shares; the view tail is
     * [[IvmTopK.foldWeighted]] — the chain's net-weighted delta IS the
     * per-key net delta the top-k monotonicity proof needs, so the
     * counts store folds invertibly and only net-decreased groups
@@ -297,73 +332,28 @@ object StreamingIvmComposeN {
       groupCols: Seq[String], keyCol: String, k: Int,
       valueCol: Option[String],
       dir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
-    val spark = batch.sparkSession
-    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def pin(d: DataFrame): DataFrame = { val c = d.cache(); pinned += c; c }
-    try {
-      val finalCols = ((groupCols :+ keyCol) ++ valueCol).distinct
-      val chain = chainDelta(batch, batchId, sideCol, opCol, bases,
-        stageKeys, finalCols, TopKFamilies, dir, storeBuckets, pin)
-        .getOrElse(return -1L)
-      val prevId = chain.prevId
-      val deltaCur = chain.delta
-
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long =
+    foldChain(batch, batchId, sideCol, opCol, bases, stageKeys,
+        ((groupCols :+ keyCol) ++ valueCol).distinct, TopKFace, dir,
+        storeBuckets) { (prevId, delta, _) =>
+      val spark = batch.sparkSession
       val countsTemplate = batch.filter(lit(false))
         .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt"): _*)
       val topkTemplate = batch.filter(lit(false))
         .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt") :+
           lit(0).as("rnk"): _*)
-      val touched = BucketStore.bucketsOf(
-        deltaCur.select(groupCols.map(col): _*), groupCols, storeBuckets)
+      val touched = groupBuckets(delta, groupCols, storeBuckets)
       val prevState = prevId.map { _ =>
         (BucketStore.readBuckets(spark, dir, "topk", prevId, touched,
             topkTemplate).drop("__g_bucket"),
           BucketStore.readBuckets(spark, dir, "counts", prevId, touched,
             countsTemplate).drop("__g_bucket"))
       }
-      val (topkAff, countsAff) = IvmTopK.foldWeighted(prevState, deltaCur,
+      val (topkAff, countsAff) = IvmTopK.foldWeighted(prevState, delta,
         groupCols, "__w", keyCol, k, valueCol)
-
-      chain.prepared.foreach(p =>
-        BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-      chain.interUpserts.foreach { case (family, rows, touchedI) =>
-        BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touchedI)
-      }
-      val bucketize = BucketStore.bucketize(groupCols, storeBuckets)
-      BucketStore.upsert(spark, dir, "counts", batchId, prevId,
-        countsAff.withColumn("__g_bucket", bucketize), touched)
-      val nTouched = BucketStore.upsert(spark, dir, "topk", batchId, prevId,
-        topkAff.withColumn("__g_bucket", bucketize), touched)
-      val fams = families(bases, TopKFamilies)
-      fams.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-      val keep = prevId.toSeq :+ batchId
-      fams.foreach(f => BucketStore.gc(spark, dir, f, keep))
-      if (fullCount)
-        BucketStore.readAll(spark, dir, "topk", Some(batchId), topkTemplate)
-          .count()
-      else nTouched // observed on the write — delta-proportional
-    } finally pinned.foreach(_.unpersist())
-  }
-
-  /** Wire the per-batch fold onto a STREAMING tagged change frame;
-    * `onBatch` observes (batchId, groupCount). Call `.start()`. */
-  def applyStream(
-      changes: DataFrame, sideCol: String, opCol: String,
-      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
-      groupCols: Seq[String], valueCol: String,
-      dir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStream expects a streaming DataFrame " +
-      "(use applyBatch for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatch(b.toDF(), id, sideCol, opCol, bases, stageKeys,
-        groupCols, valueCol, dir))
+      Seq(Write("counts", bucketed(countsAff, groupCols, storeBuckets), touched),
+        Write("topk", bucketed(topkAff, groupCols, storeBuckets), touched))
     }
-  }
-
-  private val MinMaxFamilies = Seq("final", "agg")
 
   /** Fold ONE static tagged change batch into a maintained MIN/MAX
     * aggregate over the composed chain (round 16): per `groupCols`
@@ -384,85 +374,29 @@ object StreamingIvmComposeN {
       bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
       groupCols: Seq[String], valueCol: String,
       dir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
-    val spark = batch.sparkSession
-    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def pin(d: DataFrame): DataFrame = { val c = d.cache(); pinned += c; c }
-    try {
-      val finalCols = (groupCols :+ valueCol).distinct
-      val chain = chainDelta(batch, batchId, sideCol, opCol, bases,
-        stageKeys, finalCols, MinMaxFamilies, dir, storeBuckets, pin)
-        .getOrElse(return -1L)
-      val prevId = chain.prevId
-      val deltaCur = chain.delta
-
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
+    val finalCols = (groupCols :+ valueCol).distinct
+    foldChain(batch, batchId, sideCol, opCol, bases, stageKeys, finalCols,
+        MinMaxFace, dir, storeBuckets) { (prevId, delta, pin) =>
       // the maintained final multiset: post-state of the delta's group
       // buckets — the re-agg truth for broken groups
-      val (finalRows0, touchedFinal) = BucketStore.prepareMultisetUpsert(
-        deltaCur, finalCols, "__w", groupCols, dir, "final", prevId,
+      val (finalRows0, touched) = BucketStore.prepareMultisetUpsert(
+        delta, finalCols, "__w", groupCols, dir, "final", prevId,
         storeBuckets)
       val finalRows = pin(finalRows0)
-
       val aggTemplate = batch.filter(lit(false))
         .select(groupCols.map(col) :+ lit(0L).as("n") :+
           lit(0).cast("decimal(28,4)").as("s") :+
           col(valueCol).as("mn") :+ col(valueCol).as("mx"): _*)
-      val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
-          touchedFinal, aggTemplate)
+      val prevAggSlice = BucketStore.readBuckets(batch.sparkSession, dir,
+          "agg", prevId, touched, aggTemplate)
         .select((groupCols :+ "n" :+ "s" :+ "mn" :+ "mx").map(col): _*)
       val agg1 = graft.operators.IvmFold.foldMinMaxWeighted(
-        Some(prevAggSlice), deltaCur, finalRows, groupCols, "__w", valueCol)
-
-      chain.prepared.foreach(p =>
-        BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-      chain.interUpserts.foreach { case (family, rows, touchedI) =>
-        BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touchedI)
-      }
-      BucketStore.upsert(spark, dir, "final", batchId, prevId, finalRows,
-        touchedFinal)
-      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
-        agg1.withColumn("__g_bucket",
-          BucketStore.bucketize(groupCols, storeBuckets)),
-        touchedFinal)
-      val fams = families(bases, MinMaxFamilies)
-      fams.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-      val keep = prevId.toSeq :+ batchId
-      fams.foreach(f => BucketStore.gc(spark, dir, f, keep))
-      if (fullCount)
-        BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
-          .count()
-      else nTouched // observed on the write — delta-proportional
-    } finally pinned.foreach(_.unpersist())
-  }
-
-  /** Wire the MIN/MAX per-batch fold onto a STREAMING tagged change
-    * frame; `onBatch` observes (batchId, groupCount). Call
-    * `.start()`. */
-  def applyStreamMinMax(
-      changes: DataFrame, sideCol: String, opCol: String,
-      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
-      groupCols: Seq[String], valueCol: String, dir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStreamMinMax expects a streaming " +
-      "DataFrame (use applyBatchMinMax for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatchMinMax(b.toDF(), id, sideCol, opCol, bases,
-        stageKeys, groupCols, valueCol, dir))
+        Some(prevAggSlice), delta, finalRows, groupCols, "__w", valueCol)
+      Seq(Write("final", finalRows, touched),
+        Write("agg", bucketed(agg1, groupCols, storeBuckets), touched))
     }
   }
-
-  /** The maintained composed MIN/MAX view as of the latest committed
-    * batch: (groupCols…, n, s, mn, mx). */
-  def readMinMaxView(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec]): DataFrame = {
-    val snaps = committed(spark, dir, bases, MinMaxFamilies)
-    require(snaps.nonEmpty, s"no committed composed min/max view under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "agg", snaps.last)
-      .drop("__g_bucket")
-  }
-
-  private val QuantileFamilies = Seq("counts", "final")
 
   /** Fold ONE static tagged change batch into a maintained EXACT-
     * QUANTILE view over the composed chain (round 16 — the fifth and
@@ -485,111 +419,31 @@ object StreamingIvmComposeN {
       bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
       groupCols: Seq[String], valueCol: String,
       dir: String, lo: Double, hi: Double, buckets: Int,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
-    val spark = batch.sparkSession
-    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def pin(d: DataFrame): DataFrame = { val c = d.cache(); pinned += c; c }
-    try {
-      val finalCols = (groupCols :+ valueCol).distinct
-      val chain = chainDelta(batch, batchId, sideCol, opCol, bases,
-        stageKeys, finalCols, QuantileFamilies, dir, storeBuckets, pin)
-        .getOrElse(return -1L)
-      val prevId = chain.prevId
-      val deltaCur = pin(chain.delta)
-
-      import graft.operators.IvmQuantile
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
+    import graft.operators.IvmQuantile
+    val finalCols = (groupCols :+ valueCol).distinct
+    foldChain(batch, batchId, sideCol, opCol, bases, stageKeys, finalCols,
+        QuantileFace, dir, storeBuckets) { (prevId, delta, _) =>
       val countsTemplate = batch.filter(lit(false))
         .select(groupCols.map(col) :+ lit(0L).as("__qb") :+
           lit(0L).as("cnt"): _*)
-      val touchedCounts = BucketStore.bucketsOf(
-        deltaCur.select(groupCols.map(col): _*), groupCols, storeBuckets)
-      val prevCounts = BucketStore.readBuckets(spark, dir, "counts", prevId,
-          touchedCounts, countsTemplate)
+      val touchedCounts = groupBuckets(delta, groupCols, storeBuckets)
+      val prevCounts = BucketStore.readBuckets(batch.sparkSession, dir,
+          "counts", prevId, touchedCounts, countsTemplate)
         .select((groupCols :+ "__qb" :+ "cnt").map(col): _*)
       val counts1 = IvmQuantile.foldCountsWeighted(Some(prevCounts),
-        deltaCur, groupCols, "__w", valueCol, lo, hi, buckets)
-
+        delta, groupCols, "__w", valueCol, lo, hi, buckets)
       // the final multiset, VALUE-bucketed: the candidate reads' prune
       // key (a delta row determines its own value bucket)
       val (finalRows, touchedFinal) = BucketStore.prepareMultisetUpsertExpr(
-        deltaCur.filter(col(valueCol).isNotNull), finalCols, "__w",
+        delta.filter(col(valueCol).isNotNull), finalCols, "__w",
         IvmQuantile.bucketIdOf(col(valueCol), lo, hi, buckets),
         dir, "final", prevId)
-
-      chain.prepared.foreach(p =>
-        BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-      chain.interUpserts.foreach { case (family, rows, touchedI) =>
-        BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touchedI)
-      }
-      val nTouched = BucketStore.upsert(spark, dir, "counts", batchId, prevId,
-        counts1.withColumn("__g_bucket",
-          BucketStore.bucketize(groupCols, storeBuckets)),
-        touchedCounts)
-      BucketStore.upsert(spark, dir, "final", batchId, prevId, finalRows,
-        touchedFinal)
-      val fams = families(bases, QuantileFamilies)
-      fams.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-      val keep = prevId.toSeq :+ batchId
-      fams.foreach(f => BucketStore.gc(spark, dir, f, keep))
-      if (fullCount)
-        BucketStore.readAll(spark, dir, "counts", Some(batchId),
-          countsTemplate).count()
-      else nTouched // observed on the write — delta-proportional
-    } finally pinned.foreach(_.unpersist())
-  }
-
-  /** Wire the QUANTILE per-batch fold onto a STREAMING tagged change
-    * frame; `onBatch` observes (batchId, liveBucketCount). Call
-    * `.start()`. */
-  def applyStreamQuantile(
-      changes: DataFrame, sideCol: String, opCol: String,
-      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
-      groupCols: Seq[String], valueCol: String,
-      dir: String, lo: Double, hi: Double, buckets: Int,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStreamQuantile expects a streaming " +
-      "DataFrame (use applyBatchQuantile for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatchQuantile(b.toDF(), id, sideCol, opCol, bases,
-        stageKeys, groupCols, valueCol, dir, lo, hi, buckets))
+      Seq(Write("final", finalRows, touchedFinal),
+        Write("counts", bucketed(counts1, groupCols, storeBuckets),
+          touchedCounts))
     }
   }
-
-  /** Exact PERCENTILE_CONT at `ps` per group over the maintained
-    * composed view, as of the latest committed batch — multiset rows
-    * read PRUNED to the candidate value buckets' files. (lo, hi,
-    * buckets) must be the view's creation-time values. */
-  def readPercentilesView(
-      spark: SparkSession, dir: String, bases: Seq[BaseSpec],
-      groupCols: Seq[String], valueCol: String, ps: Seq[Double],
-      lo: Double, hi: Double, buckets: Int): DataFrame = {
-    import graft.operators.IvmQuantile
-    val snaps = committed(spark, dir, bases, QuantileFamilies)
-    require(snaps.nonEmpty, s"no committed composed quantile view under $dir")
-    val counts = BucketStore.readAllNonEmpty(spark, dir, "counts", snaps.last)
-      .drop("__g_bucket")
-    val candQb = IvmQuantile.candidates(counts, groupCols, ps)
-      .select(col("__qb")).distinct()
-      .collect().map(_.getLong(0).toInt).toSeq // ≤ buckets ids — bounded
-    val finalManifest = BucketStore.readManifest(spark, dir, "final",
-      Some(snaps.last))
-    val unresolved = candQb.filterNot(finalManifest.contains)
-    require(unresolved.isEmpty,
-      s"candidate value buckets ${unresolved.sorted.mkString(",")} resolve " +
-        "to no stored rows — (lo, hi, buckets) must be the view's " +
-        "creation-time values (a mismatch re-buckets history)")
-    val template = counts.filter(lit(false))
-      .select(groupCols.map(col) :+ col("cnt").cast("double").as(valueCol) :+
-        lit(0L).as("__mult"): _*)
-    val rows = BucketStore.readBuckets(spark, dir, "final", Some(snaps.last),
-        candQb, template)
-      .select((groupCols :+ valueCol).map(col) :+ col("__mult"): _*)
-    IvmQuantile.percentileContWeighted(counts, rows, groupCols, valueCol,
-      "__mult", ps, lo, hi, buckets)
-  }
-
-  private val DistinctFamilies = Seq("wdict", "agg")
 
   /** Fold ONE static tagged change batch into a maintained
     * COUNT(DISTINCT `valueCol`) view over the composed chain (round
@@ -609,160 +463,166 @@ object StreamingIvmComposeN {
       bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
       groupCols: Seq[String], valueCol: String,
       dir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
-    val spark = batch.sparkSession
-    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def pin(d: DataFrame): DataFrame = { val c = d.cache(); pinned += c; c }
-    try {
-      val finalCols = (groupCols :+ valueCol).distinct
-      val pairCols = groupCols :+ valueCol
-      val chain = chainDelta(batch, batchId, sideCol, opCol, bases,
-        stageKeys, finalCols, DistinctFamilies, dir, storeBuckets, pin)
-        .getOrElse(return -1L)
-      val prevId = chain.prevId
-      val deltaCur = chain.delta
-
-      val wdictTemplate = batch.filter(lit(false))
-        .select(pairCols.map(col) :+ lit(0L).as("__mult"): _*)
-      val countsTemplate = batch.filter(lit(false))
-        .select(groupCols.map(col) :+ lit(0L).as("n_distinct"): _*)
-      val touchedDict =
-        BucketStore.bucketsOf(deltaCur, pairCols, storeBuckets)
-      val touchedAgg = BucketStore.bucketsOf(
-        deltaCur.select(groupCols.map(col): _*), groupCols, storeBuckets)
-      val prevWdict = BucketStore.readBuckets(spark, dir, "wdict", prevId,
-          touchedDict, wdictTemplate)
-        .select(pairCols.map(col) :+ col("__mult"): _*)
-      val prevCounts = BucketStore.readBuckets(spark, dir, "agg", prevId,
-          touchedAgg, countsTemplate)
-        .select((groupCols :+ "n_distinct").map(col): _*)
-      val (counts1, dict1) = graft.operators.IvmDistinct.foldWeighted(
-        Some((prevCounts, prevWdict)), deltaCur, groupCols, "__w", valueCol)
-
-      chain.prepared.foreach(p =>
-        BucketStore.writePrepared(spark, dir, batchId, prevId, p))
-      chain.interUpserts.foreach { case (family, rows, touchedI) =>
-        BucketStore.upsert(spark, dir, family, batchId, prevId, rows, touchedI)
-      }
-      BucketStore.upsert(spark, dir, "wdict", batchId, prevId,
-        dict1.withColumn("__g_bucket",
-          BucketStore.bucketize(pairCols, storeBuckets)),
-        touchedDict)
-      val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
-        counts1.withColumn("__g_bucket",
-          BucketStore.bucketize(groupCols, storeBuckets)),
-        touchedAgg)
-      val fams = families(bases, DistinctFamilies)
-      fams.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-      val keep = prevId.toSeq :+ batchId
-      fams.foreach(f => BucketStore.gc(spark, dir, f, keep))
-      if (fullCount)
-        BucketStore.readAll(spark, dir, "agg", Some(batchId), countsTemplate)
-          .count()
-      else nTouched // observed on the write — delta-proportional
-    } finally pinned.foreach(_.unpersist())
-  }
-
-  /** Wire the DISTINCT-count per-batch fold onto a STREAMING tagged
-    * change frame; `onBatch` observes (batchId, groupCount). Call
-    * `.start()`. */
-  def applyStreamDistinct(
-      changes: DataFrame, sideCol: String, opCol: String,
-      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
-      groupCols: Seq[String], valueCol: String, dir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStreamDistinct expects a streaming " +
-      "DataFrame (use applyBatchDistinct for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatchDistinct(b.toDF(), id, sideCol, opCol, bases,
-        stageKeys, groupCols, valueCol, dir))
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
+    val pairCols = groupCols :+ valueCol
+    foldChain(batch, batchId, sideCol, opCol, bases, stageKeys,
+        pairCols.distinct, DistinctFace, dir, storeBuckets) {
+      (prevId, delta, _) =>
+        val spark = batch.sparkSession
+        val wdictTemplate = batch.filter(lit(false))
+          .select(pairCols.map(col) :+ lit(0L).as("__mult"): _*)
+        val countsTemplate = batch.filter(lit(false))
+          .select(groupCols.map(col) :+ lit(0L).as("n_distinct"): _*)
+        val touchedDict =
+          BucketStore.bucketsOf(delta, pairCols, storeBuckets)
+        val touchedAgg = groupBuckets(delta, groupCols, storeBuckets)
+        val prevWdict = BucketStore.readBuckets(spark, dir, "wdict", prevId,
+            touchedDict, wdictTemplate)
+          .select(pairCols.map(col) :+ col("__mult"): _*)
+        val prevCounts = BucketStore.readBuckets(spark, dir, "agg", prevId,
+            touchedAgg, countsTemplate)
+          .select((groupCols :+ "n_distinct").map(col): _*)
+        val (counts1, dict1) = graft.operators.IvmDistinct.foldWeighted(
+          Some((prevCounts, prevWdict)), delta, groupCols, "__w", valueCol)
+        Seq(Write("wdict", bucketed(dict1, pairCols, storeBuckets), touchedDict),
+          Write("agg", bucketed(counts1, groupCols, storeBuckets), touchedAgg))
     }
   }
 
-  /** The maintained composed DISTINCT-count view as of the latest
-    * committed batch: (groupCols…, n_distinct). */
-  def readDistinctView(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec]): DataFrame = {
-    val snaps = committed(spark, dir, bases, DistinctFamilies)
-    require(snaps.nonEmpty, s"no committed composed distinct view under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "agg", snaps.last)
-      .drop("__g_bucket")
-  }
+  // ---- streaming wiring: one per face, each the static fold per
+  // micro-batch; `onBatch` observes (batchId, the fold's count) -------
 
-  /** Wire the TOP-K per-batch fold onto a STREAMING tagged change
-    * frame; `onBatch` observes (batchId, viewRowCount). Call
-    * `.start()`. */
+  def applyStream(
+      changes: DataFrame, sideCol: String, opCol: String,
+      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
+      groupCols: Seq[String], valueCol: String,
+      dir: String,
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch)(applyBatch(_, _, sideCol,
+      opCol, bases, stageKeys, groupCols, valueCol, dir))
+
   def applyStreamTopK(
       changes: DataFrame, sideCol: String, opCol: String,
       bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
       groupCols: Seq[String], keyCol: String, k: Int,
       valueCol: Option[String], dir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStreamTopK expects a streaming " +
-      "DataFrame (use applyBatchTopK for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatchTopK(b.toDF(), id, sideCol, opCol, bases,
-        stageKeys, groupCols, keyCol, k, valueCol, dir))
-    }
-  }
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch, "TopK")(applyBatchTopK(_, _,
+      sideCol, opCol, bases, stageKeys, groupCols, keyCol, k, valueCol, dir))
 
-  def hasCommitted(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec]): Boolean =
-    committed(spark, dir, bases).nonEmpty
+  def applyStreamMinMax(
+      changes: DataFrame, sideCol: String, opCol: String,
+      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
+      groupCols: Seq[String], valueCol: String, dir: String,
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch, "MinMax")(applyBatchMinMax(_,
+      _, sideCol, opCol, bases, stageKeys, groupCols, valueCol, dir))
 
-  /** The maintained composed TOP-K view as of the latest committed
-    * batch: (groupCols…, keyCol, cnt, rnk). */
-  def readTopKView(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec]): DataFrame = {
-    val snaps = committed(spark, dir, bases, TopKFamilies)
-    require(snaps.nonEmpty, s"no committed composed top-k view under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "topk", snaps.last)
-      .drop("__g_bucket")
-  }
+  def applyStreamQuantile(
+      changes: DataFrame, sideCol: String, opCol: String,
+      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
+      groupCols: Seq[String], valueCol: String,
+      dir: String, lo: Double, hi: Double, buckets: Int,
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch, "Quantile")(
+      applyBatchQuantile(_, _, sideCol, opCol, bases, stageKeys, groupCols,
+        valueCol, dir, lo, hi, buckets))
 
-  /** The maintained composed counts store as of the latest committed
-    * batch: (groupCols…, keyCol, cnt). */
-  def readCountsStore(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec]): DataFrame = {
-    val snaps = committed(spark, dir, bases, TopKFamilies)
-    require(snaps.nonEmpty, s"no committed composed counts store under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "counts", snaps.last)
-      .drop("__g_bucket")
-  }
+  def applyStreamDistinct(
+      changes: DataFrame, sideCol: String, opCol: String,
+      bases: Seq[BaseSpec], stageKeys: Seq[Seq[String]],
+      groupCols: Seq[String], valueCol: String, dir: String,
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch, "Distinct")(
+      applyBatchDistinct(_, _, sideCol, opCol, bases, stageKeys, groupCols,
+        valueCol, dir))
 
-  /** Collapse the manifests' link fan-out by rewriting every live
-    * bucket of every derived family into one batch directory — see
-    * [[BucketStore.compactAll]]; run between folds at a fresh id. */
-  def compact(spark: SparkSession, dir: String, bases: Seq[BaseSpec],
-      batchId: Long): Unit =
-    BucketStore.compactAll(spark, dir, families(bases), batchId)
+  // ---- reads and maintenance -----------------------------------------
 
   /** The maintained view as of the latest committed batch:
     * (groupCols…, n, s). */
   def readView(spark: SparkSession, dir: String,
-      bases: Seq[BaseSpec]): DataFrame = {
-    val snaps = committed(spark, dir, bases)
-    require(snaps.nonEmpty, s"no committed composed view under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "agg", snaps.last)
+      bases: Seq[BaseSpec]): DataFrame =
+    view(dir, bases, SumFace).read(spark, "agg", "composed view")
+
+  /** The maintained composed TOP-K view as of the latest committed
+    * batch: (groupCols…, keyCol, cnt, rnk). */
+  def readTopKView(spark: SparkSession, dir: String,
+      bases: Seq[BaseSpec]): DataFrame =
+    view(dir, bases, TopKFace).read(spark, "topk", "composed top-k view")
+
+  /** The maintained composed counts store as of the latest committed
+    * batch: (groupCols…, keyCol, cnt). */
+  def readCountsStore(spark: SparkSession, dir: String,
+      bases: Seq[BaseSpec]): DataFrame =
+    view(dir, bases, TopKFace).read(spark, "counts", "composed counts store")
+
+  /** The maintained composed MIN/MAX view as of the latest committed
+    * batch: (groupCols…, n, s, mn, mx). */
+  def readMinMaxView(spark: SparkSession, dir: String,
+      bases: Seq[BaseSpec]): DataFrame =
+    view(dir, bases, MinMaxFace).read(spark, "agg", "composed min/max view")
+
+  /** The maintained composed DISTINCT-count view as of the latest
+    * committed batch: (groupCols…, n_distinct). */
+  def readDistinctView(spark: SparkSession, dir: String,
+      bases: Seq[BaseSpec]): DataFrame =
+    view(dir, bases, DistinctFace).read(spark, "agg", "composed distinct view")
+
+  /** Exact PERCENTILE_CONT at `ps` per group over the maintained
+    * composed view, as of the latest committed batch — multiset rows
+    * read PRUNED to the candidate value buckets' files. (lo, hi,
+    * buckets) must be the view's creation-time values. */
+  def readPercentilesView(
+      spark: SparkSession, dir: String, bases: Seq[BaseSpec],
+      groupCols: Seq[String], valueCol: String, ps: Seq[Double],
+      lo: Double, hi: Double, buckets: Int): DataFrame = {
+    import graft.operators.IvmQuantile
+    val latest = view(dir, bases, QuantileFace)
+      .latest(spark, "composed quantile view")
+    val counts = BucketStore.readAllNonEmpty(spark, dir, "counts", latest)
       .drop("__g_bucket")
+    val candQb = IvmQuantile.candidates(counts, groupCols, ps)
+      .select(col("__qb")).distinct()
+      .collect().map(_.getLong(0).toInt).toSeq // ≤ buckets ids — bounded
+    val finalManifest = BucketStore.readManifest(spark, dir, "final",
+      Some(latest))
+    val unresolved = candQb.filterNot(finalManifest.contains)
+    require(unresolved.isEmpty,
+      s"candidate value buckets ${unresolved.sorted.mkString(",")} resolve " +
+        "to no stored rows — (lo, hi, buckets) must be the view's " +
+        "creation-time values (a mismatch re-buckets history)")
+    val template = counts.filter(lit(false))
+      .select(groupCols.map(col) :+ col("cnt").cast("double").as(valueCol) :+
+        lit(0L).as("__mult"): _*)
+    val rows = BucketStore.readBuckets(spark, dir, "final", Some(latest),
+        candQb, template)
+      .select((groupCols :+ valueCol).map(col) :+ col("__mult"): _*)
+    IvmQuantile.percentileContWeighted(counts, rows, groupCols, valueCol,
+      "__mult", ps, lo, hi, buckets)
   }
+
+  /** Whether the chain under `dir` has committed a batch, whichever
+    * face it maintains. */
+  def hasCommitted(spark: SparkSession, dir: String,
+      bases: Seq[BaseSpec]): Boolean =
+    committedView(spark, dir, bases).hasCommitted(spark)
+
+  /** Collapse the manifests' link fan-out by rewriting every live
+    * bucket of every family of the face `dir` maintains into one batch
+    * directory — see [[BucketStore.compactAll]]; run between folds at a
+    * fresh id. */
+  def compact(spark: SparkSession, dir: String, bases: Seq[BaseSpec],
+      batchId: Long): Unit =
+    committedView(spark, dir, bases).compact(spark, batchId)
 
   /** Surviving rows of one base's store, bucket column dropped. */
   def readBase(spark: SparkSession, dir: String, bases: Seq[BaseSpec],
-      name: String): DataFrame = {
-    val snaps = committed(spark, dir, bases)
-    require(snaps.nonEmpty, s"no committed store under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, s"rows_$name", snaps.last)
-      .drop("__g_bucket")
-  }
+      name: String): DataFrame =
+    committedView(spark, dir, bases).read(spark, s"rows_$name", "store")
 
   /** Intermediate Iₛ's maintained multiset — (payload…, __mult). */
   def readInter(spark: SparkSession, dir: String, bases: Seq[BaseSpec],
-      s: Int): DataFrame = {
-    val snaps = committed(spark, dir, bases)
-    require(snaps.nonEmpty, s"no committed store under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, interFamily(s), snaps.last)
-      .drop("__g_bucket")
-  }
+      s: Int): DataFrame =
+    committedView(spark, dir, bases).read(spark, interFamily(s), "store")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -42,20 +42,17 @@ import graft.operators.IvmDistinct
   */
 object StreamingIvmDistinct {
 
-  private val Families = Seq("rows", "dict", "agg")
-
-  private def committed(spark: SparkSession, dir: String): Seq[Long] =
-    BucketStore.committedAll(spark, dir, Families)
+  private def view(dir: String) = BucketStore.View(dir, Seq("rows", "dict", "agg"))
 
   /** Fold ONE static change batch (keyCol, groupCols…, opCol,
     * valueCol) into the maintained store as micro-batch `batchId`;
-    * returns the group count after the fold (-1 for an empty batch). */
+    * returns the group count of the touched slice after the fold (-1
+    * for an empty batch). */
   def applyBatch(
       batch: DataFrame, batchId: Long, keyCol: String,
       groupCols: Seq[String], opCol: String, valueCol: String,
       dir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
     val spark = batch.sparkSession
     Seq("__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
@@ -70,67 +67,62 @@ object StreamingIvmDistinct {
       case None => return -1L
     }
 
-    val prevId = committed(spark, dir).filter(_ < batchId).lastOption
-    val dataCols = batch.columns.filterNot(_ == opCol).toSeq
-    val delta = batch.select(dataCols.map(col) :+ col(opCol).as("__op"): _*)
+    view(dir).fold(spark, batchId) { prevId =>
+      val dataCols = batch.columns.filterNot(_ == opCol).toSeq
+      val delta = batch.select(dataCols.map(col) :+ col(opCol).as("__op"): _*)
 
-    // CDC validation (delete images, pk collisions via the key index,
-    // duplicate inserts) — eagerly, before any write
-    val prepared = BucketStore.prepareCdcUpsert(delta, dataCols,
-      Seq(keyCol), groupCols, dir, "rows", batchId, prevId, storeBuckets,
-      "rows")
-    BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
+      // CDC validation (delete images, pk collisions via the key index,
+      // duplicate inserts) — eagerly, before any write
+      val prepared = BucketStore.prepareCdcUpsert(delta, dataCols,
+        Seq(keyCol), groupCols, dir, "rows", batchId, prevId, storeBuckets,
+        "rows")
+      BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
 
-    // the surviving-pair check reads the rows just WRITTEN (the new
-    // batch's own manifest), pruned to the delete rows' group buckets
-    val delBuckets = BucketStore.bucketsOf(
-      batch.filter(col(opCol) === "D"), groupCols, storeBuckets)
-    val rowsTemplate = batch.filter(lit(false))
-      .select(dataCols.map(col): _*)
-    val rowsForFold = BucketStore.readBuckets(spark, dir, "rows",
-        Some(batchId), delBuckets, rowsTemplate)
-      .select(dataCols.map(col): _*)
+      // the surviving-pair check reads the rows just WRITTEN (the new
+      // batch's own manifest), pruned to the delete rows' group buckets
+      val delBuckets = BucketStore.bucketsOf(
+        batch.filter(col(opCol) === "D"), groupCols, storeBuckets)
+      val rowsTemplate = batch.filter(lit(false))
+        .select(dataCols.map(col): _*)
+      val rowsForFold = BucketStore.readBuckets(spark, dir, "rows",
+          Some(batchId), delBuckets, rowsTemplate)
+        .select(dataCols.map(col): _*)
 
-    // dict pruning: membership only matters for the delta's own pairs,
-    // so the fold reads ONLY their hash-bucket partitions — and the
-    // write now replaces ONLY those partitions
-    val pairCols = groupCols :+ valueCol
-    val deltaBuckets = BucketStore.bucketsOf(batch, pairCols, storeBuckets)
-    val dictTemplate = batch.filter(lit(false))
-      .select(pairCols.map(col): _*)
-    val dictSlice = BucketStore.readBuckets(spark, dir, "dict", prevId,
-        deltaBuckets, dictTemplate)
-      .select(pairCols.map(col): _*)
+      // dict pruning: membership only matters for the delta's own pairs,
+      // so the fold reads ONLY their hash-bucket partitions — and the
+      // write now replaces ONLY those partitions
+      val pairCols = groupCols :+ valueCol
+      val deltaBuckets = BucketStore.bucketsOf(batch, pairCols, storeBuckets)
+      val dictTemplate = batch.filter(lit(false))
+        .select(pairCols.map(col): _*)
+      val dictSlice = BucketStore.readBuckets(spark, dir, "dict", prevId,
+          deltaBuckets, dictTemplate)
+        .select(pairCols.map(col): _*)
 
-    val aggTemplate = batch.filter(lit(false))
-      .select(groupCols.map(col) :+ lit(0L).as("n_distinct"): _*)
-    val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
-        touchedAgg, aggTemplate)
-      .select((groupCols :+ "n_distinct").map(col): _*)
+      val aggTemplate = batch.filter(lit(false))
+        .select(groupCols.map(col) :+ lit(0L).as("n_distinct"): _*)
+      val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
+          touchedAgg, aggTemplate)
+        .select((groupCols :+ "n_distinct").map(col): _*)
 
-    val (counts, dictAffected) = IvmDistinct.fold(
-      Some((prevAggSlice, dictSlice)),
-      batch.select((groupCols.map(col) :+ col(opCol)) :+ col(valueCol): _*),
-      rowsForFold.select((groupCols.map(col) :+ col(valueCol)): _*),
-      groupCols, opCol, valueCol)
+      val (counts, dictAffected) = IvmDistinct.fold(
+        Some((prevAggSlice, dictSlice)),
+        batch.select((groupCols.map(col) :+ col(opCol)) :+ col(valueCol): _*),
+        rowsForFold.select((groupCols.map(col) :+ col(valueCol)): _*),
+        groupCols, opCol, valueCol)
 
-    // dict first (counts derive from it), then the view; commit is the
-    // triple's intersection either way
-    BucketStore.upsert(spark, dir, "dict", batchId, prevId,
-      dictAffected.withColumn("__g_bucket",
-        BucketStore.bucketize(pairCols, storeBuckets)),
-      deltaBuckets)
-    val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
-      counts.withColumn("__g_bucket",
-        BucketStore.bucketize(groupCols, storeBuckets)),
-      touchedAgg)
-    Families.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-    val keep = prevId.toSeq :+ batchId
-    Families.foreach(f => BucketStore.gc(spark, dir, f, keep))
-    if (fullCount)
-      BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
-        .count()
-    else nTouched // observed on the write — delta-proportional
+      // dict first (counts derive from it), then the view; commit is the
+      // triple's intersection either way
+      BucketStore.upsert(spark, dir, "dict", batchId, prevId,
+        dictAffected.withColumn("__g_bucket",
+          BucketStore.bucketize(pairCols, storeBuckets)),
+        deltaBuckets)
+      // observed on the write — delta-proportional
+      BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+        counts.withColumn("__g_bucket",
+          BucketStore.bucketize(groupCols, storeBuckets)),
+        touchedAgg)
+    }
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`
@@ -138,39 +130,26 @@ object StreamingIvmDistinct {
   def applyStream(
       changes: DataFrame, keyCol: String, groupCols: Seq[String],
       opCol: String, valueCol: String, dir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStream expects a streaming DataFrame " +
-      "(use applyBatch for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id,
-        applyBatch(b.toDF(), id, keyCol, groupCols, opCol, valueCol, dir))
-    }
-  }
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch)(
+      applyBatch(_, _, keyCol, groupCols, opCol, valueCol, dir))
 
   def hasCommitted(spark: SparkSession, dir: String): Boolean =
-    committed(spark, dir).nonEmpty
+    view(dir).hasCommitted(spark)
 
   /** Collapse the manifests' link fan-out by rewriting every live
     * bucket of every family into one batch directory — see
     * [[BucketStore.compactAll]]; run between folds at a fresh id. */
   def compact(spark: SparkSession, dir: String, batchId: Long): Unit =
-    BucketStore.compactAll(spark, dir, Families, batchId)
+    view(dir).compact(spark, batchId)
 
   /** The maintained view as of the latest committed batch:
     * (groupCols…, n_distinct). */
-  def readCounts(spark: SparkSession, dir: String): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed distinct-count view under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "agg", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readCounts(spark: SparkSession, dir: String): DataFrame =
+    view(dir).read(spark, "agg", "distinct-count view")
 
   /** The value dictionary as of the latest committed batch (the
     * bucket key stays internal). */
-  def readDict(spark: SparkSession, dir: String): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed dictionary under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "dict", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readDict(spark: SparkSession, dir: String): DataFrame =
+    view(dir).read(spark, "dict", "dictionary")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -52,22 +52,16 @@ object StreamingIvmMinMax {
     * volume. */
   val StoreBuckets: Int = 256
 
-  private val Families = Seq("rows", "agg")
-
-  private def committed(spark: SparkSession, dir: String): Seq[Long] =
-    BucketStore.committedAll(spark, dir, Families)
+  private def view(dir: String) = BucketStore.View(dir, Seq("rows", "agg"))
 
   /** Fold ONE static change batch (keyCol, groupCols…, opCol,
     * valueCol) into the maintained store as micro-batch `batchId`;
     * returns the group count of the TOUCHED slice after the fold (-1
-    * for an empty batch) — `fullCount = true` opts into the whole
-    * store's group count, a store-proportional read per batch (r16,
-    * the ADVICE read-cost item; same toggle on every face). */
+    * for an empty batch). */
   def applyBatch(
       batch: DataFrame, batchId: Long, keyCol: String,
       groupCols: Seq[String], opCol: String, valueCol: String,
-      dir: String, storeBuckets: Int = StoreBuckets,
-      fullCount: Boolean = false): Long = {
+      dir: String, storeBuckets: Int = StoreBuckets): Long = {
     val spark = batch.sparkSession
     Seq("__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
@@ -83,52 +77,47 @@ object StreamingIvmMinMax {
       case None => return -1L
     }
 
-    val prevId = committed(spark, dir).filter(_ < batchId).lastOption
-    val dataCols = batch.columns.filterNot(_ == opCol).toSeq
-    val delta = batch.select(dataCols.map(col) :+ col(opCol).as("__op"): _*)
+    view(dir).fold(spark, batchId) { prevId =>
+      val dataCols = batch.columns.filterNot(_ == opCol).toSeq
+      val delta = batch.select(dataCols.map(col) :+ col(opCol).as("__op"): _*)
 
-    // CDC validation (delete images, pk collisions via the key index,
-    // duplicate inserts) — eagerly, before any write
-    val prepared = BucketStore.prepareCdcUpsert(delta, dataCols,
-      Seq(keyCol), groupCols, dir, "rows", batchId, prevId, storeBuckets,
-      "rows")
-    BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
+      // CDC validation (delete images, pk collisions via the key index,
+      // duplicate inserts) — eagerly, before any write
+      val prepared = BucketStore.prepareCdcUpsert(delta, dataCols,
+        Seq(keyCol), groupCols, dir, "rows", batchId, prevId, storeBuckets,
+        "rows")
+      BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
 
-    // the fold's re-agg leg reads the rows just WRITTEN — through the
-    // new batch's own manifest, pruned to the delete rows' buckets
-    // (affected groups ⊆ delete groups, so their buckets are a subset
-    // of this batch-bounded list)
-    val delBuckets = BucketStore.bucketsOf(
-      batch.filter(col(opCol) === "D"), groupCols, storeBuckets)
-    val rowsTemplate = batch.filter(lit(false))
-      .select(dataCols.map(col): _*)
-    val rowsForFold = BucketStore.readBuckets(spark, dir, "rows",
-        Some(batchId), delBuckets, rowsTemplate)
-      .select(dataCols.map(col): _*)
+      // the fold's re-agg leg reads the rows just WRITTEN — through the
+      // new batch's own manifest, pruned to the delete rows' buckets
+      // (affected groups ⊆ delete groups, so their buckets are a subset
+      // of this batch-bounded list)
+      val delBuckets = BucketStore.bucketsOf(
+        batch.filter(col(opCol) === "D"), groupCols, storeBuckets)
+      val rowsTemplate = batch.filter(lit(false))
+        .select(dataCols.map(col): _*)
+      val rowsForFold = BucketStore.readBuckets(spark, dir, "rows",
+          Some(batchId), delBuckets, rowsTemplate)
+        .select(dataCols.map(col): _*)
 
-    val v = col(valueCol)
-    val aggTemplate = batch.filter(lit(false))
-      .select(groupCols.map(col) :+ lit(0L).as("n") :+
-        lit(0).cast("decimal(28,4)").as("s") :+
-        v.as("mn") :+ v.as("mx"): _*)
-    val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
-        touchedAgg, aggTemplate)
-      .select((groupCols ++ Seq("n", "s", "mn", "mx")).map(col): _*)
-    val agg1 = IvmFold.foldMinMax(Some(prevAggSlice),
-      batch.select((groupCols.map(col) :+ col(opCol)) :+ v: _*),
-      rowsForFold.select(groupCols.map(col) :+ v: _*),
-      groupCols, opCol, valueCol)
-    val nTouched = BucketStore.upsert(spark, dir, "agg", batchId, prevId,
-      agg1.withColumn("__g_bucket",
-        BucketStore.bucketize(groupCols, storeBuckets)),
-      touchedAgg)
-    Families.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-    val keep = prevId.toSeq :+ batchId
-    Families.foreach(f => BucketStore.gc(spark, dir, f, keep))
-    if (fullCount)
-      BucketStore.readAll(spark, dir, "agg", Some(batchId), aggTemplate)
-        .count()
-    else nTouched // observed on the write — delta-proportional
+      val v = col(valueCol)
+      val aggTemplate = batch.filter(lit(false))
+        .select(groupCols.map(col) :+ lit(0L).as("n") :+
+          lit(0).cast("decimal(28,4)").as("s") :+
+          v.as("mn") :+ v.as("mx"): _*)
+      val prevAggSlice = BucketStore.readBuckets(spark, dir, "agg", prevId,
+          touchedAgg, aggTemplate)
+        .select((groupCols ++ Seq("n", "s", "mn", "mx")).map(col): _*)
+      val agg1 = IvmFold.foldMinMax(Some(prevAggSlice),
+        batch.select((groupCols.map(col) :+ col(opCol)) :+ v: _*),
+        rowsForFold.select(groupCols.map(col) :+ v: _*),
+        groupCols, opCol, valueCol)
+      // observed on the write — delta-proportional
+      BucketStore.upsert(spark, dir, "agg", batchId, prevId,
+        agg1.withColumn("__g_bucket",
+          BucketStore.bucketize(groupCols, storeBuckets)),
+        touchedAgg)
+    }
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`
@@ -136,39 +125,26 @@ object StreamingIvmMinMax {
   def applyStream(
       changes: DataFrame, keyCol: String, groupCols: Seq[String],
       opCol: String, valueCol: String, dir: String,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStream expects a streaming DataFrame " +
-      "(use applyBatch for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id,
-        applyBatch(b.toDF(), id, keyCol, groupCols, opCol, valueCol, dir))
-    }
-  }
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch)(
+      applyBatch(_, _, keyCol, groupCols, opCol, valueCol, dir))
 
   def hasCommitted(spark: SparkSession, dir: String): Boolean =
-    committed(spark, dir).nonEmpty
+    view(dir).hasCommitted(spark)
 
   /** Collapse the manifests' link fan-out by rewriting every live
     * bucket of every family into one batch directory — see
     * [[BucketStore.compactAll]]; run between folds at a fresh id. */
   def compact(spark: SparkSession, dir: String, batchId: Long): Unit =
-    BucketStore.compactAll(spark, dir, Families, batchId)
+    view(dir).compact(spark, batchId)
 
   /** The maintained aggregate as of the latest committed batch:
     * (groupCols…, n, s, mn, mx) — s the exact decimal sum. */
-  def readAgg(spark: SparkSession, dir: String): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed aggregate under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "agg", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readAgg(spark: SparkSession, dir: String): DataFrame =
+    view(dir).read(spark, "agg", "aggregate")
 
   /** The surviving rows as of the latest committed batch (the
     * `__g_bucket` partition key stays internal). */
-  def readRows(spark: SparkSession, dir: String): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed rows store under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "rows", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readRows(spark: SparkSession, dir: String): DataFrame =
+    view(dir).read(spark, "rows", "rows store")
 }

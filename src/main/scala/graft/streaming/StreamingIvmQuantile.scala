@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -42,20 +42,17 @@ import graft.operators.IvmQuantile
   */
 object StreamingIvmQuantile {
 
-  private val Families = Seq("rows", "counts")
-
-  private def committed(spark: SparkSession, dir: String): Seq[Long] =
-    BucketStore.committedAll(spark, dir, Families)
+  private def view(dir: String) = BucketStore.View(dir, Seq("rows", "counts"))
 
   /** Fold ONE static change batch (keyCol, groupCols…, opCol,
     * valueCol) into the maintained store as micro-batch `batchId`;
-    * returns the count-row total after the fold (-1 empty batch). */
+    * returns the count-row total of the touched slice after the fold
+    * (-1 empty batch). */
   def applyBatch(
       batch: DataFrame, batchId: Long, keyCol: String,
       groupCols: Seq[String], opCol: String, valueCol: String,
       dir: String, lo: Double, hi: Double, buckets: Int,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      fullCount: Boolean = false): Long = {
+      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
     val spark = batch.sparkSession
     Seq("__qb", "__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
@@ -70,41 +67,36 @@ object StreamingIvmQuantile {
       case None => return -1L
     }
 
-    val prevId = committed(spark, dir).filter(_ < batchId).lastOption
-    val dataCols = batch.columns.filterNot(_ == opCol).toSeq
-    val delta = batch.select(dataCols.map(col) :+ col(opCol).as("__op"): _*)
+    view(dir).fold(spark, batchId) { prevId =>
+      val dataCols = batch.columns.filterNot(_ == opCol).toSeq
+      val delta = batch.select(dataCols.map(col) :+ col(opCol).as("__op"): _*)
 
-    // rows keyed by the VALUE bucket — the read path's pruning key;
-    // null values land bucket -1 (SQL percentile ignores them, but the
-    // store keeps the full row set). A pure function of the row's own
-    // columns, so delete images determine their bucket and the slice
-    // validation stays exact.
-    val qb = when(col(valueCol).isNull, lit(-1L))
-      .otherwise(IvmQuantile.bucketIdOf(col(valueCol), lo, hi, buckets))
-    val prepared = BucketStore.prepareCdcUpsertExpr(delta, dataCols,
-      Seq(keyCol), qb, dir, "rows", batchId, prevId, storeBuckets, "rows")
-    BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
+      // rows keyed by the VALUE bucket — the read path's pruning key;
+      // null values land bucket -1 (SQL percentile ignores them, but the
+      // store keeps the full row set). A pure function of the row's own
+      // columns, so delete images determine their bucket and the slice
+      // validation stays exact.
+      val qb = when(col(valueCol).isNull, lit(-1L))
+        .otherwise(IvmQuantile.bucketIdOf(col(valueCol), lo, hi, buckets))
+      val prepared = BucketStore.prepareCdcUpsertExpr(delta, dataCols,
+        Seq(keyCol), qb, dir, "rows", batchId, prevId, storeBuckets, "rows")
+      BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
 
-    val countsTemplate = batch.filter(lit(false))
-      .select(groupCols.map(col) :+ lit(0L).as("__qb") :+
-        lit(0L).as("cnt"): _*)
-    val prevCountsSlice = BucketStore.readBuckets(spark, dir, "counts",
-        prevId, touchedCounts, countsTemplate)
-      .select((groupCols :+ "__qb" :+ "cnt").map(col): _*)
-    val counts = IvmQuantile.foldCounts(Some(prevCountsSlice),
-      batch.select((groupCols.map(col) :+ col(opCol)) :+ col(valueCol): _*),
-      groupCols, opCol, valueCol, lo, hi, buckets)
-    val nTouched = BucketStore.upsert(spark, dir, "counts", batchId, prevId,
-      counts.withColumn("__g_bucket",
-        BucketStore.bucketize(groupCols, storeBuckets)),
-      touchedCounts)
-    Families.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-    val keep = prevId.toSeq :+ batchId
-    Families.foreach(f => BucketStore.gc(spark, dir, f, keep))
-    if (fullCount)
-      BucketStore.readAll(spark, dir, "counts", Some(batchId), countsTemplate)
-        .count()
-    else nTouched // observed on the write — delta-proportional
+      val countsTemplate = batch.filter(lit(false))
+        .select(groupCols.map(col) :+ lit(0L).as("__qb") :+
+          lit(0L).as("cnt"): _*)
+      val prevCountsSlice = BucketStore.readBuckets(spark, dir, "counts",
+          prevId, touchedCounts, countsTemplate)
+        .select((groupCols :+ "__qb" :+ "cnt").map(col): _*)
+      val counts = IvmQuantile.foldCounts(Some(prevCountsSlice),
+        batch.select((groupCols.map(col) :+ col(opCol)) :+ col(valueCol): _*),
+        groupCols, opCol, valueCol, lo, hi, buckets)
+      // observed on the write — delta-proportional
+      BucketStore.upsert(spark, dir, "counts", batchId, prevId,
+        counts.withColumn("__g_bucket",
+          BucketStore.bucketize(groupCols, storeBuckets)),
+        touchedCounts)
+    }
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`
@@ -113,23 +105,18 @@ object StreamingIvmQuantile {
       changes: DataFrame, keyCol: String, groupCols: Seq[String],
       opCol: String, valueCol: String, dir: String,
       lo: Double, hi: Double, buckets: Int,
-      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStream expects a streaming DataFrame " +
-      "(use applyBatch for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatch(b.toDF(), id, keyCol, groupCols, opCol,
-        valueCol, dir, lo, hi, buckets))
-    }
-  }
+      onBatch: (Long, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch)(
+      applyBatch(_, _, keyCol, groupCols, opCol, valueCol, dir, lo, hi, buckets))
 
   def hasCommitted(spark: SparkSession, dir: String): Boolean =
-    committed(spark, dir).nonEmpty
+    view(dir).hasCommitted(spark)
 
   /** Collapse the manifests' link fan-out by rewriting every live
     * bucket of every family into one batch directory — see
     * [[BucketStore.compactAll]]; run between folds at a fresh id. */
   def compact(spark: SparkSession, dir: String, batchId: Long): Unit =
-    BucketStore.compactAll(spark, dir, Families, batchId)
+    view(dir).compact(spark, batchId)
 
   /** Exact PERCENTILE_CONT at `ps` per group, as of the latest
     * committed batch — rows read PRUNED to the candidate value
@@ -138,9 +125,8 @@ object StreamingIvmQuantile {
       spark: SparkSession, dir: String,
       groupCols: Seq[String], valueCol: String, ps: Seq[Double],
       lo: Double, hi: Double, buckets: Int): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed quantile view under $dir")
-    val counts = BucketStore.readAllNonEmpty(spark, dir, "counts", snaps.last)
+    val latest = view(dir).latest(spark, "quantile view")
+    val counts = BucketStore.readAllNonEmpty(spark, dir, "counts", latest)
       .drop("__g_bucket")
     val candQb = IvmQuantile.candidates(counts, groupCols, ps)
       .select(col("__qb")).distinct()
@@ -153,13 +139,13 @@ object StreamingIvmQuantile {
     // template-schema fallback fail on an unrelated missing column
     // (r16, the ADVICE diagnosability item)
     val rowsManifest = BucketStore.readManifest(spark, dir, "rows",
-      Some(snaps.last))
+      Some(latest))
     val unresolved = candQb.filterNot(rowsManifest.contains)
     require(unresolved.isEmpty,
       s"candidate value buckets ${unresolved.sorted.mkString(",")} resolve " +
         "to no stored rows — (lo, hi, buckets) must be the view's " +
         "creation-time values (a mismatch re-buckets history)")
-    val rows = BucketStore.readBuckets(spark, dir, "rows", Some(snaps.last),
+    val rows = BucketStore.readBuckets(spark, dir, "rows", Some(latest),
         candQb, counts)
       .select((groupCols :+ valueCol).map(col): _*)
     IvmQuantile.percentileCont(counts, rows, groupCols, valueCol, ps,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -36,18 +36,15 @@ import graft.operators.IvmTopK
   */
 object StreamingIvmTopK {
 
-  private val Families = Seq("counts", "topk")
-
-  private def committed(spark: SparkSession, dir: String): Seq[Long] =
-    BucketStore.committedAll(spark, dir, Families)
+  private def view(dir: String) = BucketStore.View(dir, Seq("counts", "topk"))
 
   /** Fold ONE static change batch (groupCols…, opCol, keyCol
     * [, weightCol]) into the maintained store as micro-batch
-    * `batchId`; returns the view's row count after the fold (-1 for an
-    * empty batch). `weightCol` switches the maintained measure to the
-    * per-key positive-long weight SUM — [[IvmTopK]]'s weighted face
-    * (top customers by revenue); delete rows must carry the weight
-    * they remove.
+    * `batchId`; returns the view's row count over the touched slice
+    * after the fold (-1 for an empty batch). `weightCol` switches the
+    * maintained measure to the per-key positive-long weight SUM —
+    * [[IvmTopK]]'s weighted face (top customers by revenue); delete
+    * rows must carry the weight they remove.
     *
     * Per batch the fold runs one guard job over the delta
     * ([[BucketStore.guardBatch]]: emptiness, the op refusal and the
@@ -60,8 +57,7 @@ object StreamingIvmTopK {
       groupCols: Seq[String], opCol: String, keyCol: String, k: Int,
       dir: String,
       storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
-      weightCol: Option[String] = None,
-      fullCount: Boolean = false): Long = {
+      weightCol: Option[String] = None): Long = {
     val spark = batch.sparkSession
     Seq("__g_bucket", "__k_bucket").foreach(c =>
       require(!batch.columns.contains(c),
@@ -77,39 +73,33 @@ object StreamingIvmTopK {
       case None => return -1L
     }
 
-    val prevId = committed(spark, dir).filter(_ < batchId).lastOption
-    val countsTemplate = batch.filter(lit(false))
-      .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt"): _*)
-    val topkTemplate = batch.filter(lit(false))
-      .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt") :+
-        lit(0).as("rnk"): _*)
-    val prevState = prevId.map { _ =>
-      (BucketStore.readBuckets(spark, dir, "topk", prevId, deltaBuckets,
-          topkTemplate).drop("__g_bucket"),
-        BucketStore.readBuckets(spark, dir, "counts", prevId, deltaBuckets,
-          countsTemplate).drop("__g_bucket"))
+    view(dir).fold(spark, batchId) { prevId =>
+      val countsTemplate = batch.filter(lit(false))
+        .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt"): _*)
+      val topkTemplate = batch.filter(lit(false))
+        .select(groupCols.map(col) :+ col(keyCol) :+ lit(0L).as("cnt") :+
+          lit(0).as("rnk"): _*)
+      val prevState = prevId.map { _ =>
+        (BucketStore.readBuckets(spark, dir, "topk", prevId, deltaBuckets,
+            topkTemplate).drop("__g_bucket"),
+          BucketStore.readBuckets(spark, dir, "counts", prevId, deltaBuckets,
+            countsTemplate).drop("__g_bucket"))
+      }
+
+      val (topkAff, countsAff) = IvmTopK.fold(prevState,
+        batch.select(((groupCols.map(col) :+ col(opCol)) :+ col(keyCol)) ++
+          weightCol.map(col): _*),
+        groupCols, opCol, keyCol, k, weightCol)
+
+      // counts first (the view derives from them), then the view; commit
+      // is the pair's intersection either way
+      val bucketize = BucketStore.bucketize(groupCols, storeBuckets)
+      BucketStore.upsert(spark, dir, "counts", batchId, prevId,
+        countsAff.withColumn("__g_bucket", bucketize), deltaBuckets)
+      // the view rows of the touched buckets — delta-proportional
+      BucketStore.upsert(spark, dir, "topk", batchId, prevId,
+        topkAff.withColumn("__g_bucket", bucketize), deltaBuckets)
     }
-
-    val (topkAff, countsAff) = IvmTopK.fold(prevState,
-      batch.select(((groupCols.map(col) :+ col(opCol)) :+ col(keyCol)) ++
-        weightCol.map(col): _*),
-      groupCols, opCol, keyCol, k, weightCol)
-
-    // counts first (the view derives from them), then the view; commit
-    // is the pair's intersection either way
-    val bucketize = BucketStore.bucketize(groupCols, storeBuckets)
-    BucketStore.upsert(spark, dir, "counts", batchId, prevId,
-      countsAff.withColumn("__g_bucket", bucketize), deltaBuckets)
-    // the view rows of the touched buckets — delta-proportional
-    val nTouched = BucketStore.upsert(spark, dir, "topk", batchId, prevId,
-      topkAff.withColumn("__g_bucket", bucketize), deltaBuckets)
-    Families.foreach(f => BucketStore.commit(spark, dir, f, batchId))
-    val keep = prevId.toSeq :+ batchId
-    Families.foreach(f => BucketStore.gc(spark, dir, f, keep))
-    if (fullCount)
-      BucketStore.readAll(spark, dir, "topk", Some(batchId), topkTemplate)
-        .count()
-    else nTouched
   }
 
   /** Wire the per-batch fold onto a STREAMING change frame; `onBatch`
@@ -118,38 +108,25 @@ object StreamingIvmTopK {
       changes: DataFrame, groupCols: Seq[String], opCol: String,
       keyCol: String, k: Int, dir: String,
       onBatch: (Long, Long) => Unit = (_, _) => (),
-      weightCol: Option[String] = None): DataStreamWriter[Row] = {
-    require(changes.isStreaming, "applyStream expects a streaming DataFrame " +
-      "(use applyBatch for static deltas)")
-    changes.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      onBatch(id, applyBatch(b.toDF(), id, groupCols, opCol, keyCol, k, dir,
-        weightCol = weightCol))
-    }
-  }
+      weightCol: Option[String] = None): DataStreamWriter[Row] =
+    BucketStore.View.stream(changes, onBatch)(
+      applyBatch(_, _, groupCols, opCol, keyCol, k, dir, weightCol = weightCol))
 
   def hasCommitted(spark: SparkSession, dir: String): Boolean =
-    committed(spark, dir).nonEmpty
+    view(dir).hasCommitted(spark)
 
   /** Collapse the manifests' link fan-out by rewriting every live
     * bucket of every family into one batch directory — see
     * [[BucketStore.compactAll]]; run between folds at a fresh id. */
   def compact(spark: SparkSession, dir: String, batchId: Long): Unit =
-    BucketStore.compactAll(spark, dir, Families, batchId)
+    view(dir).compact(spark, batchId)
 
   /** The maintained view as of the latest committed batch:
     * (groupCols…, keyCol, cnt, rnk), the bucket key kept internal. */
-  def readTopK(spark: SparkSession, dir: String): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed top-k view under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "topk", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readTopK(spark: SparkSession, dir: String): DataFrame =
+    view(dir).read(spark, "topk", "top-k view")
 
   /** The maintained counts store as of the latest committed batch. */
-  def readCounts(spark: SparkSession, dir: String): DataFrame = {
-    val snaps = committed(spark, dir)
-    require(snaps.nonEmpty, s"no committed counts store under $dir")
-    BucketStore.readAllNonEmpty(spark, dir, "counts", snaps.last)
-      .drop("__g_bucket")
-  }
+  def readCounts(spark: SparkSession, dir: String): DataFrame =
+    view(dir).read(spark, "counts", "counts store")
 }

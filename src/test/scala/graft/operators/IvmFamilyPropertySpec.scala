@@ -218,8 +218,9 @@ class IvmFamilyPropertySpec extends AnyFunSuite {
   }
 
   test("composed pipeline (deltaJoin → compress → deltaJoin → foldAggSigned) tracks the three-way model (seeded)") {
-    // the ivm7/StreamingIvmCompose algebra under arbitrary CDC
-    // interleavings on ALL THREE bases at once — reprices landing on
+    // the ivm7 kernel algebra (the signed, many-to-one form of what
+    // StreamingIvmComposeN maintains with weighted multiset
+    // intermediates) under arbitrary CDC interleavings on ALL THREE bases at once — reprices landing on
     // dying orders (stage-1 cross-term cancellations), upstream deltas
     // landing on moved dims (stage-2 cross term), groups emptying and
     // reappearing. Two invariants per step: the COMPRESSED stage-1
@@ -283,7 +284,7 @@ class IvmFamilyPropertySpec extends AnyFunSuite {
         val dC = (cDels.map(t => (t._1, t._2, "D")) ++
           cIns.map(t => (t._1, t._2, "I"))).toDF("ck", "g", "op")
 
-        // stage 1 + net-compress (the StreamingIvmCompose step)
+        // stage 1 + net-compress to signed rows (many-to-one: |net| ≤ 1)
         val d1 = IvmJoin.deltaJoin(dL, dO,
           lBefore.toDF("lk", "ok", "price"), oBefore.toDF("ok", "ck"),
           Seq("ok"), "op", Seq("lk", "ck", "price"))

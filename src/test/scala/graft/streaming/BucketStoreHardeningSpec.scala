@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    marker before rewriting anything, so a crash mid-rewrite reads
   *    as uncommitted and recovery falls back to the previous committed
   *    id (the r15 layout rewrote under a live marker);
-  *  - [[BucketStore.gc]] retains every committed id at or above
-  *    max(keepIds) — an out-of-band compaction committed above the
-  *    stream's current id survives the next fold's keep-two window;
+  *  - GC retains every committed id at or above the fold's own — an
+  *    out-of-band compaction committed above the stream's current id
+  *    survives the next fold's keep-two window;
   *  - IN-FOLD AUTO-COMPACTION: when a write would leave more than
   *    `maxLinks` distinct pointed batch directories, the fold absorbs
   *    the untouched live buckets into its own batch dir — the link
@@ -33,6 +33,19 @@ class BucketStoreHardeningSpec extends AnyFunSuite {
     rows.toDF("k", "v").withColumn("__g_bucket",
       BucketStore.bucketize(Seq("k"), storeBuckets))
 
+  /** Upsert `rows` into the single-family store "f" as one committed
+    * fold `id`; `beforeCommit` runs after the write, before the marker. */
+  private def fold(dir: String, id: Long, rows: Seq[(Long, Long)], sb: Int,
+      maxLinks: Int = BucketStore.DefaultMaxLinks)(
+      beforeCommit: => Unit = ()): Seq[Int] =
+    BucketStore.View(dir, Seq("f")).fold(spark, id) { prev =>
+      val touched = BucketStore.bucketsOf(rows.toDF("k", "v"), Seq("k"), sb)
+      BucketStore.upsert(spark, dir, "f", id, prev, rowsDf(rows, sb),
+        touched, maxLinks)
+      beforeCommit
+      touched
+    }
+
   private def ls(p: String): Seq[String] = {
     val f = new java.io.File(p)
     if (!f.exists) Nil else f.listFiles().map(_.getName).toSeq.sorted
@@ -41,26 +54,23 @@ class BucketStoreHardeningSpec extends AnyFunSuite {
   test("redelivered batch's first write drops the stale marker; recovery falls back until re-commit") {
     val dir = tmp("bs-redeliver")
     val sb = 16
-    def touched(rows: Seq[(Long, Long)]) =
-      BucketStore.bucketsOf(rows.toDF("k", "v"), Seq("k"), sb)
     val b0 = Seq((1L, 10L), (2L, 20L))
-    BucketStore.upsert(spark, dir, "f", 0L, None, rowsDf(b0, sb), touched(b0))
-    BucketStore.commit(spark, dir, "f", 0L)
+    fold(dir, 0L, b0, sb)()
     val b1 = Seq((1L, 11L))
-    BucketStore.upsert(spark, dir, "f", 1L, Some(0L), rowsDf(b1, sb), touched(b1))
-    BucketStore.commit(spark, dir, "f", 1L)
+    fold(dir, 1L, b1, sb)()
     assert(BucketStore.committedIn(spark, dir, "f") == Set(0L, 1L))
     // crash AFTER commit, foreachBatch redelivers id 1: its first
     // write must de-commit the id before rewriting — a crash between
-    // here and the re-commit now reads batch 0 as latest committed
-    BucketStore.upsert(spark, dir, "f", 1L, Some(0L), rowsDf(b1, sb), touched(b1))
-    assert(BucketStore.committedIn(spark, dir, "f") == Set(0L),
-      "stale marker must be gone until the redelivered batch re-commits")
-    val atPrev = BucketStore.readAllNonEmpty(spark, dir, "f", 0L)
-      .select("k", "v").as[(Long, Long)].collect().toSet
-    assert(atPrev == b0.toSet)
+    // the write and the re-commit reads batch 0 as latest committed
+    fold(dir, 1L, b1, sb) {
+      assert(BucketStore.committedIn(spark, dir, "f") == Set(0L),
+        "stale marker must be gone until the redelivered batch re-commits")
+      val atPrev = BucketStore.readAllNonEmpty(spark, dir, "f", 0L)
+        .select("k", "v").as[(Long, Long)].collect().toSet
+      assert(atPrev == b0.toSet)
+    }
     // the redelivery completes: identical state, marker restored
-    BucketStore.commit(spark, dir, "f", 1L)
+    assert(BucketStore.committedIn(spark, dir, "f") == Set(0L, 1L))
     val after = BucketStore.readAllNonEmpty(spark, dir, "f", 1L)
       .select("k", "v").as[(Long, Long)].collect().toSet
     assert(after == Set((1L, 11L), (2L, 20L)))
@@ -69,19 +79,14 @@ class BucketStoreHardeningSpec extends AnyFunSuite {
   test("gc keeps committed ids above keepIds.max (out-of-band compaction survives a lower fold's keep-two window)") {
     val dir = tmp("bs-gc-high")
     val sb = 16
-    def fold(id: Long, prev: Option[Long], rows: Seq[(Long, Long)]): Unit = {
-      BucketStore.upsert(spark, dir, "f", id, prev, rowsDf(rows, sb),
-        BucketStore.bucketsOf(rows.toDF("k", "v"), Seq("k"), sb))
-      BucketStore.commit(spark, dir, "f", id)
-    }
-    fold(0L, None, Seq((1L, 10L)))
-    fold(1L, Some(0L), Seq((2L, 20L)))
+    fold(dir, 0L, Seq((1L, 10L)), sb)()
+    fold(dir, 1L, Seq((2L, 20L)), sb)()
     BucketStore.compactAll(spark, dir, Seq("f"), 5L)
     assert(ls(s"$dir/f").contains("batch=5"))
-    // a fold at a LOWER id (the stream's checkpoint counter) now GCs
-    // with its own keep-two window — the committed compaction at 5
+    // a fold at a LOWER id (the stream's checkpoint counter) GCs with
+    // its own keep-two window (1, 2) — the committed compaction at 5
     // must survive it
-    BucketStore.gc(spark, dir, "f", Seq(0L, 1L))
+    fold(dir, 2L, Seq((3L, 30L)), sb)()
     assert(ls(s"$dir/f").contains("batch=5"),
       "gc deleted a committed id above keepIds.max")
     val at5 = BucketStore.readAllNonEmpty(spark, dir, "f", 5L)
@@ -97,7 +102,6 @@ class BucketStoreHardeningSpec extends AnyFunSuite {
     val dir = tmp("bs-autocompact")
     val sb = 64
     val maxLinks = 8
-    var prev: Option[Long] = None
     // model the store per BUCKET: an upsert's rows are the POST-state
     // of the touched buckets, so a hash-collision fold REPLACES that
     // bucket's prior content
@@ -110,12 +114,7 @@ class BucketStoreHardeningSpec extends AnyFunSuite {
       // would grow with the fold count
       val rows = Seq((i.toLong, i.toLong))
       val id = i.toLong
-      val touched =
-        BucketStore.bucketsOf(rows.toDF("k", "v"), Seq("k"), sb)
-      BucketStore.upsert(spark, dir, "f", id, prev, rowsDf(rows, sb),
-        touched, maxLinks = maxLinks)
-      BucketStore.commit(spark, dir, "f", id)
-      BucketStore.gc(spark, dir, "f", prev.toSeq :+ id)
+      val touched = fold(dir, id, rows, sb, maxLinks)()
       byBucket(touched.head) = rows.toSet
       val expected = byBucket.values.flatten.toSet
       val fan = BucketStore.readManifest(spark, dir, "f", Some(id))
@@ -126,7 +125,6 @@ class BucketStoreHardeningSpec extends AnyFunSuite {
       val got = BucketStore.readAllNonEmpty(spark, dir, "f", id)
         .select("k", "v").as[(Long, Long)].collect().toSet
       assert(got == expected, s"fold $i")
-      prev = Some(id)
     }
     assert(maxFan <= maxLinks, s"fan-out reached $maxFan > $maxLinks")
     assert(maxFan >= 2, "absorption fired so early the bound was never exercised")

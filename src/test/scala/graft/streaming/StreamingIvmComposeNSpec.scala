@@ -10,11 +10,12 @@ import StreamingIvmComposeN.BaseSpec
 
 /** N-way composed IVM with general multiplicities: the maintained
   * view over A ⋈ B ⋈ C equals the full chain recompute after every
-  * micro-batch even when a stage is MANY-TO-MANY (the shape
-  * StreamingIvmCompose refuses), the intermediate multiset store
-  * equals the recomputed prefix join's projected multiset, redelivery
-  * is idempotent, a 4-way chain restarts from checkpoint, and CDC
-  * violations fail loudly before anything commits. */
+  * micro-batch even when a stage is MANY-TO-MANY, the intermediate
+  * multiset store equals the recomputed prefix join's projected
+  * multiset, redelivery is idempotent, a 4-way chain restarts from
+  * checkpoint, and CDC violations fail loudly before anything commits.
+  * The 2- and 3-base many-to-one instances are pinned by
+  * StreamingIvmJoinViewSpec and StreamingIvmWarehouseViewSpec. */
 @org.scalatest.tags.Slow
 class StreamingIvmComposeNSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "stream-ivmN")
@@ -130,8 +131,8 @@ class StreamingIvmComposeNSpec extends AnyFunSuite {
     assert(gotI == wantI)
     // and the chain genuinely exercised a many-to-many stage: the
     // FINAL intermediate still carries a row with multiplicity > 1
-    // (k1=2: a3 and a4 both meet b3) — the exact shape
-    // StreamingIvmCompose's many-to-one contract refuses
+    // (k1=2: a3 and a4 both meet b3) — the shape a pk-keyed
+    // intermediate could not hold
     assert(gotI.exists(_.last.asInstanceOf[Long] > 1L), gotI.toString)
   }
 

@@ -6,15 +6,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Exact.dec
+import StreamingIvmComposeN.BaseSpec
 
-/** Streaming JOIN-view IVM: the maintained per-group (n, s) over
-  * `R ⋈ S` equals the full join recompute over surviving rows after
-  * every micro-batch — R-only, S-only, and mixed batches (the cross
-  * term) — redelivery is idempotent, restart recovers from the
-  * snapshot triple, and per-side CDC violations fail loudly before
-  * anything commits. */
+/** Streaming JOIN-view IVM — the 2-base [[StreamingIvmComposeN]]
+  * chain: the maintained per-group (n, s) over `R ⋈ S` equals the full
+  * join recompute over surviving rows after every micro-batch —
+  * R-only, S-only, and mixed batches (the cross term) — redelivery is
+  * idempotent, restart recovers from the committed families, and
+  * per-side CDC violations fail loudly before anything commits. */
 @org.scalatest.tags.Slow
-class StreamingIvmJoinSpec extends AnyFunSuite {
+class StreamingIvmJoinViewSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "stream-ivm4")
   import spark.implicits._
 
@@ -26,6 +27,11 @@ class StreamingIvmJoinSpec extends AnyFunSuite {
     ("R", op, Some(rk), None, ck, Some(rv), None)
   private def s(op: String, sk: Long, ck: Long, g: String): Chg =
     ("S", op, None, Some(sk), ck, None, Some(g))
+
+  private val bases = Seq(
+    BaseSpec("R", Seq("rk", "ck", "rv"), "rk"),
+    BaseSpec("S", Seq("sk", "ck", "g"), "sk"))
+  private val stages = Seq(Seq("ck"))
 
   private val batches: Seq[Seq[Chg]] = Seq(
     // seed both sides
@@ -72,19 +78,20 @@ class StreamingIvmJoinSpec extends AnyFunSuite {
     b.toDF("side", "op", "rk", "sk", "ck", "rv", "g")
 
   private def apply(b: Seq[Chg], id: Long, dir: String): Long =
-    StreamingIvmJoin.applyBatch(chgDf(b), id, "side", "op",
-      Seq("rk", "ck", "rv"), Seq("sk", "ck", "g"), "rk", "sk",
-      Seq("ck"), Seq("g"), "rv", dir)
+    StreamingIvmComposeN.applyBatch(chgDf(b), id, "side", "op", bases,
+      stages, Seq("g"), "rv", dir)
+
+  private def view(dir: String): Seq[(String, Long, Double)] =
+    collect(StreamingIvmComposeN.readView(spark, dir, bases))
 
   test("maintained ≡ full join recompute after every batch — R-only, S-only, and cross-term batches") {
     val dir = java.nio.file.Files.createTempDirectory("ivm4").toString
     val got = scala.collection.mutable.Map[Long, Seq[(String, Long, Double)]]()
     val input = MemoryStream[Chg](spark)
-    val q = StreamingIvmJoin.applyStream(
+    val q = StreamingIvmComposeN.applyStream(
         input.toDF().toDF("side", "op", "rk", "sk", "ck", "rv", "g"),
-        "side", "op", Seq("rk", "ck", "rv"), Seq("sk", "ck", "g"),
-        "rk", "sk", Seq("ck"), Seq("g"), "rv", dir,
-        (id, _) => got(id) = collect(StreamingIvmJoin.readView(spark, dir)))
+        "side", "op", bases, stages, Seq("g"), "rv", dir,
+        (id, _) => got(id) = view(dir))
       .start()
     try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
@@ -93,17 +100,17 @@ class StreamingIvmJoinSpec extends AnyFunSuite {
     assert(got(3).exists(t => t._1 == "c" && t._3 == 11.0))
     // both rows stores track survivors
     val (rr, ss) = surviving(3)
-    assert(StreamingIvmJoin.readRows(spark, dir, "rows_r").count() == rr.size)
-    assert(StreamingIvmJoin.readRows(spark, dir, "rows_s").count() == ss.size)
+    assert(StreamingIvmComposeN.readBase(spark, dir, bases, "R").count() == rr.size)
+    assert(StreamingIvmComposeN.readBase(spark, dir, bases, "S").count() == ss.size)
   }
 
   test("redelivered batch folds to identical state") {
     val dir = java.nio.file.Files.createTempDirectory("ivm4-redeliver").toString
     apply(batches(0), 0L, dir)
     apply(batches(3), 1L, dir) // skip ahead is fine: ids are ordered labels
-    val before = collect(StreamingIvmJoin.readView(spark, dir))
+    val before = view(dir)
     apply(batches(3), 1L, dir)
-    assert(collect(StreamingIvmJoin.readView(spark, dir)) == before)
+    assert(view(dir) == before)
   }
 
   test("maintained store survives stop + restart from checkpoint (AvailableNow file source)") {
@@ -116,20 +123,19 @@ class StreamingIvmJoinSpec extends AnyFunSuite {
       val in = spark.readStream.schema(
         "side STRING, op STRING, rk BIGINT, sk BIGINT, ck BIGINT, rv DOUBLE, g STRING")
         .parquet(src)
-      val q = StreamingIvmJoin.applyStream(in, "side", "op",
-          Seq("rk", "ck", "rv"), Seq("sk", "ck", "g"), "rk", "sk",
-          Seq("ck"), Seq("g"), "rv", dir)
+      val q = StreamingIvmComposeN.applyStream(in, "side", "op", bases,
+          stages, Seq("g"), "rv", dir)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ck)
         .start()
       q.awaitTermination()
     }
     writeDelta(batches(0)); run()
-    assert(collect(StreamingIvmJoin.readView(spark, dir)) == recompute(0))
+    assert(view(dir) == recompute(0))
     writeDelta(batches(1)); writeDelta(batches(2)); writeDelta(batches(3)); run()
-    assert(collect(StreamingIvmJoin.readView(spark, dir)) == recompute(3))
+    assert(view(dir) == recompute(3))
     run()
-    assert(collect(StreamingIvmJoin.readView(spark, dir)) == recompute(3))
+    assert(view(dir) == recompute(3))
   }
 
   test("malformed deltas fail loudly BEFORE anything commits — per side") {
@@ -137,7 +143,7 @@ class StreamingIvmJoinSpec extends AnyFunSuite {
     val e0 = intercept[IllegalArgumentException](apply(
       Seq(("X", "I", Some(1L), None, 1L, Some(1.0), None)), 0L, dir))
     assert(e0.getMessage.contains("side"))
-    assert(!StreamingIvmJoin.hasCommitted(spark, dir))
+    assert(!StreamingIvmComposeN.hasCommitted(spark, dir, bases))
     apply(batches(0), 0L, dir)
     val e1 = intercept[IllegalArgumentException](apply(
       Seq(r("D", 99L, 1L, 10.0)), 1L, dir))
@@ -145,6 +151,6 @@ class StreamingIvmJoinSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](apply(
       Seq(s("I", 1L, 3L, "z")), 1L, dir)) // live dim key
     assert(e2.getMessage.contains("(S side)"))
-    assert(collect(StreamingIvmJoin.readView(spark, dir)) == recompute(0))
+    assert(view(dir) == recompute(0))
   }
 }

@@ -6,18 +6,21 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Exact.dec
+import StreamingIvmComposeN.BaseSpec
 
-/** Streaming COMPOSED IVM: the maintained per-group (n, s) over
-  * `(L ⋈ O) ⋈ C` equals the full three-way recompute over surviving
-  * rows after every micro-batch — L-only, O-only, C-only and mixed
-  * batches including BOTH stage cross terms (a reprice whose order
-  * dies in the same batch; an upstream delta landing on a dim row
-  * moved in the same batch) — the maintained intermediate join store
-  * tracks the recomputed L⋈O, redelivery is idempotent, restart
-  * recovers from the snapshot quintuple, and CDC violations fail
-  * loudly before anything commits. */
+/** Streaming COMPOSED IVM over the warehouse chain — the 3-base
+  * [[StreamingIvmComposeN]] instance `(L ⋈ O) ⋈ C` with many-to-one
+  * stages (the fact→dim snowflake shape): the maintained per-group
+  * (n, s) equals the full three-way recompute over surviving rows
+  * after every micro-batch — L-only, O-only, C-only and mixed batches
+  * including BOTH stage cross terms (a reprice whose order dies in the
+  * same batch; an upstream delta landing on a dim row moved in the
+  * same batch) — the maintained intermediate multiset tracks the
+  * recomputed L⋈O, redelivery is idempotent, restart recovers from the
+  * committed families, and CDC violations fail loudly before anything
+  * commits. */
 @org.scalatest.tags.Slow
-class StreamingIvmComposeSpec extends AnyFunSuite {
+class StreamingIvmWarehouseViewSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "stream-ivm7")
   import spark.implicits._
 
@@ -31,6 +34,12 @@ class StreamingIvmComposeSpec extends AnyFunSuite {
     ("O", op, None, Some(ok), Some(ck), None, None)
   private def c(op: String, ck: Long, g: String): Chg =
     ("C", op, None, None, Some(ck), None, Some(g))
+
+  private val bases = Seq(
+    BaseSpec("L", Seq("lk", "ok", "price"), "lk"),
+    BaseSpec("O", Seq("ok", "ck"), "ok"),
+    BaseSpec("C", Seq("ck", "g"), "ck"))
+  private val stages = Seq(Seq("ok"), Seq("ck"))
 
   private val batches: Seq[Seq[Chg]] = Seq(
     // 0: seed all three bases
@@ -90,46 +99,46 @@ class StreamingIvmComposeSpec extends AnyFunSuite {
     b.toDF("side", "op", "lk", "ok", "ck", "price", "g")
 
   private def apply(b: Seq[Chg], id: Long, dir: String): Long =
-    StreamingIvmCompose.applyBatch(chgDf(b), id, "side", "op",
-      Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-      "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir)
+    StreamingIvmComposeN.applyBatch(chgDf(b), id, "side", "op", bases,
+      stages, Seq("g"), "price", dir)
+
+  private def view(dir: String): Seq[(String, Long, Double)] =
+    collect(StreamingIvmComposeN.readView(spark, dir, bases))
 
   test("maintained ≡ full three-way recompute after every batch — per-side and cross-term batches") {
     val dir = java.nio.file.Files.createTempDirectory("ivm7").toString
     val got = scala.collection.mutable.Map[Long, Seq[(String, Long, Double)]]()
     val input = MemoryStream[Chg](spark)
-    val q = StreamingIvmCompose.applyStream(
+    val q = StreamingIvmComposeN.applyStream(
         input.toDF().toDF("side", "op", "lk", "ok", "ck", "price", "g"),
-        "side", "op",
-        Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-        "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir,
-        (id, _) => got(id) = collect(StreamingIvmCompose.readView(spark, dir)))
+        "side", "op", bases, stages, Seq("g"), "price", dir,
+        (id, _) => got(id) = view(dir))
       .start()
     try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     (0 to 4).foreach(i => assert(got(i) == recompute(i), s"batch $i"))
     // the final state: customer 100 (group d) holds l3 repriced + l4;
     // group c emptied out and disappeared
-    assert(got(4) == Seq(("b", 0L, 0.0)).filter(_ => false) ++
-      Seq(("d", 2L, 5.5)))
-    // the maintained intermediate join tracks the recomputed L⋈O
+    assert(got(4) == Seq(("d", 2L, 5.5)))
+    // the maintained intermediate tracks the recomputed L⋈O, projected
+    // to what stage 2 consumes, with counted multiplicity
     val (ll, oo, _) = surviving(4)
     val wantLo = ll.toDF("lk", "ok", "price").join(oo.toDF("ok", "ck"), Seq("ok"))
-      .select(col("lk"), col("ck"), col("price"))
+      .groupBy(col("ck"), col("price")).agg(count(lit(1)).as("__mult"))
       .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val gotLo = StreamingIvmCompose.readRows(spark, dir, "rows_lo")
-      .select(col("lk"), col("ck"), col("price"))
+    val gotLo = StreamingIvmComposeN.readInter(spark, dir, bases, 1)
+      .select(col("ck"), col("price"), col("__mult"))
       .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    assert(gotLo == wantLo)
+    assert(gotLo.nonEmpty && gotLo == wantLo)
   }
 
   test("redelivered batch folds to identical state") {
     val dir = java.nio.file.Files.createTempDirectory("ivm7-redeliver").toString
     batches.take(4).zipWithIndex.foreach { case (b, i) => apply(b, i.toLong, dir) }
     apply(batches(4), 4L, dir)
-    val before = collect(StreamingIvmCompose.readView(spark, dir))
+    val before = view(dir)
     apply(batches(4), 4L, dir) // the crash-replay: same id, same rows
-    assert(collect(StreamingIvmCompose.readView(spark, dir)) == before)
+    assert(view(dir) == before)
     assert(before == recompute(4))
   }
 
@@ -147,22 +156,21 @@ class StreamingIvmComposeSpec extends AnyFunSuite {
         "side STRING, op STRING, lk BIGINT, ok BIGINT, ck BIGINT, price DOUBLE, g STRING")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-      val q = StreamingIvmCompose.applyStream(in, "side", "op",
-          Seq("lk", "ok", "price"), Seq("ok", "ck"), Seq("ck", "g"),
-          "lk", "ok", "ck", Seq("ok"), Seq("ck"), Seq("g"), "price", dir)
+      val q = StreamingIvmComposeN.applyStream(in, "side", "op", bases,
+          stages, Seq("g"), "price", dir)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ck)
         .start()
       q.awaitTermination()
     }
     writeDelta(batches(0)); run()
-    assert(collect(StreamingIvmCompose.readView(spark, dir)) == recompute(0))
+    assert(view(dir) == recompute(0))
     writeDelta(batches(1)); writeDelta(batches(2)); run()
-    assert(collect(StreamingIvmCompose.readView(spark, dir)) == recompute(2))
+    assert(view(dir) == recompute(2))
     writeDelta(batches(3)); writeDelta(batches(4)); run()
-    assert(collect(StreamingIvmCompose.readView(spark, dir)) == recompute(4))
+    assert(view(dir) == recompute(4))
     run()
-    assert(collect(StreamingIvmCompose.readView(spark, dir)) == recompute(4))
+    assert(view(dir) == recompute(4))
   }
 
   test("malformed deltas fail loudly BEFORE anything commits — per side") {
@@ -170,7 +178,7 @@ class StreamingIvmComposeSpec extends AnyFunSuite {
     val e0 = intercept[IllegalArgumentException](apply(
       Seq(("X", "I", Some(1L), Some(1L), None, Some(1.0), None)), 0L, dir))
     assert(e0.getMessage.contains("side"))
-    assert(!StreamingIvmCompose.hasCommitted(spark, dir))
+    assert(!StreamingIvmComposeN.hasCommitted(spark, dir, bases))
     apply(batches(0), 0L, dir)
     val e1 = intercept[IllegalArgumentException](apply(
       Seq(l("D", 99L, 10L, 10.0)), 1L, dir))
@@ -181,6 +189,6 @@ class StreamingIvmComposeSpec extends AnyFunSuite {
     val e3 = intercept[IllegalArgumentException](apply(
       Seq(c("D", 100L, "zzz")), 1L, dir)) // delete image disagrees
     assert(e3.getMessage.contains("(C side)"))
-    assert(collect(StreamingIvmCompose.readView(spark, dir)) == recompute(0))
+    assert(view(dir) == recompute(0))
   }
 }
