@@ -639,501 +639,6 @@ object IvmScale {
            |""".stripMargin
     }
 
-    // ---- the 3-base composed chain L(lk, ok, price) ⋈ O(ok, ck) ⋈
-    // C(ck, g) → γ(g; n, Σ price) on its deployment path
-    // (StreamingIvmComposeN.applyBatch end to end), shared by the
-    // write-law sections r15w, r16w and r16a: a store seeded with n L
-    // rows, a fixed mixed delta, and the bytes one batch writes
-    import graft.streaming.StreamingIvmComposeN
-    val chain3 = Seq(
-      StreamingIvmComposeN.BaseSpec("L", Seq("lk", "ok", "price"), "lk"),
-      StreamingIvmComposeN.BaseSpec("O", Seq("ok", "ck"), "ok"),
-      StreamingIvmComposeN.BaseSpec("C", Seq("ck", "g"), "ck"))
-    def fold3(d: DataFrame, id: Long, dir: String, buckets: Int): Long =
-      StreamingIvmComposeN.applyBatch(d, id, "side", "op", chain3,
-        Seq(Seq("ok"), Seq("ck")), Seq("g"), "price", dir,
-        storeBuckets = buckets)
-    val nOrdersOf = (n: Long) => n / cOrdersPer
-    def seedDir(tag: String, n: Long, buckets: Int): String = {
-      val dir = s"$out/${tag}_${n}_$buckets"
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val nOrders = nOrdersOf(n)
-      val lSeed = spark.range(0L, n).select(lit("L").as("side"),
-        lit("I").as("op"), col("id").as("lk"),
-        (col("id") % nOrders).as("ok"), lit(null).cast("long").as("ck"),
-        col("id").cast("double").as("price"),
-        lit(null).cast("string").as("g"))
-      val oSeed = spark.range(0L, nOrders).select(lit("O").as("side"),
-        lit("I").as("op"), lit(null).cast("long").as("lk"),
-        col("id").as("ok"), (col("id") % cDims).as("ck"),
-        lit(null).cast("double").as("price"),
-        lit(null).cast("string").as("g"))
-      val cSeed = spark.range(0L, cDims).select(lit("C").as("side"),
-        lit("I").as("op"), lit(null).cast("long").as("lk"),
-        lit(null).cast("long").as("ok"), col("id").as("ck"),
-        lit(null).cast("double").as("price"),
-        (col("id") % 100).cast("string").as("g"))
-      fold3(lSeed.unionByName(oSeed).unionByName(cSeed), 0L, dir, buckets)
-      dir
-    }
-    def mixedDelta(n: Long): DataFrame = {
-      val nOrders = nOrdersOf(n)
-      // 25 lines repriced (D+I), 2 orders deleted outright, 5
-      // customers moved — the composedFold delta, tagged
-      val lt = spark.range(n / 2, n / 2 + 25)
-        .select(col("id").as("lk"), (col("id") % nOrders).as("ok"),
-          col("id").cast("double").as("price"))
-      val dL = lt.select(lit("L").as("side"), lit("D").as("op"),
-          col("lk"), col("ok"), lit(null).cast("long").as("ck"),
-          col("price"), lit(null).cast("string").as("g"))
-        .unionByName(lt.select(lit("L").as("side"), lit("I").as("op"),
-          col("lk"), col("ok"), lit(null).cast("long").as("ck"),
-          (col("price") + 0.5).as("price"),
-          lit(null).cast("string").as("g")))
-      val dO = spark.range(0L, 2L).select(lit("O").as("side"),
-        lit("D").as("op"), lit(null).cast("long").as("lk"),
-        col("id").as("ok"), (col("id") % cDims).as("ck"),
-        lit(null).cast("double").as("price"),
-        lit(null).cast("string").as("g"))
-      val ct = spark.range(10L, 15L).select(col("id").as("ck"),
-        (col("id") % 100).cast("string").as("g"))
-      val dC = ct.select(lit("C").as("side"), lit("D").as("op"),
-          lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
-          col("ck"), lit(null).cast("double").as("price"), col("g"))
-        .unionByName(ct.select(lit("C").as("side"), lit("I").as("op"),
-          lit(null).cast("long").as("lk"), lit(null).cast("long").as("ok"),
-          col("ck"), lit(null).cast("double").as("price"),
-          lit("moved").as("g")))
-      dL.unionByName(dO).unionByName(dC)
-    }
-    def bytesOfBatch(dir: String, id: Long): Long = {
-      def du(f: java.io.File): Long =
-        if (!f.exists) 0L
-        else if (f.isFile) f.length
-        else f.listFiles().map(du).sum
-      Seq("rows_L", "rows_O", "inter_1", "rows_C", "agg")
-        .map(fam => du(new java.io.File(s"$dir/$fam/batch=$id"))).sum
-    }
-    def foldW(n: Long, dir: String, buckets: Int): (Double, Long) = {
-      val d = mixedDelta(n)
-      // redelivery of the same id per iteration: reads the same
-      // committed base state, overwrites identical bytes — stable
-      // timing AND a stable byte count
-      val samples = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        fold3(d, 1L, dir, buckets)
-        (System.nanoTime() - t0) / 1e9
-      }
-      (median(samples), bytesOfBatch(dir, 1L))
-    }
-
-    // ---- round 15: WRITE-side proportionality — the manifest-linked
-    // partitioned upsert (BucketStore) replacing the full snapshot
-    // rewrite per batch of the 3-way composed view. Measured on the
-    // REAL deployment path (applyBatch end to end): bytes written by a
-    // fixed mixed delta batch must stay flat while every store grows
-    // 10×.
-    if (on("r15w")) {
-      // two bucket configurations, because the upsert's write grain IS
-      // the bucket: with the bucket COUNT fixed across the growth the
-      // touched buckets themselves grow store-proportionally (an honest
-      // anti-claim), while the deployment discipline — size
-      // storeBuckets so a bucket stays a bounded scan, i.e. hold the
-      // bucket SIZE fixed — makes the delta batch's write flat
-      val fixedB = 256
-      val scaledB = 2560 // 10× buckets for the 10× store: same rows/bucket
-      val dirF1 = seedDir("w15", baseN, fixedB)
-      val dirF10 = seedDir("w15", baseN * 10, fixedB)
-      val dirS10 = seedDir("w15", baseN * 10, scaledB)
-      val seed1 = bytesOfBatch(dirF1, 0L)
-      val seed10 = bytesOfBatch(dirF10, 0L)
-      foldW(baseN, dirF1, fixedB) // warm, untimed (redelivered below)
-      val (wt1, wb1) = foldW(baseN, dirF1, fixedB)
-      val (wtF10, wbF10) = foldW(baseN * 10, dirF10, fixedB)
-      val (wtS10, wbS10) = foldW(baseN * 10, dirS10, scaledB)
-      def mb(b: Long) = b / 1e6
-      sections +=
-        f"""
-           |## Batch-proportional snapshot WRITES — manifest-linked upsert (round 15)
-           |
-           |Round 14's one structural 100-TB liability: per-batch COMPUTE
-           |was delta-proportional and reads bucket-pruned, but every
-           |3-way composed-view commit rewrote all five snapshot families
-           |in full — store-sized bytes per batch, unconditionally. The
-           |BucketStore layout writes ONLY the buckets a batch touched
-           |and links every untouched bucket from the previous manifest
-           |(≤ storeBuckets pointer lines per family), keeping the
-           |all-families-marker commit and the recompute-from-latest-
-           |committed redelivery contract. The write grain is the
-           |BUCKET, so the honest contract is: bytes per batch ∝
-           |(touched buckets × bucket size) — delta-proportional exactly
-           |when the deployment holds the bucket SIZE bounded by sizing
-           |`storeBuckets` to the store (the layout's documented sizing
-           |rule). Measured END TO END on the 3-base
-           |StreamingIvmComposeN.applyBatch chain
-           |(CDC validation, both deltaJoin stages, fold, write, commit,
-           |GC) with the composedFold mixed delta while every store
-           |grows 10× ($baseN → ${baseN * 10} L rows; seed snapshots
-           |${mb(seed1)}%.1f → ${mb(seed10)}%.1f MB at $fixedB buckets):
-           |
-           || configuration | delta-batch bytes written | vs full rewrite | delta-batch sec |
-           ||---|---|---|---|
-           || small store, $fixedB buckets | ${mb(wb1)}%.2f MB | ${r1(100.0 * wb1 / seed1)}%% of store | $wt1%.2f |
-           || 10× store, $fixedB buckets (bucket size grew 10×) | ${mb(wbF10)}%.2f MB | ${r1(100.0 * wbF10 / seed10)}%% of store | $wtF10%.2f |
-           || 10× store, $scaledB buckets (bucket size held fixed) | ${mb(wbS10)}%.2f MB | ${r1(100.0 * wbS10 / seed10)}%% of store | $wtS10%.2f |
-           |
-           |With the bucket size held fixed (the sizing rule), the 10×
-           |store's delta batch writes ${r1(wbS10.toDouble / wb1)}× the small store's
-           |bytes — flat, while the old layout's write cost grew 10×
-           |with the store. The fixed-bucket-count row is the anti-claim
-           |that motivates the rule: the same delta rewrites
-           |${r1(wbF10.toDouble / wb1)}× the bytes because each touched bucket is
-           |itself 10× larger. An untouched family writes a manifest and
-           |a marker only (BucketStoreUpsertSpec pins that at the
-           |filesystem level, plus GC safety for linked directories).
-           |Wall time is test-scale overhead dominated (dozens of small
-           |eager jobs per batch); the pruned reads resolve wanted
-           |buckets as EXPLICIT manifest paths, so driver listing is
-           |touched-bucket-bounded too — the first cut filtered over a
-           |full directory listing and the 2560-bucket store paid 3.5×
-           |wall for it (76 s), which is what this path now avoids.
-           |
-           |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r15w sbt "runMain
-           |graft.IvmScale /tmp/graft_ivm_scale"` — it measures the
-           |3-base StreamingIvmComposeN chain; the round-15/16
-           |captures measured the fixed 3-way composed object that chain
-           |replaced (five families either way; the intermediate is
-           |now a (ck, price) multiset, not a pk-keyed rows store).
-           |""".stripMargin
-    }
-
-    // ---- round 15b: the N-WAY MULTISET fold at scale — the
-    // StreamingIvmComposeN deployment path (general multiplicities,
-    // many-to-many stage, multiset intermediate) folding a fixed mixed
-    // delta while every store grows 10×. Bucket size held fixed per
-    // the BucketStore sizing rule (storeBuckets ∝ store).
-    if (on("r15n")) {
-      import graft.streaming.StreamingIvmComposeN
-      import graft.streaming.StreamingIvmComposeN.BaseSpec
-      val basesN = Seq(
-        BaseSpec("A", Seq("ak", "k1", "v"), "ak"),
-        BaseSpec("B", Seq("bk", "k1", "k2"), "bk"),
-        BaseSpec("C", Seq("ckey", "k2", "g"), "ckey"))
-      val stagesN = Seq(Seq("k1"), Seq("k2"))
-      val nC = 5000L
-      def seedN(n: Long, buckets: Int): String = {
-        val dir = s"$out/n15_${n}_$buckets"
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        val nK1 = n / 20 // 20 A rows and 2 B rows per k1: fan-out 40
-        def nulls(cols: (String, String)*) =
-          cols.map { case (c, t) => lit(null).cast(t).as(c) }
-        val aSeed = spark.range(0L, n).select(
-          (Seq(lit("A").as("side"), lit("I").as("op"), col("id").as("ak"),
-            (col("id") % nK1).as("k1"),
-            (col("id") % 50).cast("double").as("v")) ++
-            nulls("bk" -> "long", "k2" -> "long", "ckey" -> "long",
-              "g" -> "string")): _*)
-        val bSeed = spark.range(0L, n / 10).select(
-          (Seq(lit("B").as("side"), lit("I").as("op")) ++
-            nulls("ak" -> "long") ++
-            Seq((col("id") % nK1).as("k1")) ++
-            nulls("v" -> "double") ++
-            Seq(col("id").as("bk"), (col("id") % nC).as("k2")) ++
-            nulls("ckey" -> "long", "g" -> "string")): _*)
-        val cSeed = spark.range(0L, nC).select(
-          (Seq(lit("C").as("side"), lit("I").as("op")) ++
-            nulls("ak" -> "long", "k1" -> "long", "v" -> "double",
-              "bk" -> "long") ++
-            Seq(col("id").as("k2"), col("id").as("ckey"),
-              (col("id") % 100).cast("string").as("g"))): _*)
-        val cols = Seq("side", "op", "ak", "k1", "v", "bk", "k2", "ckey", "g")
-        val seed = aSeed.select(cols.map(col): _*)
-          .unionByName(bSeed.select(cols.map(col): _*))
-          .unionByName(cSeed.select(cols.map(col): _*))
-        StreamingIvmComposeN.applyBatch(seed, 0L, "side", "op", basesN,
-          stagesN, Seq("g"), "v", dir, storeBuckets = buckets)
-        dir
-      }
-      def deltaN(n: Long): DataFrame = {
-        val nK1 = n / 20
-        def nulls(cols: (String, String)*) =
-          cols.map { case (c, t) => lit(null).cast(t).as(c) }
-        val at = spark.range(n / 2, n / 2 + 25).select(col("id").as("ak"),
-          (col("id") % nK1).as("k1"), (col("id") % 50).cast("double").as("v"))
-        val dA = at.select(
-            (Seq(lit("A").as("side"), lit("D").as("op"), col("ak"),
-              col("k1"), col("v")) ++
-              nulls("bk" -> "long", "k2" -> "long", "ckey" -> "long",
-                "g" -> "string")): _*)
-          .unionByName(at.select(
-            (Seq(lit("A").as("side"), lit("I").as("op"), col("ak"),
-              col("k1"), (col("v") + 0.5).as("v")) ++
-              nulls("bk" -> "long", "k2" -> "long", "ckey" -> "long",
-                "g" -> "string")): _*))
-        val bt = spark.range(0L, 2L).select(col("id").as("bk"),
-          (col("id") % nK1).as("k1"), (col("id") % nC).as("k2"))
-        val dB = bt.select(
-          (Seq(lit("B").as("side"), lit("D").as("op")) ++
-            nulls("ak" -> "long") ++ Seq(col("k1")) ++
-            nulls("v" -> "double") ++ Seq(col("bk"), col("k2")) ++
-            nulls("ckey" -> "long", "g" -> "string")): _*)
-        val ct = spark.range(10L, 13L).select(col("id").as("ckey"),
-          col("id").as("k2"), (col("id") % 100).cast("string").as("g"))
-        val dC = ct.select(
-            (Seq(lit("C").as("side"), lit("D").as("op")) ++
-              nulls("ak" -> "long", "k1" -> "long", "v" -> "double",
-                "bk" -> "long") ++
-              Seq(col("k2"), col("ckey"), col("g"))): _*)
-          .unionByName(ct.select(
-            (Seq(lit("C").as("side"), lit("I").as("op")) ++
-              nulls("ak" -> "long", "k1" -> "long", "v" -> "double",
-                "bk" -> "long") ++
-              Seq(col("k2"), col("ckey"), lit("moved").as("g"))): _*))
-        val cols = Seq("side", "op", "ak", "k1", "v", "bk", "k2", "ckey", "g")
-        dA.select(cols.map(col): _*)
-          .unionByName(dB.select(cols.map(col): _*))
-          .unionByName(dC.select(cols.map(col): _*))
-      }
-      def bytesOfBatchN(dir: String, id: Long): Long = {
-        def du(f: java.io.File): Long =
-          if (!f.exists) 0L
-          else if (f.isFile) f.length
-          else f.listFiles().map(du).sum
-        Seq("rows_A", "rows_B", "rows_C", "inter_1", "agg")
-          .map(fam => du(new java.io.File(s"$dir/$fam/batch=$id"))).sum
-      }
-      def foldN(n: Long, dir: String, buckets: Int): (Double, Long) = {
-        val d = deltaN(n)
-        val samples = (1 to iters).map { _ =>
-          val t0 = System.nanoTime()
-          StreamingIvmComposeN.applyBatch(d, 1L, "side", "op", basesN,
-            stagesN, Seq("g"), "v", dir, storeBuckets = buckets)
-          (System.nanoTime() - t0) / 1e9
-        }
-        (median(samples), bytesOfBatchN(dir, 1L))
-      }
-      val nb1 = 256
-      val nb10 = 2560
-      val nd1 = seedN(baseN, nb1)
-      val nd10 = seedN(baseN * 10, nb10)
-      val nSeed1 = bytesOfBatchN(nd1, 0L)
-      val nSeed10 = bytesOfBatchN(nd10, 0L)
-      foldN(baseN, nd1, nb1) // warm, untimed (redelivered below)
-      val (nt1, nbyte1) = foldN(baseN, nd1, nb1)
-      val (nt10, nbyte10) = foldN(baseN * 10, nd10, nb10)
-      def mbN(b: Long) = b / 1e6
-      sections +=
-        f"""
-           |## N-way multiset fold stays batch-proportional — StreamingIvmComposeN (round 15)
-           |
-           |The GENERAL-multiplicity composition (round 15: many-to-many
-           |stages, (payload, multiplicity) multiset intermediate, weighted
-           |bilinear deltas) measured END TO END on its deployment path
-           |(applyBatch: CDC validation, both weighted deltaJoin stages,
-           |multiset upsert of the intermediate, weighted agg fold, write,
-           |commit, GC). Chain: A(${baseN} rows, 20 per join key) ⋈ B
-           |(2 per key — fan-out 40, MANY-TO-MANY) ⋈ C($nC dims), view
-           |γ(g; n, Σv); the intermediate multiset carries ~8× average
-           |multiplicity. Fixed mixed delta (25 A reprices, 2 B deletes,
-           |3 C moves), every store grown 10×, bucket size held fixed per
-           |the BucketStore sizing rule ($nb1 → $nb10 buckets), median of
-           |$iters:
-           |
-           || store (A rows) | seed snapshot bytes | delta-batch bytes written | delta-batch sec |
-           ||---|---|---|---|
-           || $baseN | ${mbN(nSeed1)}%.1f MB | ${mbN(nbyte1)}%.2f MB | $nt1%.2f |
-           || ${baseN * 10} | ${mbN(nSeed10)}%.1f MB | ${mbN(nbyte10)}%.2f MB | $nt10%.2f |
-           || ratio | ${r1(nSeed10.toDouble / nSeed1)}× | ${r1(nbyte10.toDouble / nbyte1)}× | ${r1(nt10 / nt1)}× |
-           |
-           |Same law as the r15w three-way point: per-batch bytes and
-           |wall stay ~flat while every store (and the old full-rewrite
-           |cost) grows 10× — the multiset generalization does not
-           |reintroduce store-sized work anywhere: stage deltas are
-           |net-compressed (weights, not row copies), the intermediate
-           |upserts only its touched buckets, and the many-to-many
-           |fan-out rides the weights.
-           |
-           |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r15n sbt "runMain
-           |graft.IvmScale /tmp/graft_ivm_scale"`.
-           |""".stripMargin
-    }
-
-    // ---- round 16: the write law's ×100 decade, the per-batch wall
-    // attribution, and the serving-read fan-out/compaction latency ----
-    if (on("r16w") || on("r16a")) {
-      import graft.streaming.StoreTimers
-
-      if (on("r16w")) {
-        // the ×100 decade (verdict #3): same generator, same mixed
-        // delta, store 100× the small point, storeBuckets ∝ store per
-        // the sizing rule (256 → 25600 — bucket size held fixed)
-        val bigN = baseN * 100
-        val bigB = 25600
-        val dir1 = seedDir("w16", baseN, 256)
-        val dirBig = seedDir("w16", bigN, bigB)
-        val seed1 = bytesOfBatch(dir1, 0L)
-        val seedBig = bytesOfBatch(dirBig, 0L)
-        foldW(baseN, dir1, 256) // warm, untimed (redelivered below)
-        val (t1, b1) = foldW(baseN, dir1, 256)
-        val (tBig, bBig) = foldW(bigN, dirBig, bigB)
-        def mb(b: Long) = b / 1e6
-        sections +=
-          f"""
-             |## The write law's ×100 decade — manifest-linked upsert (round 16)
-             |
-             |The r15w table measured delta-batch bytes flat (1.21×)
-             |across 10× store growth with the bucket size held fixed;
-             |the ivm7/e2e precedent says exponents drift on the SECOND
-             |decade, so here is the same end-to-end measurement
-             |(3-base StreamingIvmComposeN.applyBatch: CDC validation, both
-             |deltaJoin stages, fold, write, commit, GC; identical mixed
-             |delta) with every store grown 100× and `storeBuckets`
-             |scaled with the store per the sizing rule (256 → $bigB —
-             |bucket size held fixed). Seed snapshots ${mb(seed1)}%.1f →
-             |${mb(seedBig)}%.1f MB; median of $iters:
-             |
-             || configuration | delta-batch bytes | vs full rewrite | delta-batch sec |
-             ||---|---|---|---|
-             || small store, 256 buckets | ${mb(b1)}%.2f MB | ${r1(100.0 * b1 / seed1)}%% of store | $t1%.2f |
-             || 100× store, $bigB buckets | ${mb(bBig)}%.2f MB | ${r1(100.0 * bBig / seedBig)}%% of store | $tBig%.2f |
-             |
-             |Bytes ratio across the two decades: ${r1(bBig.toDouble / b1)}× for 100×
-             |the store. The committed round-16 capture attributes this
-             |per family (du over the batch directories): the growth is
-             |(a) the ≤storeBuckets-line pointer manifests — linear in
-             |bucket COUNT, five orders of magnitude below the store —
-             |plus (b) the intermediate family's touched slices, which
-             |grow with the affected keys' JOIN FAN because the
-             |generator holds cDims fixed while facts scale (a CDC
-             |delete of a fat key rewrites that key's surviving slice
-             |on any bucketed layout — fan-proportional delta work).
-             |Nothing grows with unrelated store bytes; wall tracks the
-             |per-fold job count, not data.
-             |
-             |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r16w sbt "runMain
-             |graft.IvmScale /tmp/graft_ivm_scale"` — it measures the
-             |3-base StreamingIvmComposeN chain; the round-15/16
-             |captures measured the fixed 3-way composed object that chain
-             |replaced (five families either way; the intermediate is
-           |now a (ck, price) multiset, not a pk-keyed rows store).
-             |""".stripMargin
-      }
-
-      if (on("r16a")) {
-        // wall ATTRIBUTION (verdict #5): where does a fold's driver
-        // wall go? Timed categories accumulate inside BucketStore
-        // (validate = the per-side fused CDC probe, manifest = pointer
-        // files + markers + listings, buckets = touched-bucket
-        // collects, write = parquet jobs incl. the fold compute they
-        // materialize); measured on the r15w configurations, same
-        // binary, iters-averaged.
-        def attributed(n: Long, buckets: Int): (Double, Map[String, Double]) = {
-          val dir = seedDir("w16", n, buckets)
-          foldW(n, dir, buckets) // warm
-          StoreTimers.reset(); StoreTimers.enabled = true
-          val (t, _) = try foldW(n, dir, buckets)
-            finally StoreTimers.enabled = false
-          (t, StoreTimers.seconds.view.mapValues(_ / iters).toMap
-            .withDefaultValue(0.0))
-        }
-        val (tS, catS) = attributed(baseN, 256)
-        val (tB, catB) = attributed(baseN * 10, 2560)
-        def row(t: Double, c: Map[String, Double]): String = {
-          val other = t - Seq("validate", "manifest", "buckets", "write")
-            .map(c).sum
-          f"${c("validate")}%.2f | ${c("buckets")}%.2f | ${c("manifest")}%.2f | ${c("write")}%.2f | $other%.2f | $t%.2f"
-        }
-        // fused-vs-three-probe microbench: the SAME per-side refusal
-        // checks as three separate Spark actions (the r15 shape: two
-        // limit(1).count() probes + one dup-groupBy probe) vs one
-        // unioned action (the r16 shape), on the 10× store's L side
-        val dirM = seedDir("w16", baseN * 10, 2560)
-        val nOrders = nOrdersOf(baseN * 10)
-        val lt = spark.range(baseN * 10 / 2, baseN * 10 / 2 + 25)
-          .select(col("id").as("lk"), (col("id") % nOrders).as("ok"),
-            col("id").cast("double").as("price"))
-        val dels = lt
-        val ins = lt.select(col("lk"), col("ok"),
-          (col("price") + 0.5).as("price"))
-        val touched = graft.streaming.BucketStore.bucketsOf(
-          dels.unionByName(ins), Seq("ok"), 2560)
-        val prevSlice = graft.streaming.BucketStore.readBuckets(spark, dirM,
-            "rows_L", Some(0L), touched, dels)
-          .select(col("lk"), col("ok"), col("price"))
-        def three(): Double = {
-          val t0 = System.nanoTime()
-          dels.join(prevSlice, Seq("lk", "ok", "price"), "left_anti")
-            .limit(1).count()
-          ins.join(prevSlice.join(dels.select(col("lk")), Seq("lk"),
-            "left_anti"), Seq("lk"), "left_semi").limit(1).count()
-          ins.groupBy(col("lk")).agg(count(lit(1)).as("__c"))
-            .filter(col("__c") > 1).limit(1).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def one(): Double = {
-          val t0 = System.nanoTime()
-          dels.join(prevSlice, Seq("lk", "ok", "price"), "left_anti")
-            .select(lit("a").as("__viol"))
-            .unionByName(ins.join(prevSlice.join(dels.select(col("lk")),
-              Seq("lk"), "left_anti"), Seq("lk"), "left_semi")
-              .select(lit("b").as("__viol")))
-            .unionByName(ins.groupBy(col("lk")).agg(count(lit(1)).as("__c"))
-              .filter(col("__c") > 1).select(lit("c").as("__viol")))
-            .distinct().collect()
-          (System.nanoTime() - t0) / 1e9
-        }
-        three(); one() // warm
-        val t3 = median((1 to iters).map(_ => three()))
-        val tO = median((1 to iters).map(_ => one()))
-        sections +=
-          f"""
-             |## Per-batch wall attribution — where an upsert fold's time goes (round 16)
-             |
-             |The r15w 2560-bucket row paid +54%% wall over 256 buckets
-             |at test scale; the verdict asked WHERE. BucketStore now
-             |carries an off-by-default timer (StoreTimers) around its
-             |four driver-observed cost centers; one fold of the same
-             |mixed delta, iters-averaged, seconds:
-             |
-             || configuration | validate | buckets | manifest | write (incl. fold compute) | other (plan/driver) | total |
-             ||---|---|---|---|---|---|---|
-             || small store, 256 buckets | ${row(tS, catS)} |
-             || 10× store, 2560 buckets | ${row(tB, catB)} |
-             |
-             |The write jobs dominate both rows and carry the whole
-             |bucket-count penalty: at 2560 buckets the same delta
-             |touches ~10× the partition DIRECTORIES (one per touched
-             |bucket per family), so the fixed per-file cost (task
-             |launch, footer, commit rename, list-after-write) scales
-             |with touched buckets at constant data. That is the
-             |documented trade of the sizing rule — bounded bucket
-             |size costs file-grain overhead at test scale and is the
-             |reason compaction exists; at production delta sizes the
-             |per-bucket payload amortizes it.
-             |
-             |CDC validation is no longer a contender: the r15 path ran
-             |THREE eager probes per side (two limit(1) counts + a
-             |dup-count probe); r16 fuses them into ONE action whose
-             |subplans share the pruned slice reads. Microbench of
-             |exactly those probe shapes on the 10× store's L side,
-             |median of $iters: three actions $t3%.2f s → one fused
-             |action $tO%.2f s (${r1(t3 / tO)}× — job-submission fixed cost, saved
-             |4× per batch: once per side plus the tag/op domain scan).
-             |
-             |Reproduce: `SPARK_GRAFT_IVM_SECTIONS=r16a sbt "runMain
-             |graft.IvmScale /tmp/graft_ivm_scale"` — it measures the
-             |3-base StreamingIvmComposeN chain; the round-15/16
-             |captures measured the fixed 3-way composed object that chain
-             |replaced (five families either way; the intermediate is
-           |now a (ck, price) multiset, not a pk-keyed rows store).
-             |""".stripMargin
-      }
-    }
-
     if (on("r16r")) {
       // serving-read latency vs manifest fan-out (verdict #6): a
       // long-lived store's full read unions one pruned scan per

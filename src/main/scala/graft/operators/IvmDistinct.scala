@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape at 100 TB: per batch, one broadcast-pruned scan of the
   * dict, one broadcast-pruned scan of the rows store (partition-keyed
-  * stores prune further — see StreamingIvmMinMax's bucket layout), and
+  * stores prune further — see [[graft.streaming.BucketStore]]'s
+  * group-hash buckets), and
   * delta-sized everything else. The insert-only fast path never reads
   * `rowsAfter` at all (no delete pairs → an empty broadcast list — AQE
   * propagates the empty relation through the semi-join). For
@@ -67,8 +68,8 @@ object IvmDistinct {
     *
     * Pruned-store contract: the dict consult only ever needs rows that
     * could match a delta pair, so `stored._2` may be PRE-PRUNED to any
-    * superset of the delta's pairs (e.g. their hash-bucket partitions —
-    * the StreamingIvmDistinct layout). The returned counts are exact
+    * superset of the delta's pairs (e.g. their hash-bucket partitions
+    * in a [[graft.streaming.BucketStore]]). The returned counts are exact
     * either way; the returned dict then covers only the pruned slice,
     * and the caller re-attaches the untouched remainder (a partitioned
     * upsert does this by construction). Same for `rowsAfter`: any

@@ -34,9 +34,9 @@ import graft.core.Exact.dec
   *
   * Scale shape at 100 TB: per batch three joins whose build sides are
   * delta-sized broadcasts; R and S are each read once (partition-keyed
-  * stores prune those reads to the delta's join-key buckets — the
-  * StreamingIvmMinMax layout applies verbatim since the join key IS
-  * the natural bucket key); the merge joins two aggregate frames.
+  * stores prune those reads to the delta's join-key buckets — a
+  * [[graft.streaming.BucketStore]] bucketed by the join key, its
+  * natural bucket key); the merge joins two aggregate frames.
   * Nothing anywhere is |R ⋈ S|-sized.
   */
 object IvmJoin {
@@ -76,8 +76,7 @@ object IvmJoin {
     * whose order is deleted in the same batch emits 5 rows netting one
     * D); downstream aggregates fold signs linearly so cancellation is
     * free, and store maintainers compress to net multiplicities first
-    * ([[deltaJoinWeighted]] and [[graft.streaming.StreamingIvmComposeN]]
-    * keep them as weights).
+    * ([[deltaJoinWeighted]] keeps them as weights).
     *
     * Scale shape: identical to [[foldSumView]]'s legs — each term
     * broadcasts its delta side, the stored sides stream through one

@@ -206,8 +206,8 @@ object IvmQuantile {
   /** [[percentileCont]] over a MULTISET rows store (round 16 — the
     * composed-chain read face): `multisetAfter` holds one row per
     * surviving DISTINCT (group, value) pair with its derivation
-    * multiplicity in `multCol` (the maintained final-join multiset of
-    * [[graft.streaming.StreamingIvmComposeN]]), and `counts` the
+    * multiplicity in `multCol` (a composed chain's final-join
+    * multiset, as the ivm12 key builds it), and `counts` the
     * weighted bucket counts ([[foldCountsWeighted]]). A row spans
     * multiplicity-many consecutive ranks, so the candidate-bucket rank
     * completes through a cumulative-weight window instead of

@@ -688,9 +688,7 @@ object GovernanceQueries {
         Seq("ck", "price"))
       // stage 2: upstream delta AS this join's ΔR; its R is the
       // maintained intermediate join (recomputed here as the stand-in
-      // for the stored intermediate — the 3-base StreamingIvmComposeN
-      // chain keeps it as a (ck, price) multiset store in the
-      // deployment shape)
+      // for a stored (ck, price) intermediate)
       val lo = l.join(o, Seq("ok")).select(col("ck"), col("price"))
       val d2 = IvmJoin.deltaJoin(d1, dC, lo, c, Seq("ck"), "op",
         Seq("nation", "price"))
@@ -713,7 +711,7 @@ object GovernanceQueries {
       // IvmJoin.deltaJoinWeighted (the bilinear expansion with
       // multiplicity PRODUCTS — deltas carry net signed weights, store
       // legs carry multiplicities) chaining into foldAggWeighted
-      // (n += Σw, s += Σ w·value) — the StreamingIvmComposeN batch
+      // (n += Σw, s += Σ w·value) — the composed-chain batch
       // algebra, oracle-checked. One change batch touches all three
       // bases: every 31st supplier's balance repriced +10 (D+I),
       // every 89th customer deleted outright (their whole fan-out
@@ -746,8 +744,8 @@ object GovernanceQueries {
       def asSet(df: DataFrame) = df.withColumn("__mult", lit(1L))
       // stage 1 (many-to-many): Δ(S⋈C) as a net-weighted multiset
       // stream; the PRE-delta intermediate is the projected multiset
-      // (ck, bal) with counted multiplicity — the stand-in for the
-      // stored inter_1 family StreamingIvmComposeN maintains
+      // (ck, bal) with counted multiplicity — the stand-in for a
+      // stored intermediate multiset
       val d1 = IvmJoin.deltaJoinWeighted(dS, dC, asSet(sup), asSet(cus),
         Seq("nk"), "__w", "__mult", Seq("ck", "bal"))
       val dlo = d1.groupBy(col("ck"), col("bal"))
@@ -785,9 +783,7 @@ object GovernanceQueries {
       // counts-store slice), every 101st order re-prioritized to a
       // fresh 'moved-' priority (insert-only new groups → the
       // clean-path candidate proof). Oracle = full recompute + rank
-      // over the modified tables, bit-for-bit. Deployment shape:
-      // StreamingIvmComposeN.applyBatchTopK maintains the same fold
-      // over BucketStore families (spec-pinned with restart).
+      // over the modified tables, bit-for-bit.
       import graft.operators.{IvmJoin, IvmTopK}
       val sup = T(s, dir, "supplier").select(col("s_suppkey").as("sk"),
         col("s_nationkey").as("nk"))
@@ -836,9 +832,7 @@ object GovernanceQueries {
       // and their lineage is gone — on a multi-node cluster an
       // executor loss fails this query instead of recomputing. That is
       // the right trade HERE: these frames are aggregate-sized, the
-      // query is a batch recomputation (retry = re-run), and the
-      // deployment-grade twin (StreamingIvmComposeN over BucketStore
-      // families) persists its state in storage, not in these blocks.
+      // query is a batch recomputation (retry = re-run).
       // A long-lived cluster caller that cannot re-run should swap in
       // df.persist(StorageLevel.DISK_ONLY_2) or a reliable
       // checkpoint(dir) at ~2× the local cost — see SCALING.md
@@ -878,8 +872,6 @@ object GovernanceQueries {
       // delete a group's max → broken re-agg), customers deleted,
       // orders re-prioritized (fresh groups, insert-only). Oracle =
       // full recompute over the modified tables, bit-for-bit.
-      // Deployment shape: StreamingIvmComposeN.applyBatchMinMax
-      // (final+agg BucketStore families, spec-pinned).
       import graft.operators.{IvmJoin, IvmFold}
       import graft.core.Exact.dec
       val sup = T(s, dir, "supplier").select(col("s_suppkey").as("sk"),
@@ -947,8 +939,6 @@ object GovernanceQueries {
       // IvmDistinct.foldWeighted folds the chain's net-weighted
       // stream with nothing store-sized. Same CDC batch as ivm8.
       // Oracle = full COUNT(DISTINCT) recompute, bit-for-bit.
-      // Deployment shape: StreamingIvmComposeN.applyBatchDistinct
-      // (wdict+agg BucketStore families, spec-pinned).
       import graft.operators.{IvmJoin, IvmDistinct}
       val sup = T(s, dir, "supplier").select(col("s_suppkey").as("sk"),
         col("s_nationkey").as("nk"), col("s_acctbal").as("bal"))
@@ -1006,9 +996,7 @@ object GovernanceQueries {
       // expanding every derivation. Same CDC batch family as ivm8:
       // supplier moves, customer deletes, order re-prioritization.
       // Oracle = the explicit qt2 interpolation formula over the
-      // modified three-way join, bit-for-bit. Deployment shape:
-      // StreamingIvmComposeN.applyBatchQuantile (counts+final
-      // BucketStore families, value-bucket pruned reads).
+      // modified three-way join, bit-for-bit.
       import graft.operators.{IvmJoin, IvmQuantile}
       val (qlo, qhi, qb) = (0.0, 1000000.0, 64)
       val sup = T(s, dir, "supplier").select(col("s_suppkey").as("sk"),

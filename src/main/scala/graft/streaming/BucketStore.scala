@@ -140,8 +140,14 @@ object BucketStore {
     * most this many pruned scans. */
   val DefaultMaxLinks: Int = 16
 
-  /** The shared group-hash bucket expression (the StreamingIvmMinMax
-    * convention). */
+  /** Default group-hash partitions of a view's store. 256 keeps
+    * directory counts sane at test scale while pruning a typical delta
+    * (tens of affected groups) to a few percent of the store's files;
+    * size it so a bucket's rows stay a bounded scan at the deployment's
+    * volume. */
+  val StoreBuckets: Int = 256
+
+  /** The shared group-hash bucket expression of every view's store. */
   def bucketize(keys: Seq[String], storeBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(storeBuckets.toLong)).cast("int")
 
@@ -585,33 +591,22 @@ object BucketStore {
       keys: DataFrame, touchedKeys: Seq[Int])
 
   /** Validate one side's CDC delta (payload columns + `__op` ∈ {I, D})
-    * against the keyed store — the [[StreamingIvmMinMax]] per-side key
-    * discipline made delta-proportional — and return the touched-slice
-    * post-state for [[writePrepared]]. All three refusals stay EXACT
-    * and fire HERE, eagerly, so a batch validates every side before
-    * any side writes: delete images must match a stored row
-    * byte-for-byte (a delete image determines its own bucket, so the
-    * touched slice is sufficient), inserts must not collide with a
-    * live pk ANYWHERE (checked against the pk index, pruned to the
-    * inserted pks' index buckets — the exactness the slice alone could
-    * not give), and a batch may not insert one pk twice. */
+    * against the keyed store — the per-side key discipline made
+    * delta-proportional — and return the touched-slice post-state for
+    * [[writePrepared]]. All three refusals stay EXACT and fire HERE,
+    * eagerly, before anything writes: delete images must match a
+    * stored row byte-for-byte, inserts must not collide with a live pk
+    * ANYWHERE (checked against the pk index, pruned to the inserted
+    * pks' index buckets — the exactness the slice alone could not
+    * give), and a batch may not insert one pk twice.
+    *
+    * `bucketExpr` is the data layout's bucket — any order-/domain-
+    * meaningful expression (e.g. the quantile view's VALUE bucket,
+    * whose ids are the read path's pruning key) that is a pure
+    * function of the row's data columns: a delete image then
+    * determines its own bucket, which is what keeps the slice
+    * validation exact. The pk index stays hash-bucketed by `keyCols`. */
   def prepareCdcUpsert(
-      sideDelta: DataFrame, dataCols: Seq[String], keyCols: Seq[String],
-      bucketKeys: Seq[String], dir: String, family: String,
-      batchId: Long, prevId: Option[Long], storeBuckets: Int,
-      side: String): Prepared =
-    prepareCdcUpsertExpr(sideDelta, dataCols, keyCols,
-      bucketize(bucketKeys, storeBuckets), dir, family, batchId, prevId,
-      storeBuckets, side)
-
-  /** [[prepareCdcUpsert]] with an ARBITRARY order-/domain-meaningful
-    * bucket expression for the data layout (e.g. the quantile face's
-    * VALUE bucket, whose ids are the read path's pruning key) instead
-    * of the hash of a key set. The expression must be a pure function
-    * of the row's data columns — a delete image then determines its
-    * own bucket, which is what keeps the slice validation exact. The
-    * pk index stays hash-bucketed by `keyCols`. */
-  def prepareCdcUpsertExpr(
       sideDelta: DataFrame, dataCols: Seq[String], keyCols: Seq[String],
       bucketExpr: Column, dir: String, family: String,
       batchId: Long, prevId: Option[Long], storeBuckets: Int,
@@ -674,61 +669,5 @@ object BucketStore {
     upsert(spark, dir, p.family, batchId, prevId, p.rows, p.touched, maxLinks)
     upsertKeys(spark, dir, p.family, batchId, prevId, p.keys, p.touchedKeys,
       maxLinks)
-  }
-
-  // ---- the multiset upsert (no pk — (payload, __mult) rows) ---------
-
-  /** Prepare the touched-bucket post-state of a MULTISET store family
-    * — (payload columns, `__mult`) rows with no pk discipline, the
-    * intermediate-join shape of [[StreamingIvmComposeN]] — under a
-    * net-weighted delta (`wCol` signed integers). Multiplicities fold
-    * additively; a fold driving any row's multiplicity negative raises
-    * loudly (the delta deletes join rows the store never absorbed),
-    * rows at zero disappear. Returns (post-state rows of the touched
-    * buckets with `__g_bucket`, touched bucket list) for [[upsert]]. */
-  def prepareMultisetUpsert(
-      netDelta: DataFrame, payloadCols: Seq[String], wCol: String,
-      bucketKeys: Seq[String], dir: String, family: String,
-      prevId: Option[Long], storeBuckets: Int): (DataFrame, Seq[Int]) =
-    prepareMultisetUpsertExpr(netDelta, payloadCols, wCol,
-      bucketize(bucketKeys, storeBuckets), dir, family, prevId)
-
-  /** [[prepareMultisetUpsert]] with an ARBITRARY order-/domain-
-    * meaningful bucket expression (e.g. the quantile face's VALUE
-    * bucket, whose ids are the read path's pruning key) instead of a
-    * key-set hash — the [[prepareCdcUpsertExpr]] counterpart for
-    * multiset families. The expression must be a pure function of the
-    * payload columns. */
-  def prepareMultisetUpsertExpr(
-      netDelta: DataFrame, payloadCols: Seq[String], wCol: String,
-      bucketExpr: Column, dir: String, family: String,
-      prevId: Option[Long]): (DataFrame, Seq[Int]) = {
-    val spark = netDelta.sparkSession
-    val p = payloadCols.map(col)
-    val touched = StoreTimers.timed("buckets") {
-      netDelta.select(bucketExpr.cast("int").as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-    }
-    val template = netDelta.filter(lit(false))
-      .select(p :+ lit(0L).as("__mult"): _*)
-    val prevSlice = readBuckets(spark, dir, family, prevId, touched, template)
-      .select(p :+ col("__mult"): _*)
-    // re-compress defensively (the merge's full-outer join needs one
-    // row per payload on each side) — delta-sized
-    val net = netDelta.groupBy(p: _*)
-      .agg(sum(col(wCol)).as("__dm")).filter(col("__dm") =!= 0)
-    val merged = prevSlice.join(net, payloadCols, "full_outer")
-      .select(p :+
-        (coalesce(col("__mult"), lit(0L)) +
-          coalesce(col("__dm"), lit(0L))).as("__mult"): _*)
-      .withColumn("__mult",
-        when(col("__mult") < 0,
-          raise_error(concat(
-            lit(s"multiset fold drives a '$family' row's multiplicity " +
-              "negative ("), col("__mult").cast("string"),
-            lit(") — the delta deletes join rows the store never absorbed"))))
-          .otherwise(col("__mult")))
-      .filter(col("__mult") > 0)
-    (merged.withColumn("__g_bucket", bucketExpr.cast("int")), touched)
   }
 }

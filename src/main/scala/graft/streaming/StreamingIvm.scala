@@ -50,7 +50,7 @@ object StreamingIvm {
   def applyBatch(
       batch: DataFrame, batchId: Long, groupCols: Seq[String],
       opCol: String, valueCol: String, aggDir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
+      storeBuckets: Int = BucketStore.StoreBuckets): Long = {
     val spark = batch.sparkSession
     // fail loudly on an op outside {I, D} — including NULL, which
     // filters silently out of BOTH legs of any when() split. Only the

@@ -52,7 +52,7 @@ object StreamingIvmQuantile {
       batch: DataFrame, batchId: Long, keyCol: String,
       groupCols: Seq[String], opCol: String, valueCol: String,
       dir: String, lo: Double, hi: Double, buckets: Int,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets): Long = {
+      storeBuckets: Int = BucketStore.StoreBuckets): Long = {
     val spark = batch.sparkSession
     Seq("__qb", "__g_bucket", "__k_bucket", "__op").foreach(c =>
       require(!batch.columns.contains(c),
@@ -78,7 +78,7 @@ object StreamingIvmQuantile {
       // validation stays exact.
       val qb = when(col(valueCol).isNull, lit(-1L))
         .otherwise(IvmQuantile.bucketIdOf(col(valueCol), lo, hi, buckets))
-      val prepared = BucketStore.prepareCdcUpsertExpr(delta, dataCols,
+      val prepared = BucketStore.prepareCdcUpsert(delta, dataCols,
         Seq(keyCol), qb, dir, "rows", batchId, prevId, storeBuckets, "rows")
       BucketStore.writePrepared(spark, dir, batchId, prevId, prepared)
 

@@ -56,7 +56,7 @@ object StreamingIvmTopK {
       batch: DataFrame, batchId: Long,
       groupCols: Seq[String], opCol: String, keyCol: String, k: Int,
       dir: String,
-      storeBuckets: Int = StreamingIvmMinMax.StoreBuckets,
+      storeBuckets: Int = BucketStore.StoreBuckets,
       weightCol: Option[String] = None): Long = {
     val spark = batch.sparkSession
     Seq("__g_bucket", "__k_bucket").foreach(c =>

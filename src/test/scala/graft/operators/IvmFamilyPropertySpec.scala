@@ -218,9 +218,9 @@ class IvmFamilyPropertySpec extends AnyFunSuite {
   }
 
   test("composed pipeline (deltaJoin → compress → deltaJoin → foldAggSigned) tracks the three-way model (seeded)") {
-    // the ivm7 kernel algebra (the signed, many-to-one form of what
-    // StreamingIvmComposeN maintains with weighted multiset
-    // intermediates) under arbitrary CDC interleavings on ALL THREE bases at once — reprices landing on
+    // the ivm7 kernel algebra (the signed, many-to-one form of the
+    // weighted multiset chain ivm8 checks) under arbitrary CDC
+    // interleavings on ALL THREE bases at once — reprices landing on
     // dying orders (stage-1 cross-term cancellations), upstream deltas
     // landing on moved dims (stage-2 cross term), groups emptying and
     // reappearing. Two invariants per step: the COMPRESSED stage-1

@@ -1,156 +1,158 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import StreamingIvmComposeN.BaseSpec
 
 /** The round-15 write-side contract: a micro-batch writes ONLY the
   * buckets its delta touched (plus a bucket→batch manifest per
-  * family), so bytes written per batch are delta-proportional — the
-  * r14 full five-family rewrite is gone. Pinned at the FILESYSTEM
-  * level on the stores of the 3-base [[StreamingIvmComposeN]] chain
-  * `(L ⋈ O) ⋈ C`: an L-only batch leaves no data directory at all in
-  * the untouched families (manifest + marker only), untouched buckets
-  * stay linked to the batch directory that last wrote them, and GC
-  * never deletes a directory a live manifest still references (the
-  * view parity across StreamingIvmWarehouseViewSpec's batches already
-  * proves the linked reads are correct). */
+  * family), so bytes written per batch are delta-proportional. Pinned
+  * at the FILESYSTEM level on the two families of a
+  * [[StreamingIvmTopK]] view (`counts` and `topk`): a one-group batch
+  * writes that group's bucket in each family and nothing else,
+  * untouched buckets stay linked to the batch directory that last
+  * wrote them, and GC never deletes a directory a live manifest still
+  * references. */
 @org.scalatest.tags.Slow
 class BucketStoreUpsertSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "bucket-upsert")
   import spark.implicits._
 
-  private type Chg = (String, String, Option[Long], Option[Long],
-    Option[Long], Option[Double], Option[String])
-  private def l(op: String, lk: Long, ok: Long, price: Double): Chg =
-    ("L", op, Some(lk), Some(ok), None, Some(price), None)
-  private def o(op: String, ok: Long, ck: Long): Chg =
-    ("O", op, None, Some(ok), Some(ck), None, None)
-  private def c(op: String, ck: Long, g: String): Chg =
-    ("C", op, None, None, Some(ck), None, Some(g))
+  private val K = 2
+  private val SB = 8
+  private val families = Seq("counts", "topk")
+  private val groups = (0 until 8).map(i => s"g$i")
 
-  private val bases = Seq(
-    BaseSpec("L", Seq("lk", "ok", "price"), "lk"),
-    BaseSpec("O", Seq("ok", "ck"), "ok"),
-    BaseSpec("C", Seq("ck", "g"), "ck"))
-  private val families = Seq("rows_L", "rows_O", "inter_1", "rows_C", "agg")
+  private type Occ = (String, String, Long) // (group, op, key)
 
-  private def apply(rows: Seq[Chg], id: Long, dir: String): Long =
-    StreamingIvmComposeN.applyBatch(
-      rows.toDF("side", "op", "lk", "ok", "ck", "price", "g"), id,
-      "side", "op", bases, Seq(Seq("ok"), Seq("ck")), Seq("g"), "price", dir)
+  // every group holds keys 1 (×3), 2 (×2) and 3 (×1)
+  private val seedRows: Seq[Occ] = groups.flatMap(g =>
+    Seq(1L, 1L, 1L, 2L, 2L, 3L).map(k => (g, "I", k)))
 
-  private def readView(dir: String): DataFrame =
-    StreamingIvmComposeN.readView(spark, dir, bases)
+  private def fold(rows: Seq[Occ], id: Long, dir: String): Long =
+    StreamingIvmTopK.applyBatch(rows.toDF("g", "op", "k"), id,
+      Seq("g"), "op", "k", K, dir, storeBuckets = SB)
 
-  private def seed(dir: String): Unit = apply(
-    Seq(l("I", 1, 10, 10.0), l("I", 2, 10, 7.0), l("I", 3, 20, 3.0),
-      o("I", 10, 100), o("I", 20, 200),
-      c("I", 100, "a"), c("I", 200, "b")), 0L, dir)
+  private def view(dir: String): Seq[(String, Long, Long, Int)] =
+    StreamingIvmTopK.readTopK(spark, dir)
+      .select(col("g"), col("k"), col("cnt"), col("rnk")).as[(String, Long, Long, Int)]
+      .collect().sortBy(t => (t._1, t._4)).toSeq
+
+  /** The top-K recompute over every occurrence delivered so far. */
+  private def recompute(batches: Seq[Occ]*): Seq[(String, Long, Long, Int)] = {
+    val counts = scala.collection.mutable.Map[(String, Long), Long]().withDefaultValue(0L)
+    batches.flatten.foreach { case (g, op, k) =>
+      counts((g, k)) += (if (op == "I") 1L else -1L)
+    }
+    counts.filter(_._2 > 0).toSeq.groupBy(_._1._1).toSeq.flatMap { case (g, kc) =>
+      kc.map { case ((_, k), c) => (k, c) }.sortBy { case (k, c) => (-c, k) }
+        .take(K).zipWithIndex.map { case ((k, c), i) => (g, k, c, i + 1) }
+    }.sortBy(t => (t._1, t._4))
+  }
+
+  private def bucketOf(g: String): Int =
+    Seq(g).toDF("g").select(BucketStore.bucketize(Seq("g"), SB)).as[Int].head()
+
+  private lazy val seeded: Seq[Int] = groups.map(bucketOf).distinct.sorted
 
   private def ls(p: String): Seq[String] = {
     val f = new java.io.File(p)
     if (!f.exists) Nil else f.listFiles().map(_.getName).toSeq.sorted
   }
 
-  test("an L-only batch writes NO data for untouched families — manifest + marker only") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert-lonly").toString
-    seed(dir)
-    apply(Seq(l("D", 2, 10, 7.0), l("I", 4, 20, 2.0)), 1L, dir)
-    // untouched families: rows_O and rows_C carry no delta — their
-    // batch=1 directory is a manifest (+ keys manifest) and the marker
-    Seq("rows_O", "rows_C").foreach { fam =>
-      val entries = ls(s"$dir/$fam/batch=1")
-      assert(entries.contains("manifest") && entries.contains("_SUCCESS"),
-        s"$fam: $entries")
-      assert(!entries.contains("data") && !entries.contains("keys"),
-        s"$fam wrote data for an L-only batch: $entries")
+  private def dataBuckets(dir: String, family: String, id: Long): Seq[String] =
+    ls(s"$dir/$family/batch=$id/data").filter(_.startsWith("__g_bucket="))
+
+  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+
+  test("a one-group batch writes only its bucket in each family — every other bucket is a manifest link") {
+    val dir = tmp("upsert-onegroup")
+    fold(seedRows, 0L, dir)
+    val hot = bucketOf("g0")
+    assert(seeded.size >= 2, seeded.toString)
+    val b1 = Seq(("g0", "D", 1L), ("g0", "I", 4L))
+    fold(b1, 1L, dir)
+    families.foreach { fam =>
+      assert(dataBuckets(dir, fam, 1L) == Seq(s"__g_bucket=$hot"), fam)
+      // every untouched bucket still points at batch 0
+      val m = BucketStore.readManifest(spark, dir, fam, Some(1L))
+      assert(m == seeded.map(b => b -> (if (b == hot) 1L else 0L)).toMap, s"$fam: $m")
     }
-    // ...and their manifests still point every bucket at batch 0
-    val m = BucketStore.readManifest(spark, dir, "rows_C", Some(1L))
-    assert(m.nonEmpty && m.values.forall(_ == 0L), m.toString)
-    // touched families DID write, but only their touched buckets: the
-    // 2-row L delta lands in at most 2 join-key buckets (vs 3 seeded
-    // L rows across 2 orders)
-    val lData = ls(s"$dir/rows_L/batch=1/data").filter(_.startsWith("__g_bucket="))
-    assert(lData.nonEmpty && lData.size <= 2, lData.toString)
-    // the view still answers from the linked state: l1 under order 10
-    // (group a), l3 + the new l4 under order 20 (group b)
-    val view = readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1)
-    assert(view.toSeq == Seq(("a", 1L), ("b", 2L)), view.toSeq.toString)
+    assert(view(dir) == recompute(seedRows, b1))
   }
 
   test("untouched buckets survive GC while a live manifest references them; unreferenced batch dirs are deleted") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert-gc").toString
-    seed(dir)
-    // three C-only batches: rows_L/rows_O data stays linked to batch 0
-    apply(Seq(c("D", 100, "a"), c("I", 100, "x")), 1L, dir)
-    apply(Seq(c("D", 100, "x"), c("I", 100, "y")), 2L, dir)
-    apply(Seq(c("D", 100, "y"), c("I", 100, "z")), 3L, dir)
-    // batch 0's rows_L data directory is still referenced (its buckets
-    // were never rewritten) — GC must have kept it
-    assert(ls(s"$dir/rows_L/batch=0").contains("data"))
-    val m3 = BucketStore.readManifest(spark, dir, "rows_L", Some(3L))
-    assert(m3.values.toSet == Set(0L), m3.toString)
-    // intermediate C-only batch dirs that nothing references anymore
-    // (batch 1's rows_C buckets were rewritten by 2 and 3, and GC keeps
-    // only the last two committed manifests' references) are gone
-    assert(ls(s"$dir/rows_C").forall(n => n != "batch=1"),
-      ls(s"$dir/rows_C").toString)
-    // the view answers through the linked stores
-    val view = readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1).toSeq
-    assert(view == Seq(("b", 1L), ("z", 2L)), view.toString)
+    val dir = tmp("upsert-gc")
+    fold(seedRows, 0L, dir)
+    val hot = bucketOf("g0")
+    // three batches on g0 only: every other bucket stays linked to batch 0
+    val bs = Seq(
+      Seq(("g0", "I", 3L), ("g0", "I", 3L)),
+      Seq(("g0", "D", 2L)),
+      Seq(("g0", "I", 5L)))
+    bs.zipWithIndex.foreach { case (b, i) => fold(b, i + 1L, dir) }
+    families.foreach { fam =>
+      // batch 0's data directory is still referenced (its other
+      // buckets were never rewritten) — GC must have kept it
+      assert(ls(s"$dir/$fam/batch=0").contains("data"), fam)
+      val m3 = BucketStore.readManifest(spark, dir, fam, Some(3L))
+      assert(m3 == seeded.map(b => b -> (if (b == hot) 3L else 0L)).toMap, s"$fam: $m3")
+      // batch 1's hot bucket was rewritten by 2 and 3, and GC keeps
+      // only the last two committed manifests' references
+      assert(!ls(s"$dir/$fam").contains("batch=1"), s"$fam: ${ls(s"$dir/$fam")}")
+    }
+    assert(view(dir) == recompute(seedRows +: bs: _*))
   }
 
   test("compaction collapses the link fan-out; reads identical; folds continue; redelivery idempotent (r15)") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert-compact").toString
-    seed(dir)
-    apply(Seq(c("D", 100, "a"), c("I", 100, "x")), 1L, dir)
-    apply(Seq(l("D", 2, 10, 7.0)), 2L, dir)
-    // rows_L's manifest now points into at least two batch dirs
-    val spread = BucketStore.readManifest(spark, dir, "rows_L", Some(2L))
-      .values.toSet
-    assert(spread.size >= 2, spread.toString)
-    val before = readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1).toSeq
-    StreamingIvmComposeN.compact(spark, dir, bases, 3L)
+    val dir = tmp("upsert-compact")
+    fold(seedRows, 0L, dir)
+    val hot = bucketOf("g0")
+    val cold = groups.find(g => bucketOf(g) != hot).get
+    val b1 = Seq(("g0", "I", 3L))
+    val b2 = Seq((cold, "D", 1L))
+    fold(b1, 1L, dir)
+    fold(b2, 2L, dir)
+    // each family's manifest now points into at least two batch dirs
+    families.foreach { fam =>
+      val spread = BucketStore.readManifest(spark, dir, fam, Some(2L)).values.toSet
+      assert(Set(1L, 2L).subsetOf(spread), s"$fam: $spread")
+    }
+    val before = view(dir)
+    StreamingIvmTopK.compact(spark, dir, 3L)
     // every family's manifest now points at the compacted dir only
     families.foreach { fam =>
       val m = BucketStore.readManifest(spark, dir, fam, Some(3L))
-      assert(m.nonEmpty && m.values.toSet == Set(3L), s"$fam: $m")
+      assert(m.keySet == seeded.toSet && m.values.toSet == Set(3L), s"$fam: $m")
     }
-    assert(readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1).toSeq
-      == before)
+    assert(view(dir) == before)
     // crash-replay of the compaction: same id, identical state
-    StreamingIvmComposeN.compact(spark, dir, bases, 3L)
-    assert(readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1).toSeq
-      == before)
+    StreamingIvmTopK.compact(spark, dir, 3L)
+    assert(view(dir) == before)
     // a later fold runs against the compacted state, and ITS GC drops
     // the pre-compaction dirs nothing references anymore
-    apply(Seq(l("I", 4, 20, 2.0)), 4L, dir)
-    assert(ls(s"$dir/rows_L").forall(n => n != "batch=0"),
-      ls(s"$dir/rows_L").toString)
-    val after = readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1).toSeq
-    assert(after == Seq(("b", 2L), ("x", 1L)), after.toString)
+    val b4 = Seq(("g0", "I", 6L))
+    fold(b4, 4L, dir)
+    families.foreach(fam =>
+      assert(!ls(s"$dir/$fam").contains("batch=0"), s"$fam: ${ls(s"$dir/$fam")}"))
+    assert(view(dir) == recompute(seedRows, b1, b2, b4))
   }
 
   test("a failed batch leaves no marker and the next fold GCs its debris") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert-fail").toString
-    seed(dir)
-    intercept[IllegalArgumentException](
-      apply(Seq(l("D", 99, 10, 1.0)), 1L, dir)) // unknown delete image
+    val dir = tmp("upsert-fail")
+    fold(seedRows, 0L, dir)
+    // an over-delete: g0 holds key 3 once
+    val e = intercept[Exception](fold(Seq(("g0", "D", 3L), ("g0", "D", 3L)), 1L, dir))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" <- ")
+    assert(chain.contains("never absorbed"), chain)
     // nothing committed at id 1; the view still reads batch 0
     assert(BucketStore.committedAll(spark, dir, families) == Seq(0L))
-    // a successful batch then folds normally and cleans up
-    apply(Seq(l("I", 4, 20, 2.0)), 1L, dir)
-    val view = readView(dir)
-      .select("g", "n").as[(String, Long)].collect().sortBy(_._1).toSeq
-    assert(view == Seq(("a", 2L), ("b", 2L)), view.toString)
+    assert(view(dir) == recompute(seedRows))
+    // a successful batch then folds normally at the same id
+    val b1 = Seq(("g0", "I", 4L))
+    fold(b1, 1L, dir)
+    assert(BucketStore.committedAll(spark, dir, families) == Seq(0L, 1L))
+    assert(view(dir) == recompute(seedRows, b1))
   }
 }

@@ -5,14 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import StreamingIvmComposeN.BaseSpec
-
 /** Default-gate cases for the `@Slow` StreamingIvmTopKSpec,
   * BucketStoreUpsertSpec, BucketStoreHardeningSpec and
-  * StreamingIvmComposeNSpec: one small case each, so a change to the
-  * top-k fold, the upsert store or the composed chain's commit protocol
-  * is exercised without `SPARK_GRAFT_TEST_FULL`. The full suites stay
-  * as they are. */
+  * StreamingIvmQuantileSpec: one small case each, so a change to the
+  * top-k fold, the upsert store or the CDC key discipline is exercised
+  * without `SPARK_GRAFT_TEST_FULL`. The full suites stay as they
+  * are. */
 class StreamingStoreFastSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "store-fast")
   import spark.implicits._
@@ -112,63 +110,60 @@ class StreamingStoreFastSpec extends AnyFunSuite {
       assert(!ls(s"$dir/$f").contains("batch=1"), s"$f: ${ls(s"$dir/$f")}"))
   }
 
-  // a 3-base chain A(ak, k1, v) ⋈ B(bk, k1, k2) ⋈ C(ck, k2, g), tagged
-  // change rows (side, op, ak, bk, ck, k1, k2, v, g)
-  private val chain = Seq(
-    BaseSpec("A", Seq("ak", "k1", "v"), "ak"),
-    BaseSpec("B", Seq("bk", "k1", "k2"), "bk"),
-    BaseSpec("C", Seq("ck", "k2", "g"), "ck"))
-  private val chainStages = Seq(Seq("k1"), Seq("k2"))
-  private type Chg = (String, String, Option[Long], Option[Long],
-    Option[Long], Option[Long], Option[Long], Option[Double], Option[String])
-  private def a(op: String, ak: Long, k1: Long, v: Double): Chg =
-    ("A", op, Some(ak), None, None, Some(k1), None, Some(v), None)
-  private def b(op: String, bk: Long, k1: Long, k2: Long): Chg =
-    ("B", op, None, Some(bk), None, Some(k1), Some(k2), None, None)
-  private def c(op: String, ck: Long, k2: Long, g: String): Chg =
-    ("C", op, None, None, Some(ck), None, Some(k2), None, Some(g))
-  private def chainDf(rows: Seq[Chg]): DataFrame =
-    rows.toDF("side", "op", "ak", "bk", "ck", "k1", "k2", "v", "g")
-  // group x joins a1, a2 (through b1) and a3; group y joins a1, a2
-  // (through b2)
-  private val chainSeed = Seq(a("I", 1, 1, 10.0), a("I", 2, 1, 7.0),
-    a("I", 3, 2, 3.0), b("I", 1, 1, 100), b("I", 2, 1, 200),
-    b("I", 3, 2, 100), c("I", 1, 100, "x"), c("I", 2, 200, "y"))
+  // (key, group, op, value) into a quantile view over [0, 100) in 16
+  // value buckets
+  private val qBatches = Seq(
+    Seq((1L, "a", "I", 10.0), (2L, "a", "I", 40.0), (3L, "a", "I", 70.0),
+      (4L, "b", "I", 5.0), (5L, "b", "I", 95.0)),
+    Seq((2L, "a", "D", 40.0), (6L, "a", "I", 41.5), (7L, "a", "I", 12.5)))
+  private val qPs = Seq(0.25, 0.5, 0.9)
 
-  test("a composed chain's hasCommitted and compact cover the families of the face it maintains") {
-    // top-k face (counts, topk): committed after one fold, and a
-    // compaction rewrites both view families and reads back identically
-    val topkDir = tmp("fast-chain-topk")
-    StreamingIvmComposeN.applyBatchTopK(chainDf(chainSeed), 0L, "side", "op",
-      chain, chainStages, Seq("g"), "ak", 2, None, topkDir, storeBuckets = 4)
-    assert(StreamingIvmComposeN.hasCommitted(spark, topkDir, chain))
-    def topkView(): Seq[String] =
-      StreamingIvmComposeN.readTopKView(spark, topkDir, chain)
-        .collect().map(_.toString).sorted.toSeq
-    val before = topkView()
-    StreamingIvmComposeN.compact(spark, topkDir, chain, 1L)
-    Seq("counts", "topk").foreach(f => assert(
-      BucketStore.readManifest(spark, topkDir, f, Some(1L)).values.toSet == Set(1L), f))
-    assert(topkView() == before)
+  private def quantileFold(rows: Seq[(Long, String, String, Double)], id: Long,
+      dir: String): Long =
+    StreamingIvmQuantile.applyBatch(rows.toDF("k", "g", "op", "v"), id,
+      "k", Seq("g"), "op", "v", dir, 0.0, 100.0, 16)
 
-    // min/max face (final, agg): the compacted id commits for both, and
-    // the next fold — deleting the max of x and of y — continues from it
-    val mmDir = tmp("fast-chain-minmax")
-    def minMax(rows: Seq[Chg], id: Long): Long =
-      StreamingIvmComposeN.applyBatchMinMax(chainDf(rows), id, "side", "op",
-        chain, chainStages, Seq("g"), "v", mmDir, storeBuckets = 4)
-    def mmView(): Seq[(String, Long, Double, Double, Double)] =
-      StreamingIvmComposeN.readMinMaxView(spark, mmDir, chain)
-        .select(col("g"), col("n"), col("s").cast("double"), col("mn"), col("mx"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-          r.getDouble(3), r.getDouble(4))).sortBy(_._1).toSeq
-    minMax(chainSeed, 0L)
-    assert(mmView() == Seq(("x", 3L, 20.0, 3.0, 10.0), ("y", 2L, 17.0, 7.0, 10.0)))
-    StreamingIvmComposeN.compact(spark, mmDir, chain, 1L)
-    assert(BucketStore.committedAll(spark, mmDir, Seq("final", "agg")) == Seq(0L, 1L))
-    minMax(Seq(a("D", 1, 1, 10.0)), 2L)
-    assert(mmView() == Seq(("x", 2L, 10.0, 3.0, 7.0), ("y", 1L, 7.0, 7.0, 7.0)))
-    // the fold read the compacted batch: its GC kept (1, 2) only
-    assert(BucketStore.committedAll(spark, mmDir, Seq("final", "agg")) == Seq(1L, 2L))
+  private def percentiles(dir: String): Seq[(String, Double, Double)] =
+    StreamingIvmQuantile.readPercentiles(spark, dir, Seq("g"), "v", qPs,
+        0.0, 100.0, 16)
+      .select(col("g"), col("p"), col("value")).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
+      .sortBy(t => (t._1, t._2)).toSeq
+
+  /** Sort-based PERCENTILE_CONT over the rows surviving batches 0..n. */
+  private def percentileCont(n: Int): Seq[(String, Double, Double)] = {
+    val live = scala.collection.mutable.Map[Long, (String, Double)]()
+    qBatches.take(n + 1).flatten.foreach {
+      case (k, g, "I", v) => live(k) = (g, v)
+      case (k, _, _, _) => live -= k
+    }
+    live.values.groupBy(_._1).toSeq.flatMap { case (g, rows) =>
+      val vs = rows.map(_._2).toSeq.sorted
+      qPs.map { p =>
+        val idx = (vs.size - 1).toDouble * p
+        val lo = math.floor(idx).toInt
+        val hi = math.min(lo + 1, vs.size - 1)
+        (g, p, vs(lo) + (idx - math.floor(idx)) * (vs(hi) - vs(lo)))
+      }
+    }.sortBy(t => (t._1, t._2))
+  }
+
+  test("quantile fold ≡ PERCENTILE_CONT; each CDC key refusal fails before anything commits") {
+    val dir = tmp("fast-quantile")
+    qBatches.indices.foreach { i =>
+      quantileFold(qBatches(i), i.toLong, dir)
+      assert(percentiles(dir) == percentileCont(i), s"batch $i")
+    }
+    Seq(
+      Seq((99L, "a", "D", 10.0)) -> "deletes rows the store never held",
+      Seq((1L, "b", "I", 50.0)) -> "inserts a key the store still holds",
+      Seq((60L, "a", "I", 1.0), (60L, "a", "I", 2.0)) -> "inserts the same key twice"
+    ).foreach { case (bad, refusal) =>
+      val e = intercept[IllegalArgumentException](quantileFold(bad, 2L, dir))
+      assert(e.getMessage.contains(refusal), e.getMessage)
+      assert(BucketStore.committedAll(spark, dir, Seq("rows", "counts")) == Seq(0L, 1L),
+        refusal)
+    }
+    assert(percentiles(dir) == percentileCont(1))
   }
 }
