@@ -1,9 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — prints one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR, and writes the same JSON to `BENCH.json` in the
   * current directory so the full map survives any stdout truncation.
+  *
+  *   runMain graft.Bench [prefix,…]
+  *
+  * times every SparkEntry key, or only those whose names start with one
+  * of the comma-separated prefixes (the filter `Verify` and `PlanDump`
+  * share). Its [[median]], [[millis]] and [[timedNoop]] are the timing
+  * helpers of both measurement mains, this one and `graft.Scaling`.
   *
   * Measurement protocol (round 5, amended round 6): every query is timed
   * as the MEDIAN of `SPARK_GRAFT_BENCH_ITERS` (default 3) back-to-back
@@ -48,6 +55,46 @@ import org.apache.spark.sql.SparkSession
   *     alone, and normalize per-query numbers by the probe ratio.
   */
 object Bench {
+  /** Median of `xs` (the mean of the middle two for an even count). */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  /** `d` rounded to millis: every second and ratio the mains publish. */
+  def millis(d: Double): Double = math.rint(d * 1000) / 1000
+
+  /** `SPARK_GRAFT_BENCH_ITERS` (default 3, at least 1): the timed runs
+    * behind each median, in Bench and Scaling alike. */
+  def envIters: Int =
+    math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
+
+  /** The sf0.001 sibling of `sfDir` (or `sfDir` itself when it has
+    * none): the untimed warm-up compiles the same whole-stage-codegen
+    * classes as the timed runs (generated code is keyed on plan shape,
+    * not input size), so no timed run pays Janino compilation. */
+  def warmDirOf(sfDir: String): String =
+    Option(java.nio.file.Paths.get(sfDir).getParent).map(_.resolve("sf0.001"))
+      .filter(java.nio.file.Files.isDirectory(_)).fold(sfDir)(_.toString)
+
+  /** One timed run: the wall seconds of evaluating `df` and draining it
+    * into the noop sink, and what it threw. `df` is by-name, so a
+    * builder call passed here pays its DAG build inside the window,
+    * while a frame bound beforehand times the drain alone. The noop
+    * sink evaluates every output row and column; a count() would let
+    * Catalyst prune unreferenced projections, so projection-heavy
+    * queries would be timed as little more than a scan. The session's
+    * caches are cleared after the window: a cache must not subsidize a
+    * later run, and its teardown is not the query's cost (round 8). */
+  def timedNoop(spark: SparkSession)(df: => DataFrame): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val err = try { df.write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(e) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache()
+    (sec, err)
+  }
+
   /** Degraded-run threshold for [[calibrationSec]]: ~2.6× the ~0.19 s an
     * idle 32-core bench host measures. A host loaded enough to distort
     * query timings by the 3-5× seen in the round-7 driver capture blows
@@ -201,13 +248,10 @@ object Bench {
     val xs = samples.filter(_ > 0).sorted
     if (xs.isEmpty) ""
     else {
-      def s3(d: Double) = math.rint(d * 1000) / 1000
-      val med = if (xs.size % 2 == 1) xs(xs.size / 2)
-        else (xs(xs.size / 2 - 1) + xs(xs.size / 2)) / 2
       val p90 = xs(math.min(xs.size - 1, (xs.size * 9) / 10))
       val hot = xs.count(_ > CalParRatioBound)
-      s""","probe_ratio":{"med":${s3(med)},"p90":${s3(p90)},""" +
-        s""""max":${s3(xs.last)},"n":${xs.size},"n_hot":$hot}"""
+      s""","probe_ratio":{"med":${millis(median(xs))},"p90":${millis(p90)},""" +
+        s""""max":${millis(xs.last)},"n":${xs.size},"n_hot":$hot}"""
     }
   }
 
@@ -234,15 +278,14 @@ object Bench {
       e2eSec: Option[Double], trainSec: Option[Double],
       queries: Seq[(String, Double)], cpus: Int, iters: Int,
       sf: String): String = {
-    def s3(d: Double) = math.rint(d * 1000) / 1000
     val fams = queries.groupBy(q => familyOf(q._1)).toSeq.sortBy(_._1)
-      .map { case (f, qs) => "\"" + f + "\":" + s3(qs.map(_._2).sum) }
+      .map { case (f, qs) => "\"" + f + "\":" + millis(qs.map(_._2).sum) }
       .mkString("{", ",", "}")
-    val e2e = e2eSec.fold("")(s => s""","e2e_sec":${s3(s)}""")
-    val train = trainSec.fold("")(s => s""","e2e_train_sec":${s3(s)}""")
-    s"""BENCH-SUMMARY {"metric":"total","value":${s3(total)},"unit":"sec",""" +
+    val e2e = e2eSec.fold("")(s => s""","e2e_sec":${millis(s)}""")
+    val train = trainSec.fold("")(s => s""","e2e_train_sec":${millis(s)}""")
+    s"""BENCH-SUMMARY {"metric":"total","value":${millis(total)},"unit":"sec",""" +
       s""""n":$n,"n_errors":$nErrors,"n_retry":$nRetry,""" +
-      s""""degraded":$degraded,"cal_par_ratio":${s3(parRatio)}""" +
+      s""""degraded":$degraded,"cal_par_ratio":${millis(parRatio)}""" +
       e2e + train +
       s""","families":$fams,"cpus":$cpus,"iters":$iters,"sf":"$sf"}"""
   }
@@ -260,7 +303,7 @@ object Bench {
     */
   def queryStatsJson(stats: Seq[(String, Double, Double)]): String = {
     def m(sel: ((String, Double, Double)) => Double) =
-      stats.map(s => "\"" + s._1 + "\":" + math.rint(sel(s) * 1000) / 1000)
+      stats.map(s => "\"" + s._1 + "\":" + millis(sel(s)))
         .mkString("{", ",", "}")
     s""""queries":${m(_._2)},"queries_min":${m(_._3)}"""
   }
@@ -296,15 +339,14 @@ object Bench {
                calStart: Double, calEnd: Double,
                retryDegraded: Boolean = false,
                calParStart: Double = -1.0, calParEnd: Double = -1.0): String = {
-    def s3(d: Double) = math.rint(d * 1000) / 1000
     val parRatio = calParRatio(calStart, calEnd, calParStart, calParEnd)
     val degraded = calStart > CalibrationBoundSec ||
       calEnd > CalibrationBoundSec || retryDegraded ||
       parRatio > CalParRatioBound // -1 sentinel never votes
-    s""""load":{"avg_start":${s3(avgStart)},"avg_end":${s3(avgEnd)},""" +
-      s""""cal_start_sec":${s3(calStart)},"cal_end_sec":${s3(calEnd)},""" +
-      s""""cal_par_start_sec":${s3(calParStart)},"cal_par_end_sec":${s3(calParEnd)},""" +
-      s""""cal_par_ratio":${s3(parRatio)},""" +
+    s""""load":{"avg_start":${millis(avgStart)},"avg_end":${millis(avgEnd)},""" +
+      s""""cal_start_sec":${millis(calStart)},"cal_end_sec":${millis(calEnd)},""" +
+      s""""cal_par_start_sec":${millis(calParStart)},"cal_par_end_sec":${millis(calParEnd)},""" +
+      s""""cal_par_ratio":${millis(parRatio)},""" +
       s""""cal_bound_sec":$CalibrationBoundSec,""" +
       s""""cal_par_ratio_bound":$CalParRatioBound,""" +
       s""""retry_degraded":$retryDegraded,"degraded":$degraded}"""
@@ -322,25 +364,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed, not passed through: a non-numeric value (e.g. "*", valid
-    // for a Spark master but not here) would emit invalid JSON below and
-    // an invalid shuffle-partition count — fail loudly at startup instead
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toIntOption.filter(_ > 0)
-      .getOrElse(sys.error(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '${sys.env("SPARK_GRAFT_CPUS")}'"))
-    val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).getParent
-      val cand = if (p == null) null else p.resolve("sf0.001")
-      if (cand != null && java.nio.file.Files.isDirectory(cand)) cand.toString
-      else sfDir
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.envCpus
+    val iters = envIters
+    val warmDir = warmDirOf(sfDir)
+    val spark = graft.core.GraftSession.local()
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     calibrationSec() // JIT warm-up; first probe compiles the loop
     val calStart = calibrationSec()
@@ -354,37 +381,17 @@ object Bench {
     // warm the JVM/codegen path so the first measured query isn't
     // charged for session startup
     spark.range(1000000).selectExpr("sum(id)").collect()
-    // noop sink: fully evaluates every output row+column. A count() probe
-    // lets Catalyst prune unreferenced projections, so projection-heavy
-    // queries (text analysis, embeddings, scalar-function families) would
-    // be timed as little more than a scan.
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     // ~192 contention samples spread across the sweep (see
     // miniProbeRatio) — taken OUTSIDE every timed window
     val probeRatios = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try { run(fn(spark, warmDir)) } catch { case _: Throwable => () }
-      spark.catalog.clearCache() // warm-up must not subsidize the timed runs
-      var err: Option[String] = None
-      val samples = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch {
-          case e: Throwable => err = Some(
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // caches must not subsidize later runs — but teardown is not the
-        // query's cost, so it stays OUTSIDE the timed window (round 8)
-        spark.catalog.clearCache()
-        sec
-      }
+    val outcomes = SparkEntry.selected(args.headOption).map { case (name, fn) =>
+      timedNoop(spark)(fn(spark, warmDir)) // untimed codegen warm-up
+      val runs = (1 to iters).map(_ => timedNoop(spark)(fn(spark, sfDir)))
+      val err = runs.flatMap(_._2).lastOption.map(e =>
+        s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
+      val samples = runs.map(_._1)
       probeRatios += miniProbeRatio()
-      (name, math.rint(median(samples) * 1000) / 1000, samples.min, err)
+      (name, millis(median(samples)), samples.min, err)
     }
     // full JSON string escape (shared table): Spark exception messages
     // are routinely multi-line, and a raw control char inside the
@@ -401,13 +408,8 @@ object Bench {
       // as proof of load, and degraded flips true on a bogus number.
       // Failed retries publish null and never vote on degraded.
       def once(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val failed =
-          try { run(SparkEntry.queries(name)(spark, sfDir)); false }
-          catch { case _: Throwable => true }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (math.rint(sec * 1000) / 1000, failed)
+        val (sec, err) = timedNoop(spark)(SparkEntry.queries(name)(spark, sfDir))
+        (millis(sec), err.isDefined)
       }
       val (sec1, failed1) = once()
       if (failed1 || !retrySlow(med, sec1))
@@ -428,7 +430,7 @@ object Bench {
     val qs = queryStatsJson(ok)
     val es = errs.map { case (k, e) => "\"" + k + "\":\"" + esc(e) + "\"" }
       .mkString("{", ",", "}")
-    val total = math.rint(ok.map(_._2).sum * 1000) / 1000
+    val total = millis(ok.map(_._2).sum)
     // full-pipeline wall time (ddl drop + data/DVT drop over the 8
     // tables) vs the reference's 660 s data-migration allowance — the
     // only absolute numbers BASELINE.md publishes. One run, timed
@@ -475,9 +477,8 @@ object Bench {
       else timedE2e("e2e", "graft-e2e") { root =>
         val r = graft.pipeline.E2ePipeline.run(spark, sfDir, root)
         e2eSecOpt = Some(r.totalSec)
-        def s3(d: Double) = math.rint(d * 1000) / 1000
-        s""""sec":${s3(r.totalSec)},"ddl_sec":${s3(r.ddlSec)},""" +
-          s""""data_dvt_sec":${s3(r.dataSec)},"tables":${graft.pipeline.E2ePipeline.TableKeys.size},""" +
+        s""""sec":${millis(r.totalSec)},"ddl_sec":${millis(r.ddlSec)},""" +
+          s""""data_dvt_sec":${millis(r.dataSec)},"tables":${graft.pipeline.E2ePipeline.TableKeys.size},""" +
           s""""validations":${r.validations},"report_rows":${r.reportRows},""" +
           s""""all_success":${r.allSuccess}"""
       }
@@ -491,8 +492,7 @@ object Bench {
       else timedE2e("e2e_train", "graft-e2e-train") { root =>
         val r = graft.pipeline.TrainPipeline.run(spark, sfDir, root)
         trainSecOpt = Some(r.totalSec)
-        def s3(d: Double) = math.rint(d * 1000) / 1000
-        s""""sec":${s3(r.totalSec)},"rows_in":${r.rowsIn},""" +
+        s""""sec":${millis(r.totalSec)},"rows_in":${r.rowsIn},""" +
           s""""after_quality":${r.afterQuality},"segments_in":${r.segmentsIn},""" +
           s""""segments_kept":${r.segmentsKept},"after_exact":${r.afterExact},""" +
           s""""after_image_dedup":${r.afterImageDedup},"after_near_dup":${r.afterNearDup},""" +
@@ -503,7 +503,7 @@ object Bench {
           // per-stage wall attribution (r17): the funnel published row
           // counts but no times, so optimization rounds could not see
           // which stage dominates the 14+ s wall
-          r.stageWalls.map { case (n, s) => "\"" + n + "\":" + s3(s) }
+          r.stageWalls.map { case (n, s) => "\"" + n + "\":" + millis(s) }
             .mkString(""""stage_walls":{""", ",", "}")
       }
     val loadEnd = osBean.getSystemLoadAverage

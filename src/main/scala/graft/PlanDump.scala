@@ -25,25 +25,21 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, tag) = (args(0), args(1), args(2))
-    val nameFilter: String => Boolean =
-      if (args.length > 3) { val ps = args(3).split(","); n => ps.exists(n.startsWith) }
-      else _ => true
     val exec = args.length > 4 && args(4) == "exec"
     val spark = graft.core.GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => nameFilter(kv._1))
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          if (exec) df.write.format("noop").mode("overwrite").save()
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
+    SparkEntry.selected(args.lift(3)).foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        if (exec) df.write.format("noop").mode("overwrite").save()
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
+      } catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
+      spark.catalog.clearCache()
+    }
     spark.stop()
   }
 }

@@ -11,10 +11,22 @@ import org.apache.spark.sql.functions._
   * candidates, no all-pairs) and spec-proven at sf0.1; this main adds a
   * MEASURED point: it deterministically blows sf0.1's `documents` /
   * `embeddings` up by `SPARK_GRAFT_SCALE_FACTOR` (default 10×), times
-  * the four queries at both scales, and writes the observed growth
-  * exponents (`log(t_big/t_base) / log(factor)`) to `SCALING.md`.
-  * Near-linear exponents validate the bucketed shapes; superlinear ones
-  * name the next optimization target.
+  * the four queries at both scales, and prints the observed growth
+  * exponents (`log(t_big/t_base) / log(factor)`) as one markdown
+  * section on stdout — it never writes SCALING.md; the author pastes in
+  * the sections worth keeping. Near-linear exponents validate the
+  * bucketed shapes; superlinear ones name the next optimization target.
+  *
+  *   [SPARK_GRAFT_SCALE_FACTOR=10] [SPARK_GRAFT_SCALE_QUERIES=q,…]
+  *   runMain graft.Scaling <baseSfDir> <outDir>
+  *
+  * Timing uses Bench's helpers (noop sink, codegen warm-up at the
+  * sf0.001 sibling, median of `SPARK_GRAFT_BENCH_ITERS`) in two
+  * protocols: bind-once rows build the frame before each window opens
+  * and time its drain alone (d6's eager cluster-map build is thus
+  * excluded); `(incl. build)` rows — driver-round operators such as BPE
+  * training, PCA moments and PageRank, whose distributed work runs at
+  * DAG-build time — open the window before the builder runs.
   *
   * Blow-up construction (all deterministic, no RNG):
   *  - `documents` replica k ≥ 1: `doc_id += k·stride`; every WORD gets
@@ -41,38 +53,12 @@ import org.apache.spark.sql.functions._
   */
 object Scaling {
 
-  private def median(samples: Seq[Double]): Double = {
-    val s = samples.sorted
-    val m = if (s.size % 2 == 1) s(s.size / 2)
-            else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    math.rint(m * 1000) / 1000
-  }
-
-  private def timeOne(fn: => DataFrame, iters: Int): Double =
-    median((1 to iters).map { _ =>
-      // bind once: re-evaluating the by-name fn just to reach the
-      // session would rebuild the whole query DAG (and, for the dedup
-      // builders, re-register cache entries) a second time per sample
-      val df = fn
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      df.sparkSession.catalog.clearCache()
-      s
-    })
-
-  /** For driver-round operators (BPE training, PCA moments) the work
-    * happens at DAG-BUILD time — the opposite of d6's bind-once
-    * exclusion — so their timed window starts BEFORE the builder runs. */
-  private def timeEager(fn: => DataFrame, iters: Int): Double =
-    median((1 to iters).map { _ =>
-      val t0 = System.nanoTime()
-      val df = fn
-      df.write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      df.sparkSession.catalog.clearCache()
-      s
-    })
+  /** Seconds of one noop-sink run; a failure aborts the measurement. */
+  private def timed(spark: SparkSession)(df: => DataFrame): Double =
+    Bench.timedNoop(spark)(df) match {
+      case (sec, None) => sec
+      case (_, Some(e)) => throw e
+    }
 
   /** Which blown-up tables each measurable query reads — selective
     * generation keeps a restricted run (e.g. the 100× d4/d9 point)
@@ -317,19 +303,13 @@ object Scaling {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     // restrict to a comma-separated query subset (budget-bounded deep
-    // points, e.g. the 100× d4/d9 decade check): the run then appends
-    // a subset section to SCALING.md instead of rewriting the table
+    // points, e.g. the 100× d4/d9 decade check)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "2").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val iters = Bench.envIters
+    val cpus = graft.core.GraftSession.envCpus
+    val spark = graft.core.GraftSession.local()
     Bench.calibrationSec()
     val cal = Bench.calibrationSec()
 
@@ -453,113 +433,58 @@ object Scaling {
     // winnowing fingerprints never collide across replicas (every word
     // carries the replica suffix), so their duplicate structure per
     // unit volume is preserved exactly like the shingle family's.
-    // (eager = driver-round ops, timed inclusive of DAG build.)
-    // warm codegen on the tiny sibling so neither scale pays Janino
-    val warmDir = Paths.get(base).getParent.resolve("sf0.001").toString
-    (fixed ++ eager).foreach(q => try SparkEntry.queries(q)(spark, warmDir)
-      .write.format("noop").mode("overwrite").save() catch { case _: Throwable => () })
-    spark.catalog.clearCache()
+    val warmDir = Bench.warmDirOf(base)
+    (fixed ++ eager).foreach(q =>
+      Bench.timedNoop(spark)(SparkEntry.queries(q)(spark, warmDir)))
+    // bind-once: each frame is built before its window opens, so only
+    // the drain is timed (a by-name rebuild per sample would re-register
+    // the dedup builders' cache entries)
+    def bindOnce(fn: => DataFrame): Double =
+      Bench.millis(Bench.median((1 to iters).map { _ => val df = fn; timed(spark)(df) }))
+    // incl. build: the window opens before the builder runs
+    def inclBuild(fn: => DataFrame): Double =
+      Bench.millis(Bench.median((1 to iters).map(_ => timed(spark)(fn))))
 
     val rows = (fixed.map { q =>
-      val tBase = timeOne(SparkEntry.queries(q)(spark, base), iters)
-      val tBig = timeOne(SparkEntry.queries(q)(spark, out), iters)
-      (q, tBase, tBig)
-    } ++ (if (withSqrtC) Seq {
-      val tBase = timeOne(ivfSqrt(base, 23), iters)
-      val tBig = timeOne(ivfSqrt(out, sqrtMod(23, factor)), iters)
-      ("n3_ann_ivf_sqrtC", tBase, tBig)
-    } else Nil) ++ (if (withV12Shapes) Seq(
-      { val mk = v12Shape(true)
-        ("v12_bucket_locate", timeOne(mk(base), iters), timeOne(mk(out), iters)) },
-      { val mk = v12Shape(false)
-        ("v12_window_sort", timeOne(mk(base), iters), timeOne(mk(out), iters)) })
+      (q, bindOnce(SparkEntry.queries(q)(spark, base)),
+        bindOnce(SparkEntry.queries(q)(spark, out)))
+    } ++ (if (withSqrtC) Seq(("n3_ann_ivf_sqrtC",
+        bindOnce(ivfSqrt(base, 23)), bindOnce(ivfSqrt(out, sqrtMod(23, factor)))))
+      else Nil) ++ (if (withV12Shapes) Seq(
+      ("v12_bucket_locate", bindOnce(v12Shape(true)(base)), bindOnce(v12Shape(true)(out))),
+      ("v12_window_sort", bindOnce(v12Shape(false)(base)), bindOnce(v12Shape(false)(out))))
     else Nil)) ++ eager.map { q =>
-      val tBase = timeEager(SparkEntry.queries(q)(spark, base), iters)
-      val tBig = timeEager(SparkEntry.queries(q)(spark, out), iters)
-      (s"$q (incl. build)", tBase, tBig)
+      (s"$q (incl. build)", inclBuild(SparkEntry.queries(q)(spark, base)),
+        inclBuild(SparkEntry.queries(q)(spark, out)))
     }
 
     val lines = rows.map { case (q, a, b) =>
-      val exp = math.rint(math.log(b / a) / math.log(factor.toDouble) * 100) / 100
-      f"| `$q` | $a%.2f | $b%.2f | ${b / a}%.1f× | $exp%.2f |"
+      val exp = math.log(b / a) / math.log(factor.toDouble)
+      f"| `$q` | $a%.2f | $b%.2f | ${b / a}%.1fx | $exp%.2f |"
     }
-    val md =
-      s"""# SCALING — measured ${factor}× scale point (round 8)
+    val subset = only.map(_.toSeq.sorted.mkString(","))
+    val env = s"SPARK_GRAFT_SCALE_FACTOR=$factor " +
+      subset.fold("")(q => s"SPARK_GRAFT_SCALE_QUERIES=$q ")
+    val reproduce = s"""Reproduce: `${env}sbt "runMain graft.Scaling $base $out"`."""
+    // ASCII only: sbt echoes a main's stdout in the platform charset,
+    // which turns × or — into '?' under a POSIX locale
+    println(
+      s"""
+         |## ${factor}x scale point - ${subset.getOrElse("every query")}
          |
-         |Deterministic ${factor}× blow-up of sf0.1 `documents`/`embeddings`
-         |(per-replica word suffixes / vector rotations — replica-disjoint
-         |shingle and vector space, duplicate density preserved; see
-         |`graft.Scaling` scaladoc). Timed with the Bench protocol: noop
-         |sink, codegen warm-up at sf0.001, median of $iters, local[$cpus],
-         |CPU calibration probe ${cal}s (idle ≈ 0.19s, degraded bound
-         |${Bench.CalibrationBoundSec}s).
-         |
+         |Deterministic ${factor}x blow-up of `$base` (see the `graft.Scaling`
+         |scaladoc), timed with Bench's helpers: noop sink, codegen warm-up
+         |at sf0.001, median of $iters, local[$cpus], CPU calibration probe
+         |${Bench.millis(cal)}s (idle ~0.19s, degraded bound ${Bench.CalibrationBoundSec}s).
          |exponent = log(t_big / t_base) / log($factor): 1.00 = linear,
-         |1.50 = n^1.5, 2.00 = quadratic.
+         |2.00 = quadratic. `(incl. build)` rows time the DAG build too.
          |
-         || query | sf0.1 (s) | sf1 (s) | ratio | exponent |
+         || query | base (s) | x$factor (s) | ratio | exponent |
          ||---|---|---|---|---|
          |${lines.mkString("\n|")}
          |
-         |`d6_dedup_clusters` builds its cluster map EAGERLY at DAG-build
-         |time (the exact-count-gated union-find over the tiny rep-pair
-         |graph), which the bind-once protocol deliberately excludes from
-         |the timed window — its row times the corpus-sized member-label
-         |join only; the build cost is d2's row (the pair pipeline is the
-         |same) plus a pair-graph pass that is sub-second at both scales.
-         |
-         |`n3_ann_ivf` pins `centroidMod = 23` (oracle stability), so
-         |centroid count grows ∝ n and broadcast assignment does n·C ∝ n²
-         |cosines — expected superlinear. `n3_ann_ivf_sqrtC` is the same
-         |operator with the mod scaled by √factor per its own guidance
-         |(C ≈ √n ⇒ assignment ∝ n^1.5): the exponent difference is the
-         |pinned parameter, not the plan shape.
-         |
-         |Rows marked `(incl. build)` are driver-round operators (BPE
-         |training rounds, PCA/centroid moment collects, PageRank
-         |rounds) whose distributed work runs at DAG-BUILD time — their
-         |timed window starts before the builder, the opposite of d6's
-         |bind-once exclusion. bpe1/bpe3 scale with DISTINCT vocabulary
-         |(replica word-suffixing grows it ∝ factor here — a worst
-         |case; natural corpora grow vocabulary sublinearly), pc1/em1
-         |with corpus rows at fixed d², pr1 with the key-offset replica
-         |purchase graph (nodes and edges both ∝ factor). A flat-or-
-         |negative pr1 exponent is a LAYOUT artifact, not operator
-         |magic: the base orders/lineitem are single parquet files, so
-         |the base-scale edge build is scan-parallelism-bound, while
-         |the blown-up tables are written 32-way — the graph rounds
-         |themselves are far from the bottleneck at either scale.
-         |
-         |Reproduce: `sbt "runMain graft.Scaling /root/testdata/sf0.1 /tmp/graft_sf1"`.
-         |""".stripMargin
-    only match {
-      case None =>
-        Files.writeString(Paths.get("SCALING.md"), md)
-        println(md)
-      case Some(qs) =>
-        // subset run: append a deep-point section under the full table
-        // instead of replacing it
-        val section =
-          s"""
-             |## ${factor}× deep point — ${qs.toSeq.sorted.mkString(", ")}
-             |
-             |Same construction and protocol as above at factor $factor
-             |(median of $iters, calibration probe ${cal}s; subset run —
-             |`SPARK_GRAFT_SCALE_QUERIES=${qs.toSeq.sorted.mkString(",")}`).
-             |
-             || query | sf0.1 (s) | ×$factor (s) | ratio | exponent |
-             ||---|---|---|---|---|
-             |${lines.mkString("\n|")}
-             |
-             |Reproduce: `SPARK_GRAFT_SCALE_FACTOR=$factor SPARK_GRAFT_SCALE_QUERIES=${qs.toSeq.sorted.mkString(",")} sbt "runMain graft.Scaling /root/testdata/sf0.1 /tmp/graft_sf${factor}x"`.
-             |""".stripMargin
-        val existing =
-          if (Files.exists(Paths.get("SCALING.md")))
-            Files.readString(Paths.get("SCALING.md"))
-          else ""
-        Files.writeString(Paths.get("SCALING.md"), existing + section)
-        println(section)
-    }
+         |$reproduce
+         |""".stripMargin)
     spark.stop()
   }
 }

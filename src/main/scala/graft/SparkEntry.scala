@@ -33,6 +33,16 @@ object SparkEntry {
       graft.queries.EventQueries.queries ++
       graft.queries.GovernanceQueries.queries
 
+  /** The queries, sorted by name, whose names start with one of the
+    * comma-separated `prefixes` (every query when None): the key filter
+    * that `Bench`, `Verify` and `PlanDump` take as an argument. */
+  def selected(prefixes: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val ps = prefixes.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => ps.forall(_.exists(n.startsWith)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

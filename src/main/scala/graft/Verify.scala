@@ -1,26 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [prefix,…]
+  *
+  * The optional third argument keeps only the keys with one of the
+  * comma-separated name prefixes (a local iteration aid; the driver
+  * always runs the full set). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated name prefixes to run (local
-    // iteration aid; the driver always runs the full set)
-    val nameFilter: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
-      else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // 32-core host
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.selected(args.lift(2)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -9,8 +9,17 @@ import org.apache.spark.sql.SparkSession
   * apply except master/shuffle-partitions, which come from spark-submit.
   */
 object GraftSession {
+
+  /** `SPARK_GRAFT_CPUS` (default 32), parsed rather than passed through:
+    * a non-numeric value (e.g. "*", valid for a Spark master but not
+    * here) would become an invalid shuffle-partition count and an
+    * invalid number in the bench JSON — fail loudly at startup instead. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(s =>
+    s.toIntOption.filter(_ > 0).getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'")))
+
   def local(
-      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cpus: String = envCpus.toString,
       appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()

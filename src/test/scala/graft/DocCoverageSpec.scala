@@ -7,14 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * in the table (the TPC-H family may be collapsed into its one
   * `q1 … q22 (22 keys)` range row), and the table must not list keys
   * that no longer exist. Also pins the SparkEntry contract itself:
-  * every query has a DuckDB oracle with the same key set.
+  * every query has a DuckDB oracle with the same key set, and keeps the
+  * run instructions honest: every `runMain graft.<Name>` they give
+  * names a class that still has a `main`.
   */
 class DocCoverageSpec extends AnyFunSuite {
 
-  private lazy val sec11: String = {
-    val survey = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SURVEY.md")),
+  private def read(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       java.nio.charset.StandardCharsets.UTF_8)
+
+  private lazy val sec11: String = {
+    val survey = read("SURVEY.md")
     val at = survey.indexOf("## 11.")
     assert(at >= 0, "SURVEY.md has no '## 11.' consolidated coverage section")
     survey.substring(at)
@@ -51,5 +55,25 @@ class DocCoverageSpec extends AnyFunSuite {
       "queries/oracleSql key sets diverge: " +
         s"only-queries=${(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet).toSeq.sorted} " +
         s"only-oracle=${(SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).toSeq.sorted}")
+  }
+
+  test("every runMain in README, the verify skill and the SCALING preface names a live main") {
+    // the SCALING preface ends at its first section; the sections below
+    // it are history and may name retired harnesses
+    val scaling = read("SCALING.md")
+    val docs = Seq("README.md" -> read("README.md"),
+      ".claude/skills/verify/SKILL.md" -> read(".claude/skills/verify/SKILL.md"),
+      "SCALING.md preface" -> scaling.take(scaling.indexOf("\n## ")))
+    val named = docs.flatMap { case (doc, text) =>
+      """(?:Test/)?runMain\s+graft\.(\w+(?:\.\w+)*)""".r.findAllMatchIn(text)
+        .map(m => doc -> m.group(1)).toSeq
+    }
+    assert(Set("Bench", "Scaling").subsetOf(named.map(_._2).toSet),
+      s"no runMain found for Bench and Scaling: $named")
+    val dead = named.filterNot { case (_, name) =>
+      scala.util.Try(Class.forName(s"graft.$name$$")
+        .getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    assert(dead.isEmpty, s"runMain lines naming no main: ${dead.distinct}")
   }
 }
